@@ -77,16 +77,6 @@ def jaccard(a: Column, b: Column) -> Column:
 
 # --- X2a: MinHash + LSH ------------------------------------------------------
 
-# 2^61-1, a Mersenne prime > any 32-bit hash; keeps (a*x+b) mod p well mixed.
-_MERSENNE_P = (1 << 61) - 1
-
-
-def hash_shingles(col: Column) -> Column:
-    """Shingle strings -> 32-bit integer ids (xxhash64 folded). Computed
-    once per row as its own projection so the signature construction
-    doesn't re-hash strings per permutation."""
-    return F.transform(col, lambda s: F.abs(F.xxhash64(s)) % F.lit(1 << 32))
-
 
 def shingle_hashes(col: Column, n: int = 3) -> Column:
     """Distinct hashed word n-grams as array<long in [0,2^32)> — the
@@ -118,27 +108,32 @@ def shingle_hashes(col: Column, n: int = 3) -> Column:
 
 def minhash_signature(hashed: Column, num_hashes: int = 64, seed: int = 42) -> Column:
     """MinHash signature (array<bigint>, length ``num_hashes``) over a
-    pre-hashed shingle-id array (see :func:`hash_shingles`).
+    pre-hashed shingle-id array (see :func:`shingle_hashes`).
 
-    Uses universal hashing h_i(x) = (a_i * x + b_i) mod p — all native
-    expressions (transform, array_min), fully distributed, no UDF, no
-    driver state. Deterministic given ``seed`` so signatures are
-    reproducible across runs/rounds.
+    Permutation i is ``xxhash64(x, seed_i)`` — a full-avalanche 64-bit
+    hash per permutation, so each one's argmin shingle is an
+    independent draw and P[sig_a[i] == sig_b[i]] is the Jaccard
+    similarity. All native expressions (transform, array_min), fully
+    distributed, no UDF, no driver state; deterministic given ``seed``
+    so signatures are reproducible across runs.
 
-    Coefficients stay below 2^30 so a*x (x < 2^32) fits in int64 under
-    ANSI arithmetic — max product 2^62, no overflow.
+    Not an affine family ``(a*x + b) mod (2^61 - 1)``: with ``a`` small
+    enough that ``a*x`` fits a long (``a < 2^30`` for ``x < 2^32``) the
+    product wraps the modulus at most twice, every permutation is nearly
+    monotone in x, most of them pick the same argmin shingle, and
+    near-duplicate recall drops (pinned in test_dedup).
     """
     import random
 
     rng = random.Random(seed)
-    params = [(rng.randrange(1, 1 << 30), rng.randrange(0, 1 << 30)) for _ in range(num_hashes)]
+
+    def permutation_min(s: int) -> Column:
+        # a one-parameter lambda: transform passes the element index as
+        # a second parameter when the lambda declares one
+        return F.array_min(F.transform(hashed, lambda x: F.xxhash64(x, F.lit(s))))
+
     return F.array(
-        *[
-            F.array_min(
-                F.transform(hashed, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(_MERSENNE_P))
-            )
-            for a, b in params
-        ]
+        *[permutation_min(rng.randrange(1 << 31)) for _ in range(num_hashes)]
     )
 
 

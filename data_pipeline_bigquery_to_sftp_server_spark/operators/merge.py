@@ -28,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from data_pipeline_bigquery_to_sftp_server_spark.session import local_frame
 
 
 def upsert_anti_union(target: DataFrame, staging: DataFrame, key: str) -> DataFrame:
@@ -314,16 +317,14 @@ def upsert_partitioned(
     # budget. (A lakehouse table format does this swap transactionally;
     # this is the plain-parquet equivalent.)
     merged = upsert_anti_union(target, staging, key).localCheckpoint(eager=True)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            merged.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(target_path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    # per-write option, not the session conf: the conf is shared by
+    # every thread of the session
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(target_path)
+    )
     return spark.read.parquet(target_path).where(
         F.col(partition_col).isin(touched)
     )
@@ -498,16 +499,11 @@ def upsert_fileskip(
     )
 
     def _write_data() -> None:
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy("_kr").parquet(
-                target_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # a pool thread: the per-write option leaves the session-global
+        # partitionOverwriteMode alone
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("_kr").parquet(target_path)
 
     _run_concurrent(m_collect, _write_data)
     m_publish()
@@ -997,14 +993,13 @@ def _bloom_probe_positions(
     spark: SparkSession, value, dtype, num_bits: int
 ) -> list[int]:
     """The probe value's k bit positions, computed through the SAME
-    JVM xxhash64 the write side used (one 1-row job — all k positions
-    batched into it): Python must not re-implement the hash, it must
-    ASK it. Measured r17 and kept: a LocalRelation/no-FROM spelling
-    still schedules one job for first() but pays extra planning
-    (createDataFrame parallelizes, 4 jobs), so range(1) is the floor
-    short of reimplementing xxhash64 in Python."""
+    JVM xxhash64 the write side used: Python must not re-implement the
+    hash, it must ASK it. The k columns are literals projected over a
+    one-row Arrow-built LocalRelation, which the optimizer folds into a
+    LocalRelation of its own, so ``collect()`` answers on the driver
+    and schedules no job; a ``range(1)`` source would schedule one."""
     row = (
-        spark.range(1)
+        local_frame(spark, [(0,)], "_ int")
         .select(
             *[
                 F.pmod(
@@ -1016,53 +1011,9 @@ def _bloom_probe_positions(
                 for i in range(_BLOOM_HASHES)
             ]
         )
-        .first()
+        .collect()[0]
     )
     return [int(row[f"p{i}"]) for i in range(_BLOOM_HASHES)]
-
-
-def _footer_col_type(spark: SparkSession, gen_dir: str, col: str):
-    """Spark type of ``col`` read off one generation directory's
-    parquet footer — pyarrow driver-side for provably-local paths and
-    an explicit, CONSERVATIVE arrow->Spark type map (r17: the point
-    probe previously paid a full Spark DataSource resolution per
-    directory probed just to learn one column's type). Anything not in
-    the map — timestamps in particular, whose arrow/Spark mapping is
-    config-dependent — falls back to Spark's own schema inference, so
-    the probe literal always hashes exactly as the stored column does.
-    None when the directory lacks ``col``."""
-    local = _local_fs_path(spark, gen_dir)
-    if local is not None:
-        try:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
-
-            from pyspark.sql import types as T
-
-            safe = {
-                pa.int8(): T.ByteType(),
-                pa.int16(): T.ShortType(),
-                pa.int32(): T.IntegerType(),
-                pa.int64(): T.LongType(),
-                pa.float32(): T.FloatType(),
-                pa.float64(): T.DoubleType(),
-                pa.string(): T.StringType(),
-                pa.large_string(): T.StringType(),
-                pa.binary(): T.BinaryType(),
-                pa.large_binary(): T.BinaryType(),
-                pa.date32(): T.DateType(),
-                pa.bool_(): T.BooleanType(),
-            }
-            sch = pads.dataset(local, format="parquet").schema
-            if col not in sch.names:
-                return None
-            t = safe.get(sch.field(col).type)
-            if t is not None:
-                return t
-        except Exception:
-            pass
-    sch = spark.read.parquet(gen_dir).schema
-    return sch[col].dataType if col in sch.names else None
 
 
 def _bloom_hit(bitmap: bytes | bytearray | None, positions: list[int]) -> bool:
@@ -1080,11 +1031,21 @@ def _local_fs_path(spark: SparkSession, path: str) -> str | None:
     with a local ``fs.defaultFS``), else None (r16 advice: a
     scheme-less path on a cluster with a remote defaultFS must not be
     silently resolved against a same-named LOCAL directory by the
-    pyarrow fast paths — route it through Hadoop instead)."""
-    from urllib.parse import urlparse
+    pyarrow fast paths — route it through Hadoop instead).
 
-    u = urlparse(path)
+    A ``file:`` URI is only local-fast when its path means the same to
+    pyarrow as to Hadoop. Hadoop's ``Path`` keeps a ``%XX`` escape
+    literal (``file:///t/a%20b`` names a directory called ``a%20b``,
+    not ``a b``), takes ``?``/``#`` as path characters, and resolves
+    an authority (``file://host/…``) its own way. URIs with any of
+    these take the Hadoop route, so a pyarrow fast path can never
+    write or read a different directory than the Spark path would."""
+    from urllib.parse import urlsplit
+
+    u = urlsplit(path)
     if u.scheme == "file":
+        if u.netloc or any(c in path for c in "%?#"):
+            return None
         return u.path
     if u.scheme != "":
         return None
@@ -1098,6 +1059,94 @@ def _local_fs_path(spark: SparkSession, path: str) -> str | None:
         )
         spark._sg_default_fs = default_fs
     return path if default_fs.startswith("file:") else None
+
+
+# the Spark schema JSON Spark's parquet writer stores in every footer;
+# Spark's own schema inference reads this key back when it is present
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _as_nullable(dt):
+    """``dt`` with every field, element and value nullable — what Spark
+    turns a file source's data schema into when it reads it."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _footer_schema(local_dir: str) -> T.StructType | None:
+    """The data schema of the parquet files directly in ``local_dir``,
+    read off ONE footer with pyarrow: a generation or DV bucket
+    directory is the output of one write, so its files share a schema.
+    An empty StructType when the directory holds no data file (it adds
+    no column, as in Spark's inference); None when the footer carries
+    no Spark schema or cannot be read — the caller then asks Spark."""
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+
+    try:
+        files = sorted(
+            n
+            for n in os.listdir(local_dir)
+            if not n.startswith(("_", "."))
+            and os.path.isfile(os.path.join(local_dir, n))
+        )
+        if not files:
+            return T.StructType([])
+        meta = pq.read_metadata(os.path.join(local_dir, files[0])).metadata
+        raw = (meta or {}).get(_SPARK_ROW_METADATA)
+        if raw is None:
+            return None
+        return _as_nullable(T.StructType.fromJson(json.loads(raw)))
+    except (OSError, ValueError, KeyError):
+        return None
+
+
+def _union_schemas(schemas: list) -> T.StructType | None:
+    """By-name union of data schemas, a column placed where it first
+    appears (Spark's schema merge). None — left to Spark's own
+    inference — when any input is None, two inputs disagree on a
+    column's name case or type, or the result would depend on merge
+    order: Spark merges footers in its file index's order, so the
+    union is only order-free when every schema's columns are a prefix
+    of it (columns only ever appended, as ADD COLUMN does)."""
+    fields: dict[str, T.StructField] = {}
+    for sch in schemas:
+        if sch is None:
+            return None
+        for f in sch.fields:
+            if fields.setdefault(f.name.lower(), f) != f:
+                return None
+    names = list(fields)
+    for sch in schemas:
+        if [f.name.lower() for f in sch.fields] != names[: len(sch.fields)]:
+            return None
+    return T.StructType(list(fields.values())) if fields else None
+
+
+def _partition_schema(spark: SparkSession, data, names) -> T.StructType | None:
+    """``data`` plus the ``<name>=<int>`` directory columns as ``int``
+    — the type Spark's partition discovery gives them — or None when
+    there is no data schema or discovery would not type them int."""
+    if data is None or spark.conf.get(
+        "spark.sql.sources.partitionColumnTypeInference.enabled", "true"
+    ).lower() != "true":
+        return None
+    out = T.StructType(list(data.fields))
+    for n in names:
+        out = out.add(n, T.IntegerType())
+    return out
 
 
 def _read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
@@ -1128,7 +1177,7 @@ def _read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
 
             # pyarrow.dataset ignores "_"-prefixed files (_SUCCESS) by
             # default
-            return spark.createDataFrame(pq.read_table(local))
+            return local_frame(spark, pq.read_table(local))
         except Exception:
             pass
     return spark.read.parquet(d)
@@ -1329,21 +1378,43 @@ def _read_dv(spark: SparkSession, path: str, version: int) -> DataFrame | None:
     the pre-r15 flat form where ``_kr`` is a data column. An empty DV
     state (a partitioned write of zero rows leaves only _SUCCESS) is
     semantically identical to no DV — no entry supersedes anything —
-    and returns None rather than failing schema inference."""
+    and returns None rather than failing schema inference. The read
+    plans from the footers' schema when _dv_schema finds one, else
+    Spark infers it (one job)."""
+    d = f"{path}/_dv/v={version}"
     jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_dv/v={version}")
+    p = jvm.org.apache.hadoop.fs.Path(d)
     if not fs.exists(p):
         return None
     # content = bucket partition directories (_kr=<b>, which DO start
     # with an underscore) or flat data files; _SUCCESS/_committed
     # markers alone mean a zero-entry DV state
-    if not any(
-        st.getPath().getName().startswith("_kr=")
-        or not st.getPath().getName().startswith("_")
-        for st in fs.listStatus(p)
-    ):
+    names = [st.getPath().getName() for st in fs.listStatus(p)]
+    bdirs = sorted(n for n in names if n.startswith("_kr="))
+    flat = any(not n.startswith("_") for n in names)
+    if not bdirs and not flat:
         return None  # zero-entry DV state: nothing is superseded
-    return spark.read.parquet(f"{path}/_dv/v={version}")
+    schema = None if bdirs and flat else _dv_schema(spark, d, bdirs)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(d)
+
+
+def _dv_schema(spark: SparkSession, d: str, bdirs: list[str]):
+    """The schema Spark's inference gives DV state directory ``d``,
+    from footers and without a Spark job: the bucket-partitioned
+    layout's ``_kr=<b>`` directories (carried ones may come from older
+    writes, and Spark reads only one footer, so they must agree
+    exactly) plus ``_kr`` as ``int``; the flat layout's own footer.
+    None — infer instead — off the local filesystem or when a footer
+    lacks Spark's schema."""
+    local = _local_fs_path(spark, d)
+    if local is None:
+        return None
+    if not bdirs:
+        return _footer_schema(local) or None
+    schemas = [_footer_schema(f"{local}/{b}") for b in bdirs]
+    if any(sch != schemas[0] for sch in schemas):
+        return None
+    return _partition_schema(spark, schemas[0] or None, ("_kr",))
 
 
 def _write_dv(dv: DataFrame, path: str, version: int) -> None:
@@ -1466,22 +1537,51 @@ def _gen_dir(path: str, r) -> str:
     return f"{_gen_root(path, r)}/_kr={r._kr}/_gen={r.gen}"
 
 
+def _gen_dirs_schema(
+    spark: SparkSession, root: str, dirs: list[str]
+) -> T.StructType | None:
+    """The schema Spark's mergeSchema inference gives the generation
+    directories ``dirs`` under ``root``, from one footer per directory
+    and without a Spark job: data columns unioned by name in directory
+    order, then ``_kr``/``_gen``. None — infer instead — unless ``root``
+    provably lives on the local filesystem, every footer carries Spark's
+    schema, the footers agree on types and every partition value fits
+    the ``int`` discovery gives it."""
+    local_root = _local_fs_path(spark, root)
+    if local_root is None:
+        return None
+    parts = []
+    for d in dirs:  # d = <root>/_kr=<b>/_gen=<g>, both values >= 0
+        if max(int(seg.split("=")[1]) for seg in d.rsplit("/", 2)[1:]) >= 2**31:
+            return None
+        parts.append(_footer_schema(local_root + d[len(root):]))
+    return _partition_schema(spark, _union_schemas(parts), ("_kr", "_gen"))
+
+
 def _read_gen_dirs(spark: SparkSession, path: str, rows) -> DataFrame:
     """Scan the generation directories of the given manifest rows.
     Rows are grouped by data root so each group keeps a basePath that
     is a true prefix (partition-column recovery needs it); a shallow
     clone's mixed local+external manifest reads as the by-name union
     of its roots, with allowMissingColumns bridging schema evolution
-    that happened on only one side of the clone point."""
+    that happened on only one side of the clone point. Each group
+    plans from its footer-derived schema (_gen_dirs_schema) and falls
+    back to Spark's mergeSchema inference, one job, when there is
+    none."""
     groups: dict[str, list[str]] = {}
     for r in rows:
         groups.setdefault(_gen_root(path, r), []).append(_gen_dir(path, r))
-    parts = [
-        spark.read.option("basePath", root)
-        .option("mergeSchema", "true")
-        .parquet(*sorted(dirs))
-        for root, dirs in sorted(groups.items())
-    ]
+    parts = []
+    for root, dirs in sorted(groups.items()):
+        dirs = sorted(dirs)
+        schema = _gen_dirs_schema(spark, root, dirs)
+        reader = spark.read.option("basePath", root)
+        reader = (
+            reader.option("mergeSchema", "true")
+            if schema is None
+            else reader.schema(schema)
+        )
+        parts.append(reader.parquet(*dirs))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
@@ -2146,13 +2246,18 @@ def read_version_point(
     prune'. The version's deletion vector applies after the scan as in
     read_version. Attaches ``dirs_read``/``dirs_total``.
 
-    Scale: the probe is k=6 JVM xxhash64 calls (one 1-row job — the
-    probe must ask the SAME hash the write side used) plus a
-    driver-side bit test over the collected manifest (bounded:
-    n_buckets x generations rows); at 10 bits/key the bitmaps add
-    ~1.25 bytes per row to the commit log. The probed column's type is
-    taken from the live schema so the literal hashes identically to
-    the stored column."""
+    Scale: planning the lookup schedules no Spark job on a local
+    table. The probe is k=6 JVM xxhash64 calls folded on the driver
+    over a one-row Arrow LocalRelation (the probe must ask the SAME
+    hash the write side used), then a driver-side bit test over the
+    manifest (bounded: n_buckets x generations rows); at 10 bits/key
+    the bitmaps add ~1.25 bytes per row to the commit log. The probed
+    column's type comes from the newest directory's footer schema (the
+    schema Spark's own inference reads) so the literal hashes
+    identically to the stored column, and the scan and the deletion
+    vector plan from footer schemas too (_read_gen_dirs, _read_dv).
+    Only the final collect runs jobs. Off the local filesystem, each
+    schema is inferred by Spark as before."""
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"no manifest versions under {path}")
@@ -2175,10 +2280,16 @@ def read_version_point(
         # generation count.
         dtype = None
         for d in sorted(all_dirs, reverse=True):
-            # no basePath: only the footer's column type is wanted, and
-            # a clone's external directory has no common prefix anyway
-            dtype = _footer_col_type(spark, d, col)
-            if dtype is not None:
+            # the footer's Spark schema where the directory is provably
+            # local; Spark's inference otherwise. No basePath: only the
+            # column's type is wanted, and a clone's external directory
+            # has no common prefix anyway
+            local = _local_fs_path(spark, d)
+            sch = None if local is None else _footer_schema(local)
+            if sch is None:
+                sch = spark.read.parquet(d).schema
+            if col in sch.names:
+                dtype = sch[col].dataType
                 break
         if dtype is None:
             raise ValueError(f"read_version_point: no directory carries {col!r}")
@@ -3157,9 +3268,15 @@ def compact_table(
         # sort inside each task — no global sort, no temp column (the
         # sort expression never lands in the written files). The sort
         # applies to the WRITE only; the manifest aggregate below runs
-        # over the checkpointed frame (order-insensitive min/max).
+        # over the checkpointed frame (order-insensitive min/max). The
+        # sort LEADS with the partitionBy columns (_kr, _gen): a write
+        # partitioned by them requires that ordering, and a sort not
+        # prefixed by it gets a writer sort on top that EliminateSorts
+        # then uses to drop the Morton sort. The same holds for every
+        # sorted partitioned rewrite below.
         to_write = compacted.repartition("_kr").sortWithinPartitions(
             F.col("_kr"),
+            F.col("_gen"),
             zorder_key([F.col(c) for c in zorder_by], bits=int(zorder_bits)),
         )
     point_cols = _point_cols_of(manifest)
@@ -3301,8 +3418,10 @@ def compact_small_generations(
         # restores the z-order inside every rewritten file, so parquet
         # row-group stats stay tight without ever rewriting untouched
         # generations. A narrow per-partition sort over sub-threshold
-        # bytes — no shuffle.
-        fresh.sortWithinPartitions("_kr", key).write.mode(
+        # bytes — no shuffle. ``_gen`` is one value here; it leads the
+        # sort with ``_kr`` so the writer keeps the key order (see
+        # compact_table).
+        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
             "append"
         ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
 
@@ -3413,7 +3532,7 @@ def purge_deletion_vectors(
     # aggregation overlap (r17, guide §2.6).
     def _write_data() -> None:
         _clean_uncommitted_generation(spark, path, debt, v + 1)
-        fresh.sortWithinPartitions("_kr", key).write.mode(
+        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
             "append"
         ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
 
@@ -3521,7 +3640,7 @@ def compact_key_range(
     # aggregation overlap (guide §2.6); _SUCCESS lands last
     def _write_data() -> None:
         _clean_uncommitted_generation(spark, path, hit, v + 1)
-        fresh.sortWithinPartitions("_kr", key).write.mode(
+        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
             "append"
         ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
 
@@ -3788,7 +3907,9 @@ def table_history(
     ALL manifests are read in ONE scan (explicit version-directory
     list under a basePath, yielding the ``v`` partition column) and
     reduced by one grouped aggregate; DV presence is a driver FS
-    probe per version and meta strings come from committed_metas."""
+    probe per version and meta strings come from committed_metas. The
+    result is a driver-built LocalRelation: on a local table the call
+    and its collect schedule no Spark job."""
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"table_history: no table at {path}")
@@ -3862,7 +3983,9 @@ def table_history(
         schema += ", commit_ts_ms bigint"
     if with_parameters:
         schema += ", parameters string"
-    return spark.createDataFrame(rows, schema).orderBy("version")
+    # rows are built in version order, which a LocalRelation keeps: no
+    # sort, and collecting the history schedules no job
+    return local_frame(spark, rows, schema)
 
 
 def restore_version(

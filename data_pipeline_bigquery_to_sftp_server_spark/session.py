@@ -17,7 +17,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -58,6 +59,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, data, schema: T.StructType | str | None = None
+) -> DataFrame:
+    """A driver-sized frame (metadata, a page of ids, one probe row) as
+    an Arrow-built ``LocalRelation``. ``data`` is a ``pyarrow.Table``,
+    or a list of row tuples laid out by ``schema`` (a StructType or a
+    DDL string; it also types an Arrow table's columns when given).
+
+    Spark plans such a frame on the driver: collecting it, or a
+    projection Spark folds into it, schedules no job, and the optimizer
+    sees its true size. ``createDataFrame(list)`` instead parallelizes
+    an RDD, and every consumer of it pays scheduled jobs — three for a
+    sorted two-row history. Keep the rows in the order callers should
+    see: a LocalRelation keeps it, so no sort is needed."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        arrow_schema = to_arrow_schema(schema)
+        cols = list(zip(*data)) if data else [()] * len(arrow_schema)
+        data = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    return spark.createDataFrame(data, schema)
 
 
 def cluster_defaults(

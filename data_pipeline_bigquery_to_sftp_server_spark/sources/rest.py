@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from data_pipeline_bigquery_to_sftp_server_spark.session import local_frame
+
 PageFetcher = Callable[[int, int], list[dict]]
 DetailFetcher = Callable[[str], dict | None]
 
@@ -55,7 +57,8 @@ def scan_pages(
         if len(records) < per_page:
             break
         page += 1
-    return spark.createDataFrame([(i,) for i in ids], f"{id_field} string")
+    # driver-sized: an Arrow-built LocalRelation, not a parallelized RDD
+    return local_frame(spark, [(i,) for i in ids], f"{id_field} string")
 
 
 def fetch_details(

@@ -4770,3 +4770,383 @@ def test_carry_dv_except_matches_spark_filter(spark, tmp_path):
     # an empty frame: _read_dv returns None either way)
     merge._carry_dv_except(spark, path, got, 1, 3, [0, 2, 3])
     assert merge._read_dv(spark, path, 3) is None
+
+
+# --- read planning from parquet footers ------------------------------------
+
+
+def _next_job(spark) -> int:
+    """The DAGScheduler's job-id counter: the id the NEXT job takes."""
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def _assert_footer_schemas_match(spark, path, version=None):
+    """Every schema the read path derives from footers for ``version``
+    equals the one Spark's own inference gives the same directories —
+    field order, types and nested nullability included — and the
+    footer path is actually taken (a schema, not None)."""
+    import os
+
+    versions = merge._list_versions(spark, f"{path}/_manifest")
+    v = versions[-1] if version is None else version
+    groups = {}
+    for r in merge._read_manifest(spark, path, v).collect():
+        groups.setdefault(merge._gen_root(path, r), []).append(
+            merge._gen_dir(path, r)
+        )
+    for root, dirs in groups.items():
+        dirs = sorted(dirs)
+        fast = merge._gen_dirs_schema(spark, root, dirs)
+        inferred = (
+            spark.read.option("basePath", root)
+            .option("mergeSchema", "true")
+            .parquet(*dirs)
+            .schema
+        )
+        assert fast is not None, root
+        assert fast.jsonValue() == inferred.jsonValue(), root
+    d = f"{path}/_dv/v={v}"
+    n_dv = 0
+    if os.path.isdir(d):
+        bdirs = sorted(n for n in os.listdir(d) if n.startswith("_kr="))
+        fast = merge._dv_schema(spark, d, bdirs)
+        assert fast is not None
+        assert fast.jsonValue() == spark.read.parquet(d).schema.jsonValue()
+        n_dv = 1
+    return len(groups), n_dv
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_footer_schema_equals_spark_inference(spark, tmp_path, monkeypatch):
+    """The footer-derived read schemas equal Spark's inferred ones on
+    every layout the read path meets: a plain table with nested
+    columns, ADD COLUMN, column-mapping RENAME + DROP (newer
+    generations then lack a retired physical column), a shallow
+    clone's external generations, a bucket-partitioned DV and a
+    pre-r15 flat DV. Reads through the footer schemas return the same
+    schema and rows as reads through Spark's inference."""
+    plain = str(tmp_path / "plain")
+    merge.versioned_layout_write(
+        spark.range(40).selectExpr(
+            "id AS k",
+            "id * 2 AS v",
+            "array(id, id + 1) AS arr",
+            "named_struct('a', id, 'b', cast(id AS string)) AS st",
+            "map('x', id) AS m",
+        ),
+        "k", plain, 4,
+    )
+    assert _assert_footer_schemas_match(spark, plain) == (1, 0)
+    # partitioned DV + an ADD COLUMN whose values land in a new generation
+    merge.upsert_versioned_dv(
+        spark, plain,
+        spark.range(3, 6).selectExpr(
+            "id AS k", "id * 7 AS v", "array(id) AS arr",
+            "named_struct('a', id, 'b', 'u') AS st", "map('y', id) AS m",
+        ),
+        "k",
+    )
+    assert _assert_footer_schemas_match(spark, plain) == (1, 1)
+    merge.add_column(spark, plain, "note", "string")
+    merge.upsert_versioned_dv(
+        spark, plain,
+        spark.range(30, 42).selectExpr(
+            "id AS k", "id AS v", "array(id) AS arr",
+            "named_struct('a', id, 'b', 'n') AS st", "map('z', id) AS m",
+            "'hello' AS note",
+        ),
+        "k",
+    )
+    assert _assert_footer_schemas_match(spark, plain) == (1, 1)
+
+    mapped = str(tmp_path / "mapped")
+    merge.versioned_layout_write(
+        spark.createDataFrame(
+            [(i, i * 10, f"s{i}") for i in range(1, 21)],
+            "k long, v long, s string",
+        ),
+        "k", mapped, n_buckets=2,
+    )
+    merge.rename_column(spark, mapped, "v", "amount")
+    merge.drop_column(spark, mapped, "s")
+    merge.upsert_versioned_dv(
+        spark, mapped,
+        spark.createDataFrame([(3, 333), (25, 1)], "k long, amount long"),
+        "k",
+    )
+    _assert_footer_schemas_match(spark, mapped)
+
+    clone = str(tmp_path / "clone")
+    merge.clone_table(spark, plain, clone)
+    merge.upsert_versioned_dv(
+        spark, clone,
+        spark.range(1, 3).selectExpr(
+            "id AS k", "id AS v", "array(id) AS arr",
+            "named_struct('a', id, 'b', 'c') AS st", "map('c', id) AS m",
+            "'c' AS note",
+        ),
+        "k",
+    )
+    assert _assert_footer_schemas_match(spark, clone)[0] == 2  # ext + own
+
+    flat = str(tmp_path / "flat")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(1, 41)], "k long, v long"),
+        "k", flat, n_buckets=4,
+    )
+    merge.upsert_versioned_dv(
+        spark, flat, spark.createDataFrame([(1, 0), (25, 0)], "k long, v long"), "k"
+    )
+    # rewrite the DV into the pre-r15 flat layout (_kr a data column)
+    dv = spark.read.parquet(f"{flat}/_dv/v=1").select("_kr", "k", "live_gen")
+    tmp = str(tmp_path / "flat_dv")
+    spark.createDataFrame(dv.collect(), dv.schema).coalesce(1).write.parquet(tmp)
+    import shutil
+
+    shutil.rmtree(f"{flat}/_dv/v=1")
+    shutil.copytree(tmp, f"{flat}/_dv/v=1")
+    assert _assert_footer_schemas_match(spark, flat) == (1, 1)
+
+    tables = (plain, mapped, clone, flat)
+    fast = [merge.read_version(spark, p) for p in tables]
+    monkeypatch.setattr(merge, "_footer_schema", lambda d: None)
+    for p, f in zip(tables, fast):
+        inferred = merge.read_version(spark, p)
+        assert f.schema == inferred.schema, p
+        assert _rows(f) == _rows(inferred), p
+
+
+def test_point_read_and_history_plan_without_jobs(spark, tmp_path):
+    """On a local table, building a Bloom point read — manifest,
+    column type, the k probe hashes, the generation scan and the
+    deletion vector — schedules no Spark job; only collecting it does.
+    table_history and its collect schedule none at all."""
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame(
+            [(i, f"u{i}", i * 10) for i in range(200)],
+            "k long, uid string, v long",
+        ),
+        "k", path, n_buckets=4, point_cols=("uid",), bloom_bits=1 << 12,
+    )
+    merge.upsert_versioned_dv(
+        spark, path,
+        spark.createDataFrame([(7, "u7", 777), (300, "u300", 3)],
+                              "k long, uid string, v long"),
+        "k",
+    )
+    j0 = _next_job(spark)
+    hit = merge.read_version_point(spark, path, "uid", "u7")
+    miss = merge.read_version_point(spark, path, "uid", "nope")
+    assert _next_job(spark) == j0
+    assert [tuple(r) for r in hit.select("k", "uid", "v").collect()] == [
+        (7, "u7", 777)
+    ]
+    assert miss.collect() == []
+    assert hit.dirs_read < hit.dirs_total
+    j0 = _next_job(spark)
+    hist = merge.table_history(spark, path).collect()
+    assert _next_job(spark) == j0
+    assert [(h.version, h.operation, h.has_dv) for h in hist] == [
+        (0, "WRITE", False), (1, "MERGE", True)
+    ]
+
+
+def test_footer_fast_path_falls_back_to_inference(spark, tmp_path):
+    """The footer path is taken only when it provably gives Spark's
+    answer. A non-local path, footers whose union Spark would order
+    differently or could not merge, and a footer without Spark's
+    schema key (a file another writer produced) all fall back to
+    Spark's own inference — a scheduled job — and read the same
+    rows."""
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    assert merge._gen_dirs_schema(
+        spark, "hdfs://nn:8020/t/data", ["hdfs://nn:8020/t/data/_kr=0/_gen=0"]
+    ) is None
+    assert merge._dv_schema(spark, "hdfs://nn:8020/t/_dv/v=1", ["_kr=0"]) is None
+    # unions Spark would order by its file index, or could not merge
+    sch = T.StructType.fromDDL
+    assert merge._union_schemas(
+        [sch("k long, v long"), sch("k long, v long, tag string")]
+    ) == sch("k long, v long, tag string")
+    assert merge._union_schemas(
+        [sch("k long, v long, s string"), sch("k long, v long, note string")]
+    ) is None
+    assert merge._union_schemas([sch("k long, v long"), sch("k long, v int")]) is None
+    assert merge._union_schemas([sch("k long, v long"), sch("k long, V long")]) is None
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(40)], "k long, v long"),
+        "k", path, n_buckets=2, point_cols=("v",), bloom_bits=1 << 10,
+    )
+    want = _rows(merge.read_version(spark, path))
+    d = f"{path}/data/_kr=0/_gen=0"
+    for f in os.listdir(d):
+        if f.endswith(".parquet"):
+            t = pq.read_table(os.path.join(d, f))
+            pq.write_table(t.replace_schema_metadata(None), os.path.join(d, f))
+            os.remove(os.path.join(d, f".{f}.crc"))
+    assert merge._footer_schema(d) is None
+    rows = merge._read_manifest(spark, path, 0).collect()
+    assert merge._gen_dirs_schema(
+        spark, f"{path}/data", sorted(merge._gen_dir(path, r) for r in rows)
+    ) is None
+    j0 = _next_job(spark)
+    out = merge.read_version(spark, path)
+    assert _next_job(spark) > j0  # schema inference ran
+    assert _rows(out) == want
+    assert [tuple(r) for r in merge.read_version_point(
+        spark, path, "v", 30).select("k", "v").collect()] == [(3, 30)]
+
+
+def test_local_fs_path_keeps_escaped_file_uris_on_hadoop(spark, tmp_path):
+    """A ``file:`` URI whose path holds a ``%XX`` escape (or ``?``,
+    ``#``, or an authority) is not given to the pyarrow fast paths:
+    Hadoop's Path keeps the escape literal, so decoding it would send
+    the driver-side manifest write to a different directory than the
+    Hadoop reader lists. A versioned table under such a URI commits,
+    reads, point-reads and lists its history consistently, all in the
+    directory Hadoop resolves."""
+    import os
+
+    base = tmp_path / "a b"
+    base.mkdir()
+    uri = base.as_uri() + "/t"  # file:///.../a%20b/t
+    assert "%20" in uri
+    assert merge._local_fs_path(spark, uri) is None
+    assert merge._local_fs_path(spark, "file://host/x/t") is None
+    assert merge._local_fs_path(spark, "file:///x/a#b") is None
+    assert merge._local_fs_path(spark, "file:///x/t") == "/x/t"
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(20)], "k long, v long"),
+        "k", uri, n_buckets=2, point_cols=("v",), bloom_bits=1 << 10,
+    )
+    merge.upsert_versioned_dv(
+        spark, uri, spark.createDataFrame([(3, 333)], "k long, v long"), "k"
+    )
+    assert merge._list_versions(spark, f"{uri}/_manifest") == [0, 1]
+    got = {r.k: r.v for r in merge.read_version(spark, uri).collect()}
+    assert got == {**{i: i * 10 for i in range(20)}, 3: 333}
+    assert [tuple(r) for r in merge.read_version_point(
+        spark, uri, "v", 333).select("k", "v").collect()] == [(3, 333)]
+    assert [h.version for h in merge.table_history(spark, uri).collect()] == [0, 1]
+    # Hadoop resolved the escape literally: nothing landed under "a b"
+    assert os.listdir(base) == []
+    assert os.path.isdir(tmp_path / "a%20b" / "t" / "_manifest" / "v=1")
+
+
+def test_session_overwrite_mode_untouched_by_partitioned_upserts(spark, tmp_path):
+    """upsert_partitioned and upsert_fileskip overwrite only the
+    partitions they rewrite through a per-write option; the
+    session-global partitionOverwriteMode (shared by every thread of
+    the session) keeps its value."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "static")
+        target = str(tmp_path / "p")
+        spark.createDataFrame(
+            [(1, "a", 0), (2, "b", 1)], "id int, name string, part int"
+        ).write.partitionBy("part").parquet(target)
+        merge.upsert_partitioned(
+            spark, target,
+            spark.createDataFrame([(1, "A", 0)], "id int, name string, part int"),
+            "id", "part",
+        )
+        assert spark.conf.get(key) == "static"
+        got = {r.id: r.name for r in spark.read.parquet(target).collect()}
+        assert got == {1: "A", 2: "b"}  # partition 1 was not overwritten
+        ranged = str(tmp_path / "r")
+        merge.range_layout_write(
+            spark.range(40).selectExpr("id AS k", "id * 10 AS v"),
+            "k", ranged, n_buckets=4,
+        )
+        out = merge.upsert_fileskip(
+            spark, ranged,
+            spark.createDataFrame([(5, 1)], "k long, v long"), "k",
+        )
+        assert spark.conf.get(key) == "static"
+        assert len(out.touched_buckets) == 1
+        got = {r.k: r.v for r in spark.read.parquet(ranged).collect()}
+        assert got == {**{i: i * 10 for i in range(40)}, 5: 1}
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _file_rows(d, cols):
+    """Rows of every parquet file in ``d``, per file, in stored order."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    return [
+        list(zip(*[pq.read_table(os.path.join(d, f), columns=cols).column(c)
+                   .to_pylist() for c in cols]))
+        for f in sorted(os.listdir(d))
+        if f.endswith(".parquet")
+    ]
+
+
+def test_reorg_purge_and_key_range_compaction_sort_files_by_key(spark, tmp_path):
+    """REORG PURGE and compact_key_range rewrite each bucket sorted by
+    the table key inside every file. Their sort leads with the
+    partition columns (_kr, _gen), so the partitioned writer keeps it
+    instead of replacing it with its own (_kr, _gen) sort. Scan
+    splitting is set to pack every small file into one task, so a
+    written file holds rows of several generations in scan order, as
+    on a table of many small files."""
+    import os
+
+    split = {
+        "spark.sql.files.openCostInBytes": "1",
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    prev = {k: spark.conf.get(k, None) for k in split}
+    try:
+        for k, val in split.items():
+            spark.conf.set(k, val)
+        for op in ("purge", "range"):
+            path = str(tmp_path / op)
+            merge.versioned_layout_write(
+                spark.createDataFrame(
+                    [(i, i * 10) for i in range(1, 41)], "k long, v long"
+                ),
+                "k", path, n_buckets=4,
+            )
+            # new low keys arrive in a later generation: a scan yields
+            # them AFTER the bucket's base rows
+            merge.upsert_versioned_dv(
+                spark, path,
+                spark.createDataFrame([(1, 111), (2, 222)], "k long, v long"),
+                "k",
+            )
+            if op == "purge":
+                v = merge.purge_deletion_vectors(spark, path, "k").version
+            else:
+                v = merge.compact_key_range(spark, path, "k", 1, 5).version
+            files = [
+                rows
+                for b in sorted(os.listdir(f"{path}/data"))
+                if os.path.isdir(f"{path}/data/{b}/_gen={v}")
+                for rows in _file_rows(f"{path}/data/{b}/_gen={v}", ["k"])
+            ]
+            assert any(len(rows) > 2 for rows in files), op
+            for rows in files:
+                ks = [r[0] for r in rows]
+                assert ks == sorted(ks), (op, ks)
+            assert {r.k for r in merge.read_version(spark, path).collect()} == set(
+                range(1, 41)
+            )
+    finally:
+        for k, val in prev.items():
+            if val is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, val)

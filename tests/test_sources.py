@@ -29,6 +29,24 @@ def test_scan_pages_respects_cap(spark):
     assert calls == [1, 2, 3]
 
 
+def test_scan_pages_builds_a_local_frame_without_jobs(spark):
+    """The id list is driver-sized: scan_pages returns an Arrow-built
+    LocalRelation, so neither the call nor collecting it schedules a
+    Spark job (read off the DAGScheduler's job-id counter), and the
+    ids keep their page order. An empty first page still types the
+    column."""
+    pages = {p: [{"_id": f"p{p}-{i}"} for i in range(4)] for p in (1, 2)}
+    next_job = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    j0 = int(next_job())
+    ids = rest.scan_pages(spark, lambda p, n: pages.get(p, []), per_page=4)
+    got = [r._id for r in ids.collect()]
+    assert int(next_job()) == j0
+    assert got == [f"p{p}-{i}" for p in (1, 2) for i in range(4)]
+    empty = rest.scan_pages(spark, lambda p, n: [], id_field="tid")
+    assert empty.schema.simpleString() == "struct<tid:string>"
+    assert empty.collect() == []
+
+
 def test_fetch_details_distributed_with_failures(spark):
     schema = T.StructType(
         [

@@ -495,6 +495,29 @@ def test_optimize_zorder_by_statement(spark, tmp_path):
     } == before
     man = spark.read.parquet(f"{path}/_manifest/v={max(ops)}")
     assert {"min_d1", "max_d1", "min_d2", "max_d2"} <= set(man.columns)
+    # every rewritten file is in Morton order of (d1, d2): bit b of
+    # dimension i at position b * 2 + i, the layout.zorder_key layout
+    import os
+
+    import pyarrow.parquet as pq
+
+    def morton(d1, d2):
+        return sum(
+            ((x >> b) & 1) << (b * 2 + i)
+            for i, x in enumerate((d1, d2))
+            for b in range(5)
+        )
+
+    n_files = 0
+    for b in os.listdir(f"{path}/data"):
+        d = f"{path}/data/{b}/_gen={max(ops)}"
+        for f in os.listdir(d) if os.path.isdir(d) else []:
+            if f.endswith(".parquet"):
+                t = pq.read_table(os.path.join(d, f), columns=["d1", "d2"])
+                zs = [morton(*r) for r in zip(*(c.to_pylist() for c in t.columns))]
+                assert zs == sorted(zs), (b, f)
+                n_files += 1
+    assert n_files
     # pruning evidence on a promoted dimension
     pruned = merge.read_version_pruned(spark, path, "d1", 0, 1)
     assert pruned.dirs_read < pruned.dirs_total
