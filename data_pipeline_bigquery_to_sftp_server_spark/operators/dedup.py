@@ -20,6 +20,20 @@ from pyspark.sql import functions as F
 
 from data_pipeline_bigquery_to_sftp_server_spark.operators.scale import ensure_parallelism
 
+
+def _materialized(df: DataFrame) -> DataFrame:
+    """``df`` persisted (tracked: ``cache.clear_operator_caches``
+    releases it) and computed now by one no-op-sink write, so every
+    later consumer reads the cached blocks. A lazy persist only
+    fills on first use, and AQE submits independent shuffle stages at
+    once: each of them computes ``df`` afresh before any block lands."""
+    from data_pipeline_bigquery_to_sftp_server_spark.cache import persist_tracked
+
+    df = persist_tracked(df)
+    df.write.format("noop").mode("overwrite").save()
+    return df
+
+
 # --- X1: exact dedup ---------------------------------------------------------
 
 
@@ -157,6 +171,13 @@ def minhash_lsh_pairs(
     size so buckets stay small; (2) the verify join carries candidate
     pairs only. Never materializes the O(n^2) pair space.
 
+    The call runs one materializing job (two when a narrow input is
+    widened first): the per-document signature base (hashed shingles +
+    ``num_hashes`` MinHash values) is persisted and computed once before
+    the pair query is built, so both sides of the band self-join read it
+    from the cache instead of each recomputing the signatures.
+    ``cache.clear_operator_caches`` releases it.
+
     ``max_bucket_rows`` is the pathological-corpus guard (a boilerplate
     band shared by f docs contributes f²/2 candidates from ONE bucket —
     quadratic in the hot key, exactly what AQE skew-splitting cannot
@@ -179,8 +200,9 @@ def minhash_lsh_pairs(
     rows_per_band = num_hashes // bands
     # Shingle -> hash ids once; the pair join and the Jaccard verify both
     # run on compact long arrays, never re-shuffling shingle strings.
-    # Signature construction is compute-bound -> widen narrow scans.
-    base = (
+    # Signature construction is compute-bound -> widen narrow scans, and
+    # compute it once: both sides of the band self-join read the cache.
+    base = _materialized(
         ensure_parallelism(df)
         .select(F.col(id_col).alias("_id"), shingle_hashes(F.col(text_col), ngram).alias("_hs"))
         .withColumn("_n", F.size("_hs"))
@@ -462,10 +484,14 @@ def jaccard_pairs_complete(
       candidates before the verify join;
     - shingle arrays travel to the verify join keyed by doc id (once
       per doc), not attached to each candidate pair.
+
+    The call runs one materializing job (two when a narrow input is
+    widened first): the shingle base is persisted and computed once
+    before the pair query is built, so the df-count pass and both
+    verify sides read it from the cache — AQE submits those stages at
+    once, and over a lazy persist each would shingle the input afresh.
     """
-    # persist(): three consumers (df-count pass + both verify sides) would
-    # otherwise each re-run the shingling projection over the full input.
-    # Lazy MEMORY_AND_DISK persist is cluster-safe — lineage is intact, a
+    # MEMORY_AND_DISK persist is cluster-safe — lineage is intact, a
     # lost block just recomputes its partition.
     #
     # Lifecycle: the persist is tracked in the session cache registry
@@ -473,9 +499,7 @@ def jaccard_pairs_complete(
     # materialize the result anyway should prefer
     # ``jaccard_pairs_complete_materialized``, which releases the
     # shingle cache as soon as the (small) pair set is computed.
-    from data_pipeline_bigquery_to_sftp_server_spark.cache import persist_tracked
-
-    base = persist_tracked(_shingle_base(df, id_col, text_col, ngram))
+    base = _materialized(_shingle_base(df, id_col, text_col, ngram))
     return _complete_pairs_from_base(base, threshold)
 
 
@@ -558,12 +582,12 @@ def jaccard_pairs_complete_materialized(
 
     Use when the pair set will be consumed more than once — clustering,
     reporting, the curation composite — or repeatedly in one session:
-    the shingle arrays never outlive the single materialization job.
+    the shingle arrays never outlive the call.
     Caller owns ``result.unpersist()`` when done with the pairs.
     """
-    base = _shingle_base(df, id_col, text_col, ngram).persist()
+    base = _materialized(_shingle_base(df, id_col, text_col, ngram))
     pairs = _complete_pairs_from_base(base, threshold).persist()
-    pairs.count()  # one job: pairs materialize through the cached base
+    pairs.count()  # pairs materialize through the cached base
     base.unpersist()
     return pairs
 
@@ -837,7 +861,9 @@ def connected_components(
     ``max_iter``). Rounds needed = graph diameter — near-dup clusters
     are shallow (duplicates of duplicates), so this converges in a
     handful of rounds where a generic graph might need log-n
-    star-contraction.
+    star-contraction. A pair with a NULL endpoint links nothing: its
+    non-NULL endpoint keeps its own component and NULL is returned as
+    one node labeled NULL. A self-pair is a node on its own.
 
     ``general=True`` is the documented swap for graphs whose diameter
     ISN'T bounded (long chains — the serially-correlated-key pathology
@@ -846,16 +872,23 @@ def connected_components(
     rounds on any shape and returns the identical contract (pinned
     equal on fixtures in test_dedup).
 
-    Scale: each round is one shuffle of (edge endpoint, label) — the
-    label frontier never exceeds |edges| + |nodes| rows and carries two
-    longs per row. ``localCheckpoint`` truncates the lineage each round
-    so the plan doesn't grow with iteration count (the classic
-    iterative-algorithm trap on Spark). Convergence is detected from
-    the label-sum: labels only ever decrease, so an unchanged sum means
-    a fixpoint. The sum rides the checkpoint materialization as an
-    ``Observation`` — each round costs exactly ONE job (propagate-join
-    + checkpoint), no separate counting pass — and the driver sees a
-    single number, never data.
+    Plan: ONE scan of ``pairs`` builds the symmetric edge set plus a
+    self-loop per endpoint (one explode of four structs, a distinct,
+    one checkpoint), so every node's closed neighbourhood is its edge
+    list. The first labels come from the edges alone (min neighbour
+    id); each later round is one join of the labels to the edges on
+    ``b = node`` and one ``min(component)`` per ``a`` — the frontier
+    never exceeds |edges| rows of two longs. ``localCheckpoint``
+    truncates the lineage each round so the plan doesn't grow with
+    iteration count (the classic iterative-algorithm trap on Spark).
+    Convergence is detected from the label-sum: labels only ever
+    decrease, so an unchanged sum means a fixpoint. The sum rides the
+    checkpoint materialization as an ``Observation`` — no separate
+    counting pass, and the driver sees a single number, never data.
+    Under AQE every exchange is its own job, so a round costs one job
+    per shuffle stage plus the checkpoint (five when AQE turns the
+    label join into a broadcast), and a call costs the edge build plus
+    diameter + 1 rounds.
 
     ``checkpoint_dir`` selects the fault-tolerance mode. Default
     (None) uses ``localCheckpoint`` — fastest, but executor-local: on
@@ -925,48 +958,33 @@ def connected_components(
         return df.localCheckpoint(eager=True)
 
     try:
-        edges = _ckpt(
-            pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .unionByName(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-            .distinct()
+        u, v = F.col(src), F.col(dst)
+        both = u.isNotNull() & v.isNotNull()
+        # ONE scan of pairs: each pair emits both directions plus a
+        # self-loop per endpoint, so a round's neighbourhood min covers
+        # the node's own label with no second join. A pair with a NULL
+        # endpoint emits only the loops (its cross entries are NULL
+        # structs, i.e. (NULL, NULL) rows), so NULL links no node.
+        directed = F.explode(
+            F.array(
+                F.when(both, F.struct(u.alias("a"), v.alias("b"))),
+                F.when(both, F.struct(v.alias("a"), u.alias("b"))),
+                F.struct(u.alias("a"), u.alias("b")),
+                F.struct(v.alias("a"), v.alias("b")),
+            )
         )
-        raw_edge_dirs = _rdd_dirs() if scoped_dir else set()
-        # Size the iteration to the graph, not the session default: each
-        # round is a fixed number of jobs, so on a small/medium graph the
-        # per-task overhead of wide stages dominates. ~250k edges per
-        # partition keeps tasks meaty; large graphs keep full parallelism.
-        n_edges = edges.count()
-        parts = max(2, min(spark.sparkContext.defaultParallelism, n_edges // 250_000 + 2))
-        edges = _ckpt(edges.repartition(parts, "b"))
-        protected: set[str] = set()
-        if scoped_dir:
-            # The repartitioned edges checkpoint is materialized; the raw
-            # union's files are dead weight from here on.
-            protected = _rdd_dirs() - raw_edge_dirs
-            _delete(raw_edge_dirs)
-        labels = _ckpt(
-            edges.select(F.col("a").alias("node"))
-            .distinct()
-            .select("node", F.col("node").alias("component"))
-        )
-        last_label_dirs = (_rdd_dirs() - protected) if scoped_dir else set()
+        edges = _ckpt(pairs.select(directed.alias("e")).select("e.a", "e.b").distinct())
+        protected = _rdd_dirs() if scoped_dir else set()
+        last_label_dirs: set[str] = set()
+        # Round 0 from the edges alone: identity labels make the first
+        # neighbourhood min the smallest neighbour id.
+        step = edges.groupBy("a").agg(F.min("b").alias("component"))
         label_sum = None
         converged = False
         for i in range(max_iter):
-            neighbor_min = (
-                edges.join(labels, edges.b == labels.node)
-                .groupBy("a")
-                .agg(F.min("component").alias("nbr_component"))
-            )
             obs = Observation(f"cc_sum_{i}")
             labels = _ckpt(
-                labels.join(neighbor_min, labels.node == neighbor_min.a, "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("component"), F.coalesce(F.col("nbr_component"), F.col("component"))
-                    ).alias("component"),
-                )
+                step.select(F.col("a").alias("node"), "component")
                 # decimal(38,0) sum: overflow-proof at any node count / id range.
                 .observe(obs, F.sum(F.col("component").cast("decimal(38,0)")).alias("s"))
             )
@@ -974,8 +992,7 @@ def connected_components(
                 # Round i is durably materialized: round i-1's label files
                 # are no longer reachable from any live plan — drop them so
                 # reliable-mode storage stays O(one round), not O(rounds).
-                now = _rdd_dirs()
-                new_dirs = now - protected - last_label_dirs
+                new_dirs = _rdd_dirs() - protected - last_label_dirs
                 _delete(last_label_dirs)
                 last_label_dirs = new_dirs
             new_sum = obs.get["s"]
@@ -983,6 +1000,12 @@ def connected_components(
                 converged = True
                 break
             label_sum = new_sum
+            # null-safe: the (NULL, NULL) loop keeps a NULL node labelled
+            step = (
+                edges.join(labels, F.col("b").eqNullSafe(F.col("node")))
+                .groupBy("a")
+                .agg(F.min("component").alias("component"))
+            )
         if not converged:
             raise RuntimeError(
                 f"connected_components did not converge within max_iter={max_iter} "

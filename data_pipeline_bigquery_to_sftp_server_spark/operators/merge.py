@@ -3532,9 +3532,13 @@ def purge_deletion_vectors(
     # aggregation overlap (r17, guide §2.6).
     def _write_data() -> None:
         _clean_uncommitted_generation(spark, path, debt, v + 1)
-        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
+        # one task per bucket (as compact_table): unshuffled, every
+        # scan task would write its own file into each bucket
+        fresh.repartition("_kr").sortWithinPartitions(
+            "_kr", "_gen", key
+        ).write.mode("append").partitionBy("_kr", "_gen").parquet(
+            f"{path}/data"
+        )
 
     m_collect, m_publish = _manifest_writer(
         spark, new_manifest, f"{path}/_manifest/v={v + 1}"
@@ -3640,9 +3644,13 @@ def compact_key_range(
     # aggregation overlap (guide §2.6); _SUCCESS lands last
     def _write_data() -> None:
         _clean_uncommitted_generation(spark, path, hit, v + 1)
-        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
+        # one task per bucket (as compact_table): unshuffled, every
+        # scan task would write its own file into each bucket
+        fresh.repartition("_kr").sortWithinPartitions(
+            "_kr", "_gen", key
+        ).write.mode("append").partitionBy("_kr", "_gen").parquet(
+            f"{path}/data"
+        )
 
     def _carry_dv() -> None:
         if dv is not None:

@@ -51,14 +51,15 @@ def estimate_scan_partitions(df: DataFrame, target: int) -> int:
     bound (n_files × openCost / maxPartitionBytes ≥ target) already
     proves the scan wide, which is the many-files 100 TB case.
 
-    Returns 0 for non-file-backed plans (in-memory frames).
+    Plans with no input files report their widest in-memory leaf (see
+    :func:`_in_memory_width`), 0 when they have none.
     """
     try:
         files = df.inputFiles()
     except Exception:  # non-file-backed plan
-        return 0
+        files = []
     if not files:
-        return 0
+        return _in_memory_width(df)
     spark = df.sparkSession
     open_cost = _size_conf(spark, "spark.sql.files.openCostInBytes", "4194304")
     max_part = max(
@@ -84,6 +85,33 @@ def estimate_scan_partitions(df: DataFrame, target: int) -> int:
     return max(1, math.ceil(total / max_split))
 
 
+def _in_memory_width(df: DataFrame) -> int:
+    """Partition count of the widest in-memory leaf of ``df``'s analyzed
+    plan, read without a job: a ``LogicalRDD`` (``createDataFrame`` of
+    a list or an RDD, a checkpoint) reports its RDD's partitions; a
+    ``LocalRelation`` (``createDataFrame`` of pandas or Arrow) reports
+    ``min(rows, leafNodeDefaultParallelism)``, the split
+    ``LocalTableScanExec`` builds. Any other leaf (``range``, a
+    generator) reports 0."""
+    spark = df.sparkSession
+    leaf_parallelism = int(
+        spark.conf.get(
+            "spark.sql.leafNodeDefaultParallelism",
+            str(spark.sparkContext.defaultParallelism),
+        )
+    )
+    widest = 0
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        name = leaf.nodeName()
+        if name == "LogicalRDD":
+            widest = max(widest, leaf.rdd().getNumPartitions())
+        elif name == "LocalRelation":
+            widest = max(widest, min(leaf.data().size(), leaf_parallelism))
+    return widest
+
+
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` up to ``min_partitions`` (default:
     ``sparkContext.defaultParallelism``) iff its scan would build fewer
@@ -95,12 +123,13 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     scoring) — callers on pure-IO paths should not use this.
 
     Width is probed from the analyzed plan only (file index + FS stats,
-    see :func:`estimate_scan_partitions`) — no Spark job, no RDD
+    or the in-memory leaf's own partitioning, see
+    :func:`estimate_scan_partitions`) — no Spark job, no RDD
     conversion of the unexecuted plan, and AQE keeps ownership of the
     physical plan (``df.rdd.getNumPartitions()`` forfeits all three).
-    Non-file plans (in-memory frames) report zero and get widened,
-    which is exactly the compute-bound-small-input case this helper
-    exists for.
+    An in-memory frame already split ``min_partitions`` ways passes
+    through; a narrower one, or a leaf with no readable width
+    (``range``), is widened.
     """
     target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
     if estimate_scan_partitions(df, target) < target:

@@ -9,8 +9,8 @@ aggregates observations into their grid cell, and forward-fills empty
 cells from the last observed value — pandas ``resample().ffill()``
 semantics, expressed as three relational steps:
 
-1. cell aggregation: ``date_trunc`` + groupBy — map-side combinable,
-   one shuffle on (key, cell);
+1. cell aggregation: ``date_trunc`` (or an epoch-aligned multiple of
+   the step) + groupBy — map-side combinable, one shuffle on (key, cell);
 2. spine: per-key ``sequence(min_cell, max_cell, step)`` exploded —
    rows = keys x cells-in-range, the resample's intrinsic output size
    (nothing hidden: the spine IS the result grid);
@@ -39,6 +39,47 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Units of constant length: their multiples snap to the epoch. Calendar
+# units (week, month, quarter, year) are only valid as a single unit.
+_FIXED_UNIT_SECONDS = {"second": 1, "minute": 60, "hour": 3_600, "day": 86_400}
+
+
+def _parse_step(step: str) -> tuple[int, str]:
+    """``"<n> <unit>"`` -> ``(n, unit)`` with the unit singular;
+    rejects any other shape, and multiples of a calendar unit."""
+    parts = step.split()
+    if len(parts) != 2 or not parts[0].isdigit() or int(parts[0]) < 1:
+        raise ValueError(f"step must be '<n> <unit>' with n >= 1, got {step!r}")
+    n, unit = int(parts[0]), parts[1].lower().rstrip("s")
+    if n > 1 and unit not in _FIXED_UNIT_SECONDS:
+        raise ValueError(
+            f"step {step!r}: multiples need a fixed-width unit "
+            f"({', '.join(_FIXED_UNIT_SECONDS)}); calendar units take n = 1"
+        )
+    return n, unit
+
+
+def _grid_cell(ts: Column, step: str) -> Column:
+    """The grid cell of ``ts``: ``date_trunc`` for a single unit; for
+    ``n`` fixed-width units, the multiple of the step since the Unix
+    epoch at or before ``ts``, so any two cells of one key lie a whole
+    number of steps apart."""
+    n, unit = _parse_step(step)
+    if n == 1:
+        return F.date_trunc(unit, ts)
+    width = n * _FIXED_UNIT_SECONDS[unit]
+    secs = F.unix_seconds(ts)
+    return F.timestamp_seconds(secs - F.pmod(secs, F.lit(width)))
+
+
+def _step_interval(step: str) -> Column:
+    """The step as an interval; a multi-unit step as exact seconds, so
+    stepping between epoch-aligned cells never meets a calendar day."""
+    n, unit = _parse_step(step)
+    if n == 1:
+        return F.expr(f"interval {step}")
+    return F.expr(f"interval {n * _FIXED_UNIT_SECONDS[unit]} seconds")
+
 
 def cell_aggregates(
     df: DataFrame,
@@ -52,9 +93,13 @@ def cell_aggregates(
     ``_v = max(value)`` per grid cell — the only corpus-sized pass, and
     MERGEABLE (max of maxes == max of the union), so arriving batches
     absorb by :func:`absorb_cells` without rescanning history: the
-    DedupState/KMV/moments ingest shape for time series."""
-    unit = step.split()[-1].rstrip("s")  # "1 hour" -> hour
-    cell = F.date_trunc(unit, F.col(ts_col))
+    DedupState/KMV/moments ingest shape for time series.
+
+    ``step`` is ``"<n> <unit>"``. A single unit cells by ``date_trunc``;
+    ``n`` seconds, minutes, hours or days cell on multiples of the step
+    since the Unix epoch; a multiple of a calendar unit (``"2 months"``)
+    raises ``ValueError``."""
+    cell = _grid_cell(F.col(ts_col), step)
     return (
         df.where(F.col(ts_col).isNotNull() & F.col(value_col).isNotNull())
         .groupBy(F.col(key), cell.alias("cell"))
@@ -89,7 +134,7 @@ def _anchor_segments(cells: DataFrame, key: str, step: str) -> DataFrame:
     the interpolating variant) are gone. The exploded row count is the
     grid itself — the resample's intrinsic output size, unchanged."""
     w = Window.partitionBy(key).orderBy(F.col("cell").asc())
-    step_i = F.expr(f"interval {step}")
+    step_i = _step_interval(step)
     seg = (
         cells.withColumn("_nc", F.lead("cell").over(w))
         .withColumn("_nv", F.lead("_v").over(w))

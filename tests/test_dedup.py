@@ -292,6 +292,67 @@ def test_connected_components_unconverged_raises(spark):
     assert set(comp.values()) == {1}
 
 
+def test_connected_components_null_endpoints_and_self_pairs(spark):
+    """A pair with a NULL endpoint links nothing: the other endpoint
+    keeps its own component and NULL comes back once, labeled NULL. A
+    self-pair is a singleton node. (Outputs pinned from the two-join
+    implementation the one-scan edge build replaced.)"""
+    cases = [
+        (
+            [(1, 2), (2, None), (None, 3), (7, 8)],
+            {(1, 1), (2, 1), (3, 3), (7, 7), (8, 7), (None, None)},
+        ),
+        ([(None, None)], {(None, None)}),
+        ([(4, None)], {(4, 4), (None, None)}),
+        (
+            [(5, 5), (7, 8), (8, 8), (9, 9), (9, 10)],
+            {(5, 5), (7, 7), (8, 7), (9, 9), (10, 9)},
+        ),
+    ]
+    for rows, want in cases:
+        pairs = spark.createDataFrame(rows, "id_a long, id_b long")
+        got = [tuple(r) for r in dedup.connected_components(pairs).collect()]
+        assert len(got) == len(want) and set(got) == want, rows
+
+
+def _jobs(spark, run) -> int:
+    """Spark jobs ``run`` schedules, read off the DAGScheduler's job-id
+    counter (the tools/job_count.py method)."""
+    sc = spark.sparkContext._jsc.sc()
+    before = int(sc.dagScheduler().nextJobId())
+    run()
+    return int(sc.dagScheduler().nextJobId()) - before
+
+
+def test_near_dup_job_counts(spark):
+    """Job-count pins, collect included: components of a shallow pair
+    graph build the edges in one scan and pay one join per round (23
+    jobs with the former two-join loop, 10 now); the complete Jaccard
+    join computes its shingle base once before AQE fans out (14 jobs
+    cold before, 10 now)."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (10, 11), (20, 21)], "id_a long, id_b long"
+    )
+    assert _jobs(spark, lambda: dedup.connected_components(pairs).collect()) <= 10
+    docs = spark.createDataFrame(
+        [
+            (1, "x x x a b c d"),
+            (2, "x x x a b c e"),
+            (3, "q r s t u v w"),
+            (4, "q r s t u v z"),
+            (5, "totally different content"),
+        ],
+        "doc_id long, text string",
+    )
+    assert (
+        _jobs(
+            spark,
+            lambda: dedup.jaccard_pairs_complete(docs, ngram=1, threshold=0.6).collect(),
+        )
+        <= 10
+    )
+
+
 def test_simhash_near_pairs_complete_vs_brute_force(spark, sf_dir):
     """The k+1-segment pigeonhole band join must find EXACTLY the pairs
     within Hamming distance k of each other — recall-complete by the

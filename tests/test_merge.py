@@ -5150,3 +5150,43 @@ def test_reorg_purge_and_key_range_compaction_sort_files_by_key(spark, tmp_path)
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, val)
+
+
+def test_reorg_purge_and_key_range_compaction_write_one_file_per_bucket(
+    spark, tmp_path
+):
+    """A compaction must not raise a bucket's file count: REORG PURGE
+    and compact_key_range shuffle by bucket before the sort, so each
+    rewritten bucket's new generation is ONE file, not one per scan
+    task."""
+    import os
+
+    for op in ("purge", "range"):
+        path = str(tmp_path / op)
+        merge.versioned_layout_write(
+            spark.createDataFrame(
+                [(i, i * 10) for i in range(1, 41)], "k long, v long"
+            ),
+            "k", path, n_buckets=4,
+        )
+        merge.upsert_versioned_dv(
+            spark, path,
+            spark.createDataFrame([(1, 111), (2, 222)], "k long, v long"),
+            "k",
+        )
+        if op == "purge":
+            v = merge.purge_deletion_vectors(spark, path, "k").version
+        else:
+            v = merge.compact_key_range(spark, path, "k", 1, 5).version
+        gens = [
+            f"{path}/data/{b}/_gen={v}"
+            for b in sorted(os.listdir(f"{path}/data"))
+            if os.path.isdir(f"{path}/data/{b}/_gen={v}")
+        ]
+        assert gens, op
+        for d in gens:
+            files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+            assert len(files) == 1, (op, d, files)
+        assert {r.k for r in merge.read_version(spark, path).collect()} == set(
+            range(1, 41)
+        )

@@ -220,28 +220,10 @@ def test_chunking_covers_every_token_once_per_window(spark, counts):
         assert covered == set(range(n_eff)), (i, n)
 
 
-@settings(max_examples=12, deadline=None)
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 40), st.integers(0, 40)),
-        min_size=1,
-        max_size=60,
-    )
-)
-def test_star_contraction_matches_union_find(spark, edges):
-    """connected_components_star on arbitrary random graphs (self-loops,
-    duplicates, multi-component, chains) must equal a driver union-find."""
-    from data_pipeline_bigquery_to_sftp_server_spark.operators import dedup
-
-    clean = [(a, b) for a, b in edges if a != b]
-    if not clean:
-        return
-    pairs = spark.createDataFrame(clean, "id_a long, id_b long")
-    got = {
-        (r.node, r.component)
-        for r in dedup.connected_components_star(pairs).collect()
-    }
-
+def _union_find_components(pairs) -> set:
+    """(node, min reachable node) by a driver union-find over non-NULL
+    pairs; a pair with a NULL endpoint links nothing and adds its
+    non-NULL endpoint as a node and NULL as a node labeled NULL."""
     parent: dict = {}
 
     def find(x):
@@ -251,12 +233,53 @@ def test_star_contraction_matches_union_find(spark, edges):
             x = parent[x]
         return x
 
-    for a, b in clean:
+    has_null = False
+    for a, b in pairs:
+        if a is None or b is None:
+            has_null = True
+            for x in (a, b):
+                if x is not None:
+                    find(x)
+            continue
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    want = {(n, find(n)) for n in parent}
-    assert got == want
+    return {(n, find(n)) for n in parent} | ({(None, None)} if has_null else set())
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    edges=st.lists(
+        st.tuples(
+            st.one_of(st.none(), st.integers(0, 40)),
+            st.one_of(st.none(), st.integers(0, 40)),
+        ),
+        min_size=1,
+        max_size=60,
+    )
+)
+def test_star_contraction_matches_union_find(spark, edges):
+    """Both components tiers on arbitrary random graphs (self-loops,
+    duplicates, multi-component, chains) must equal a driver union-find:
+    min-label propagation on the raw pairs, NULL endpoints and
+    self-pairs included, and star contraction on the non-NULL pairs
+    between distinct nodes."""
+    from data_pipeline_bigquery_to_sftp_server_spark.operators import dedup
+
+    raw = spark.createDataFrame(edges, "id_a long, id_b long")
+    got = [tuple(r) for r in dedup.connected_components(raw).collect()]
+    want = _union_find_components(edges)
+    assert len(got) == len(want) and set(got) == want
+
+    clean = [(a, b) for a, b in edges if a is not None and b is not None and a != b]
+    if not clean:
+        return
+    pairs = spark.createDataFrame(clean, "id_a long, id_b long")
+    got = {
+        (r.node, r.component)
+        for r in dedup.connected_components_star(pairs).collect()
+    }
+    assert got == _union_find_components(clean)
 
 
 @settings(max_examples=15, deadline=None)

@@ -41,10 +41,26 @@ def test_narrow_scan_widened_wide_passes_through(spark, tmp_path):
     assert "RoundRobinPartitioning" not in out._jdf.queryExecution().analyzed().toString()
 
 
-def test_non_file_plan_reports_zero_and_widens(spark):
-    df = spark.createDataFrame([(i,) for i in range(10)], "id long")
-    assert estimate_scan_partitions(df, target=8) == 0
+def test_in_memory_plan_reports_leaf_width_and_widens_narrow(spark):
+    """In-memory frames report the width their leaf scan builds, with no
+    job: an RDD-backed frame its RDD's partitions, a LocalRelation
+    min(rows, leafNodeDefaultParallelism); leaves with no readable
+    width (range) report 0. A frame narrower than the target is
+    widened; one already at the target passes through unshuffled."""
+    from data_pipeline_bigquery_to_sftp_server_spark.session import local_frame
+
+    rows = [(i,) for i in range(10)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), "id long")
+    assert estimate_scan_partitions(df, target=8) == 4
     assert ensure_parallelism(df, min_partitions=8).rdd.getNumPartitions() == 8
+
+    wide = spark.createDataFrame(spark.sparkContext.parallelize(rows, 8), "id long")
+    out = ensure_parallelism(wide, min_partitions=8)
+    assert "RoundRobinPartitioning" not in out._jdf.queryExecution().analyzed().toString()
+    assert out.rdd.getNumPartitions() == 8
+
+    assert estimate_scan_partitions(local_frame(spark, rows[:3], "id long"), target=8) == 3
+    assert estimate_scan_partitions(spark.range(10), target=8) == 0
 
 
 def test_estimate_degrades_to_narrow_on_missing_path(spark, tmp_path):

@@ -96,6 +96,35 @@ def test_null_ts_and_value_rows_are_ignored(spark):
     assert len(rows) == 2  # the NULL rows neither extend nor fill the grid
 
 
+def test_multi_unit_step_snaps_cells_to_step_multiples(spark):
+    """A '2 hours' step grids on even UTC hours: events at 00:10 and
+    01:20 share the 00:00 cell, 05:30 lands in 04:00, and 02:00 is the
+    filled cell between them. Cells truncated to the unit alone would
+    be one hour apart and break the anchor segments' sequence."""
+    df = _events(
+        spark, [("a", 0, 10, 1.0), ("a", 1, 20, 3.0), ("a", 5, 30, 7.0)]
+    )
+    ffill = {
+        r.cell.hour: (r.value, r.observed)
+        for r in resample_ffill(df, "k", "ts", "value", step="2 hours").collect()
+    }
+    assert ffill == {0: (3.0, True), 2: (3.0, False), 4: (7.0, True)}
+    interp = {
+        r.cell.hour: r.value
+        for r in resample_interpolate(
+            df, "k", "ts", "value", step="2 hours"
+        ).collect()
+    }
+    assert interp == {0: 3.0, 2: 5.0, 4: 7.0}
+
+
+def test_calendar_multiple_step_rejected_up_front(spark):
+    df = _events(spark, [("a", 0, 0, 1.0)])
+    for step in ("2 months", "3 weeks", "hour"):
+        with pytest.raises(ValueError, match="step"):
+            resample_ffill(df, "k", "ts", "value", step=step)
+
+
 def _days(spark, rows):
     return spark.createDataFrame(
         [(u, dt.datetime(2024, 1, d, 12, 0)) for u, d in rows],
