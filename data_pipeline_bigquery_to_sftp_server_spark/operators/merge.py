@@ -26,6 +26,8 @@ Strategy choice at scale:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -466,18 +468,7 @@ def upsert_fileskip(
     the key, pinned by re-apply in tests. Returns the merged view of
     the touched buckets with ``touched_buckets`` attached."""
     manifest = spark.read.parquet(f"{target_path}/_manifest")
-    # touched buckets ride the staging checkpoint's Observation (r16)
-    # instead of a separate distinct-collect job; the merge below
-    # reads the checkpoint instead of recomputing the staging pipeline
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(int(b) for b in obs.get["b"])
+    assigned, touched = _assign_touched(staging, manifest, key)
     target = spark.read.parquet(target_path).where(F.col("_kr").isin(touched))
     merged = upsert_anti_union(
         target, assigned.select(*target.columns), key
@@ -558,22 +549,26 @@ def _write_small_file(
 ) -> None:
     """Write one small metadata file (tags/constraints/op/meta
     sidecars) through the Hadoop FS — one place to get encoding,
-    overwrite semantics, and stream closing right."""
-    jvm, fs, _ = _fs(spark, path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(path), overwrite)
-    out.write(bytearray(payload, "utf-8"))
-    out.close()
+    overwrite semantics, and stream closing right. ``overwrite=False``
+    is a create-exclusive: it raises when the file exists."""
+    _, fs, p = _fs(spark, path)
+    out = fs.create(p, overwrite)
+    try:
+        out.write(bytearray(payload, "utf-8"))
+    finally:
+        out.close()
 
 
 def _read_small_file(spark: SparkSession, path: str) -> str | None:
     """Read one small metadata file as text; None when absent."""
-    jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    jvm, fs, p = _fs(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
-    raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    stream.close()
+    try:
+        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
     return raw.decode("utf-8")
 
 
@@ -610,28 +605,18 @@ def _begin_commit(spark: SparkSession, path: str, version: int, writer: str) -> 
     path), while a different writer fails loudly until the dead
     attempt is rolled back (rollback_inflight). Single-file CAS means
     no wall-clock, no lease, no tie-break heuristics."""
-    jvm, fs, _ = _fs(spark, path)
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{path}/_manifest/v={version}.begin"
-    )
+    marker = f"{path}/_manifest/v={version}.begin"
     try:
-        out = fs.create(marker, False)  # overwrite=False: atomic CAS
-        out.write(bytearray(writer, "utf-8"))
-        out.close()
+        _write_small_file(spark, marker, writer, overwrite=False)
         return
     except Exception:
         # lost the create race (or a prior attempt left the marker):
         # read the holder. An empty read (winner between create and
         # content-write) counts as "someone else" — losing is safe.
-        holder = ""
         try:
-            stream = fs.open(marker)
-            holder = bytes(
-                jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            ).decode("utf-8")
-            stream.close()
+            holder = _read_small_file(spark, marker) or ""
         except Exception:
-            pass
+            holder = ""
         if holder == writer:
             return  # own crashed attempt: idempotent re-entry
         raise ConcurrentWriteError(version, holder or "<unknown>", writer)
@@ -644,11 +629,8 @@ def _write_commit_meta(
     committed version: ``_manifest/v=<n>.meta``. With the manifest as
     the commit log, committed_metas() is the replay ledger that makes
     foreachBatch upserts exactly-once (r11 verdict #7)."""
-    jvm, fs, _ = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest/v={version}.meta")
-    out = fs.create(p, True)  # own version slot: overwrite self-heals
-    out.write(bytearray(meta, "utf-8"))
-    out.close()
+    # own version slot: overwrite self-heals
+    _write_small_file(spark, f"{path}/_manifest/v={version}.meta", meta)
 
 
 def _write_commit_op(
@@ -661,10 +643,8 @@ def _write_commit_op(
 ) -> None:
     """Tag a commit with its operation name (+ parameters) —
     ``_manifest/v=<n>.op`` — the provenance column Delta's DESCRIBE
-    HISTORY leads with. Written BEFORE the manifest commit point (same
-    crash-window reasoning as _write_commit_meta): a crash in between
-    leaves an uncommitted version whose tag table_history filters out.
-    Operation names are deterministic per committer, so the ledger
+    HISTORY leads with; the last sidecar _Commit writes before the
+    manifest commit point. Operation names are deterministic per committer, so the ledger
     stays oracle-replayable.
 
     Also PERSISTS the commit's monotonically-adjusted timestamp
@@ -781,66 +761,76 @@ def committed_metas(spark: SparkSession, path: str) -> dict[str, int]:
     upsert_versioned: a replayed epoch finds itself already committed
     and skips — the manifest IS the idempotence ledger, so redelivery
     after a checkpoint restart cannot double-commit."""
-    jvm, fs, mroot = _fs(spark, f"{path}/_manifest")
+    _, fs, mroot = _fs(spark, f"{path}/_manifest")
     out: dict[str, int] = {}
     if not fs.exists(mroot):
         return out
     committed = set(_list_versions(spark, f"{path}/_manifest"))
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest")):
+    for st in fs.listStatus(mroot):
         name = st.getPath().getName()
         if not (name.startswith("v=") and name.endswith(".meta")):
             continue
         v = int(name[2:-5])
         if v not in committed:
             continue
-        stream = fs.open(st.getPath())
-        meta = bytes(
-            jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        ).decode("utf-8")
-        stream.close()
-        out[meta] = v
+        out[_read_small_file(spark, st.getPath().toString())] = v
     return out
+
+
+def _slot_files(path: str, version: int) -> tuple[str, ...]:
+    """Every file a version slot owns besides its begin marker and its
+    generation data (``data/_kr=*/_gen=<n>``): the manifest directory,
+    the DV state and the ``.meta`` / ``.op`` / ``.schema`` sidecars. A
+    crashed attempt may have left any of them, so rollback_inflight
+    deletes them all and a commit clears them when it takes the slot
+    (_Commit): a leftover ``.schema`` would otherwise outlive the
+    version's expiry and become the table's schema (_schema_as_of
+    trusts sidecars of vacuumed versions)."""
+    m = f"{path}/_manifest/v={version}"
+    return (m, f"{m}.meta", f"{m}.op", f"{m}.schema", f"{path}/_dv/v={version}")
+
+
+def _delete_paths(spark: SparkSession, paths) -> None:
+    """Recursively delete each path that exists (one FS handle)."""
+    paths = list(paths)
+    if not paths:
+        return
+    jvm, fs, _ = _fs(spark, paths[0])
+    for p in paths:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(p), True)
 
 
 def rollback_inflight(spark: SparkSession, path: str) -> list[int]:
     """Take-over path after a writer died mid-commit: for every
     ``v=<n>.begin`` whose manifest never committed (_SUCCESS absent),
-    delete the partial manifest, the partial deletion-vector file, any
-    generation data written at gen n, and the intent markers — then a
-    NEW writer's _begin_commit for that version succeeds. Safe to run
-    any time: committed versions are never touched."""
+    delete every file the slot owns (_slot_files), any generation data
+    written at gen n, and the intent marker — then a NEW writer's
+    _begin_commit for that version succeeds. Safe to run any time:
+    committed versions are never touched."""
     jvm, fs, mroot = _fs(spark, f"{path}/_manifest")
     rolled: list[int] = []
     if not fs.exists(mroot):
         return rolled
     committed = set(_list_versions(spark, f"{path}/_manifest"))
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest")):
+    droot = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
+    buckets = [
+        st.getPath().getName()
+        for st in (fs.listStatus(droot) if fs.exists(droot) else [])
+        if st.getPath().getName().startswith("_kr=")
+    ]
+    for st in fs.listStatus(mroot):
         name = st.getPath().getName()
         if not (name.startswith("v=") and name.endswith(".begin")):
             continue
         v = int(name[2:-6])
         if v in committed:
             continue
-        droot = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
-        if fs.exists(droot):
-            for bdir in fs.listStatus(droot):
-                bname = bdir.getPath().getName()
-                if not bname.startswith("_kr="):
-                    continue
-                g = jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/data/{bname}/_gen={v}"
-                )
-                if fs.exists(g):
-                    fs.delete(g, True)
-        for leftover in (
-            f"{path}/_manifest/v={v}",
-            f"{path}/_dv/v={v}",
-            f"{path}/_manifest/v={v}.meta",
-            f"{path}/_manifest/v={v}.begin",
-        ):
-            p = jvm.org.apache.hadoop.fs.Path(leftover)
-            if fs.exists(p):
-                fs.delete(p, True)
+        _delete_paths(
+            spark,
+            [f"{path}/data/{b}/_gen={v}" for b in buckets]
+            + list(_slot_files(path, v))
+            + [f"{path}/_manifest/v={v}.begin"],
+        )
         rolled.append(v)
     return sorted(rolled)
 
@@ -852,19 +842,9 @@ def _clean_uncommitted_generation(
     left: the commit point is the manifest write, so data under a
     generation no manifest references is garbage — and because the
     data write is mode('append'), a retry would otherwise append INTO
-    that garbage and duplicate rows. Called before every generation
-    write (upsert_versioned / compact_table); bounded FS work
-    (touched buckets only)."""
-    jvm = spark.sparkContext._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    )
-    for b in buckets:
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/data/_kr={b}/_gen={gen}"
-        )
-        if fs.exists(p):
-            fs.delete(p, True)
+    that garbage and duplicate rows. Run by _Commit before every
+    generation write; bounded FS work (the written buckets only)."""
+    _delete_paths(spark, [f"{path}/data/_kr={b}/_gen={gen}" for b in buckets])
 
 
 def _manifest_agg(key: str, stats_cols: tuple[str, ...] | list[str]):
@@ -1183,27 +1163,21 @@ def _read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
     return spark.read.parquet(d)
 
 
-def _copy_manifest_dir(
-    spark: SparkSession, src_dir: str, dst_dir: str, commit: bool = True
-) -> None:
+def _copy_manifest_dir(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
     """Carry a manifest version forward VERBATIM as a driver-side file
     copy (r16 optimization): DELETE / RESTORE / schema-DDL / no-op
     commits re-publish an unchanged manifest, which previously paid a
     full Spark read+rewrite job per commit. The bytes are immutable —
-    copying them preserves content exactly — and the commit point
-    stays atomic: part files land first, the ``_SUCCESS`` marker
-    (what _list_versions requires) is created LAST, exactly the order
-    Spark's own committer produces. A leftover partial destination
-    from a crashed attempt (same writer re-entering through its begin
-    marker) is deleted first, matching mode("overwrite")."""
+    copying them preserves content exactly. The source's ``_SUCCESS``
+    is not copied: the commit point is the caller's (_Commit writes it
+    after every other write). The destination slot is empty — _Commit
+    clears it when it takes the version (_slot_files)."""
     jvm, fs, sp = _fs(spark, src_dir)
     # resolve the DESTINATION's filesystem separately (r16 advice):
     # clone_table copies across tables whose paths may live on
     # different schemes, where reusing the source FS throws "Wrong FS"
     _, dst_fs, dst = _fs(spark, dst_dir)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
-    if dst_fs.exists(dst):
-        dst_fs.delete(dst, True)
     dst_fs.mkdirs(dst)
     for st in fs.listStatus(sp):
         name = st.getPath().getName()
@@ -1214,11 +1188,6 @@ def _copy_manifest_dir(
             jvm.org.apache.hadoop.fs.Path(f"{dst_dir}/{name}"),
             False, True, conf,
         )
-    # commit=False defers the _SUCCESS marker to the caller: a
-    # committer overlapping this copy with its DV write must place the
-    # commit point AFTER every write has finished (_run_concurrent)
-    if commit:
-        _write_small_file(spark, f"{dst_dir}/_SUCCESS", "")
 
 
 def _copy_dir(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
@@ -1228,13 +1197,11 @@ def _copy_dir(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
     Spark read+rewrite job each. The copied bytes are immutable
     committed state; visibility is gated by the DESTINATION version's
     manifest ``_SUCCESS`` (written after this), so partial copies are
-    never reader-visible. A leftover partial destination from a
-    crashed attempt is deleted first (mode("overwrite") semantics)."""
+    never reader-visible. The destination slot is empty — _Commit
+    clears it when it takes the version (_slot_files)."""
     jvm, fs, sp = _fs(spark, src_dir)
     # destination FS resolved separately — see _copy_manifest_dir
     _, dst_fs, dst = _fs(spark, dst_dir)
-    if dst_fs.exists(dst):
-        dst_fs.delete(dst, True)
     jvm.org.apache.hadoop.fs.FileUtil.copy(
         fs, sp, dst_fs, dst, False, True,
         spark.sparkContext._jsc.hadoopConfiguration(),
@@ -1468,9 +1435,7 @@ def _carry_dv_except(
         return  # every entry dropped: no DV state at v_to
     dst_root = f"{path}/_dv/v={v_to}"
     _, dfs, dstp = _fs(spark, dst_root)
-    if dfs.exists(dstp):
-        dfs.delete(dstp, True)  # crashed attempt: overwrite semantics
-    dfs.mkdirs(dstp)
+    dfs.mkdirs(dstp)  # the slot is empty: _Commit cleared it (_slot_files)
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     for n in keep:
         jvm.org.apache.hadoop.fs.FileUtil.copy(
@@ -1588,24 +1553,21 @@ def _read_gen_dirs(spark: SparkSession, path: str, rows) -> DataFrame:
     return out
 
 
-def _write_table_meta(spark: SparkSession, path: str, **meta) -> None:
-    """Persist table-level metadata — ``_manifest/_table.json`` — the
-    slot Delta keeps in its transaction-log metaData action: the merge
-    KEY, bucket count, and declared stats/point columns. Written at
-    bootstrap (versioned_layout_write), updated by partition evolution
-    (rebucket_table), copied by SHALLOW CLONE — so SQL-front-door DML
-    (DELETE/UPDATE/OPTIMIZE, sqlfront.py) can resolve the key from the
-    table itself instead of demanding a ``key=`` call-site parameter.
-    Merge-updates the existing file (unknown keys survive)."""
+def _table_meta_json(spark: SparkSession, path: str, **meta) -> str:
+    """The new content of table-level metadata — ``_manifest/_table.json``
+    — the slot Delta keeps in its transaction-log metaData action: the
+    merge KEY, bucket count, and declared stats/point columns. Written
+    at bootstrap (versioned_layout_write), updated by partition
+    evolution (rebucket_table), copied by SHALLOW CLONE — so
+    SQL-front-door DML (DELETE/UPDATE/OPTIMIZE, sqlfront.py) can resolve
+    the key from the table itself instead of demanding a ``key=``
+    call-site parameter. Merge-updates the existing file (unknown keys
+    survive); the commit writes it (_Commit ``table_files``)."""
     import json as _json
 
     cur = table_meta(spark, path)
     cur.update({k: v for k, v in meta.items() if v is not None})
-    _write_small_file(
-        spark,
-        f"{path}/_manifest/_table.json",
-        _json.dumps(cur, sort_keys=True),
-    )
+    return _json.dumps(cur, sort_keys=True)
 
 
 def table_meta(spark: SparkSession, path: str) -> dict:
@@ -1622,6 +1584,321 @@ def table_meta(spark: SparkSession, path: str) -> dict:
     except ValueError:
         return {}
     return out if isinstance(out, dict) else {}
+
+
+# ---------------------------------------------------------------------------
+# The commit protocol. Every versioned committer opens the latest version
+# (_open_table), computes its new generation / DV / manifest, and hands
+# them to ONE _Commit — the only place the begin -> write -> sidecars ->
+# _SUCCESS sequence and its crash rules are spelled out.
+# ---------------------------------------------------------------------------
+
+
+def _admissible(
+    spark: SparkSession, path: str, version: int, touched: list
+) -> bool:
+    """Disjoint admission (r16 — Delta's conflict resolution for
+    non-conflicting transactions): wait for the writer holding
+    ``version`` to commit, then admit a loser touching ``touched`` past
+    it when the winner is cutpoint-stable (a MOR MERGE or a DELETE) and
+    its stamped ``changed_buckets`` are disjoint from ``touched``. A
+    winner that never commits (crashed holder) times out: not
+    admissible, the rebase/rollback path decides."""
+    if not _wait_for_commit(spark, path, version):
+        return False
+    win = _commit_op_payload(spark, path, version) or {}
+    op_name = win.get("operation")
+    tier = (win.get("parameters") or {}).get("tier")
+    cb = win.get("changed_buckets")
+    return (
+        (op_name == "DELETE" or (op_name == "MERGE" and tier == "mor"))
+        and cb is not None
+        and not set(cb) & set(touched)
+    )
+
+
+class _Commit:
+    """One commit of the versioned table at ``path`` — the commit
+    protocol every versioned committer runs (the reference gets the
+    same atomicity from one warehouse MERGE statement).
+
+    1. Begin (the constructor). Take the ``v=<n>.begin`` intent marker
+       (_begin_commit: create-exclusive, so exactly one writer wins and
+       a loser raises ConcurrentWriteError BEFORE writing anything; the
+       same writer re-enters its own crashed attempt). With ``admit``
+       (the batch's touched buckets) a loser instead waits for the
+       winner and, when _admissible, takes the next version —
+       ``version`` and ``admitted_over`` record the move. The winner
+       then clears every file the slot owns (_slot_files), which a
+       crashed or rolled-back attempt may have left. The bootstrap
+       (``begin=False``) takes no marker.
+    2. Writes (publish), run concurrently (_run_concurrent) because
+       they share no inputs beyond a materialized checkpoint or
+       immutable committed state: the generation data (its
+       ``buckets``' slot directories cleared first — the append would
+       otherwise absorb a crashed attempt's rows); the DV state; the
+       manifest (collect the new rows, or copy a committed manifest
+       without its ``_SUCCESS``).
+    3. Sidecars, in this order: ``v=<n>.schema``, table-level files
+       (``_table.json``, ``_constraints.json``), ``v=<n>.meta``,
+       ``v=<n>.op``. All land BEFORE the commit point. The per-version
+       ones are filtered out by every reader (they all check
+       ``_SUCCESS``), so a crash leaves nothing visible; a ``.meta``
+       written after it could leave a committed version invisible to
+       committed_metas and a replayed streaming epoch would commit
+       twice. The table-level files are NOT versioned: readers take
+       them as they are and rollback_inflight does not restore them,
+       so a crash after they land leaves them ahead of the committed
+       version (a rebucket's new ``n_buckets`` in table_meta) until a
+       commit writes them again: the same writer's retry, or a later
+       rebucket.
+    4. Publish: the manifest ``_SUCCESS`` marker — the atomic commit
+       point _list_versions keys on — lands last.
+
+    Crash rules: an exception anywhere before step 4 leaves the version
+    uncommitted with its begin marker in place. Readers keep seeing the
+    previous version (table-level files aside, see step 3), a different
+    writer gets ConcurrentWriteError, the same writer's retry re-enters
+    and commits exactly once, and rollback_inflight frees the slot for
+    anyone else. Nothing is rolled
+    back on exception: that would take same-writer re-entry away."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        version: int,
+        writer: str | None,
+        admit: list | None = None,
+        begin: bool = True,
+    ):
+        self.spark, self.path, self.version = spark, path, int(version)
+        self.admitted_over: list[int] = []
+        if not begin:
+            return
+        writer = writer or _unique_writer()
+        while True:
+            try:
+                _begin_commit(spark, path, self.version, writer)
+                break
+            except ConcurrentWriteError:
+                if admit is None or not _admissible(
+                    spark, path, self.version, admit
+                ):
+                    raise
+                self.admitted_over.append(self.version)
+                self.version += 1
+        _delete_paths(spark, _slot_files(path, self.version))
+
+    def publish(
+        self,
+        op: str,
+        changed_buckets=(),
+        *,
+        manifest,
+        data: DataFrame | None = None,
+        buckets=(),
+        dv=None,
+        schema: dict | None = None,
+        table_files: dict | None = None,
+        meta: str | None = None,
+        **params,
+    ) -> int:
+        """Commit and return the version. ``manifest``: the new manifest
+        rows, or the directory of a committed manifest to carry
+        verbatim. ``data``: the new generation (``_kr``/``_gen``
+        columns), appended after clearing ``buckets``' slot
+        directories. ``dv``: None (no DV state at this version), a
+        frame (the new DV state), a committed DV directory (byte
+        copy), or ``(frame, version, buckets)`` (that version's state
+        minus those buckets — _carry_dv_except). ``op`` / ``params``
+        / ``changed_buckets`` go to the ``.op`` sidecar
+        (_write_commit_op)."""
+        spark, path, v = self.spark, self.path, self.version
+        thunks = []
+        if data is not None:
+
+            def write_data() -> None:
+                _clean_uncommitted_generation(spark, path, list(buckets), v)
+                data.write.mode("append").partitionBy("_kr", "_gen").parquet(
+                    f"{path}/data"
+                )
+
+            thunks.append(write_data)
+        if isinstance(dv, DataFrame):
+            thunks.append(lambda: _write_dv(dv, path, v))
+        elif isinstance(dv, str):
+            thunks.append(lambda: _copy_dir(spark, dv, f"{path}/_dv/v={v}"))
+        elif dv is not None:
+            frame, v_from, drop = dv
+            thunks.append(
+                lambda: _carry_dv_except(spark, path, frame, v_from, v, drop)
+            )
+        dest = f"{path}/_manifest/v={v}"
+        if isinstance(manifest, str):
+            thunks.append(lambda: _copy_manifest_dir(spark, manifest, dest))
+
+            def commit() -> None:
+                _write_small_file(spark, f"{dest}/_SUCCESS", "")
+
+        else:
+            collect, commit = _manifest_writer(spark, manifest, dest)
+            thunks.append(collect)
+        _run_concurrent(*thunks)
+        self._sidecars(schema, table_files, meta, op, changed_buckets, params)
+        commit()
+        return v
+
+    def _sidecars(self, schema, table_files, meta, op, changed_buckets, params):
+        """Step 3: every sidecar, in the protocol's order."""
+        import json as _json
+
+        spark, path, v = self.spark, self.path, self.version
+        if schema is not None:
+            _write_small_file(
+                spark,
+                f"{path}/_manifest/v={v}.schema",
+                _json.dumps(
+                    {k: x for k, x in schema.items() if k != "since_version"},
+                    sort_keys=True,
+                ),
+            )
+        for name, content in (table_files or {}).items():
+            _write_small_file(spark, f"{path}/_manifest/{name}", content)
+        if meta is not None:
+            _write_commit_meta(spark, path, v, meta)
+        _write_commit_op(
+            spark, path, v, op, changed_buckets=list(changed_buckets), **params
+        )
+
+
+class _Table(NamedTuple):
+    """A committed version as a committer opens it: the manifest, the
+    column mapping in force, the PHYSICAL merge key, and the stats,
+    point (Bloom) columns and Bloom width every later commit keeps
+    maintaining (recovered from the manifest schema — the bootstrap
+    declared them). ``bloom_bits`` None: recovered when needed."""
+
+    v: int
+    manifest: DataFrame | None
+    sch: dict | None
+    key: str | None
+    stats_cols: list
+    point_cols: list
+    bloom_bits: int | None = None
+
+
+def _open_table(
+    spark: SparkSession, path: str, what: str, key: str | None = None
+) -> _Table:
+    """The latest committed version of the table at ``path``; raises
+    FileNotFoundError when there is none."""
+    versions = _list_versions(spark, f"{path}/_manifest")
+    if not versions:
+        raise FileNotFoundError(
+            f"{what}: no table at {path} — bootstrap with versioned_layout_write"
+        )
+    v = versions[-1]
+    manifest = _read_manifest(spark, path, v)
+    sch = _schema_as_of(spark, path, v)
+    return _Table(
+        v,
+        manifest,
+        sch,
+        None if key is None else _phys_name(sch, key),
+        _stats_cols_of(manifest),
+        _point_cols_of(manifest),
+    )
+
+
+def _manifest_rows(
+    t: _Table, fresh: DataFrame, keep: DataFrame | None = None
+) -> DataFrame:
+    """The manifest of a commit whose new generation is ``fresh``: one
+    row per bucket of ``fresh`` (key and stats min/max, row count,
+    Bloom bitmaps), after the committed rows ``keep`` (allowMissingColumns:
+    a clone's rows carry ``ext``, rewritten ones do not). A declared
+    stats column the batch omits is padded with typed NULLs for the
+    aggregate only — the data files keep exactly what the batch
+    carried."""
+    src = fresh
+    for c in t.stats_cols:
+        if c not in src.columns:
+            src = src.withColumn(
+                c, F.lit(None).cast(t.manifest.schema[f"min_{c}"].dataType)
+            )
+    bits = t.bloom_bits
+    if bits is None:
+        bits = _bloom_bits_of(t.manifest, t.point_cols) if t.point_cols else 0
+    rows = _with_bloom(
+        src.groupBy("_kr").agg(*_manifest_agg(t.key, t.stats_cols)),
+        src,
+        t.point_cols,
+        bits,
+    )
+    if keep is None:
+        return rows
+    return keep.unionByName(rows, allowMissingColumns=True)
+
+
+def _without_buckets(manifest: DataFrame, buckets) -> DataFrame:
+    """The manifest rows of every bucket a commit does not rewrite."""
+    return manifest.where(~F.col("_kr").isin([int(b) for b in buckets]))
+
+
+def _new_generation(df: DataFrame, gen: int) -> DataFrame:
+    """``df``'s rows as generation ``gen``, materialized once
+    (localCheckpoint): the data write and the manifest aggregate both
+    read the checkpoint instead of recomputing the plan."""
+    return (
+        df.drop("_gen")
+        .withColumn("_gen", F.lit(gen).cast("long"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _drop_retired(df: DataFrame, sch: dict | None) -> DataFrame:
+    """Scrub DROPped columns' retired physicals from a rewrite (r16 —
+    Delta's REORG column purge): time travel to pre-drop versions still
+    reads the OLD generations, which keep the bytes until vacuum."""
+    retired = [c for c in (sch or {}).get("retired", []) if c in df.columns]
+    return df.drop(*retired) if retired else df
+
+
+def _dv_union(old: DataFrame | None, new: DataFrame, key: str) -> DataFrame:
+    """The DV state after a MOR commit: ``new``'s entries, plus every
+    entry of the committed state ``old`` for a key ``new`` does not
+    supersede."""
+    if old is None:
+        return new
+    return old.join(new.select(key), key, "left_anti").unionByName(new)
+
+
+def _assign_touched(
+    frame: DataFrame, manifest: DataFrame, key: str
+) -> tuple[DataFrame, list[int]]:
+    """``frame`` with its key-range bucket assigned, checkpointed ONCE,
+    and the touched-bucket set — which rides the checkpoint's
+    materialization as an Observation (r16: no separate
+    distinct-collect job, and later reads of the assignment hit the
+    checkpoint instead of recomputing the staging pipeline)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    assigned = (
+        assign_range_bucket(frame, manifest, key)
+        .observe(obs, F.collect_set("_kr").alias("b"))
+        .localCheckpoint(eager=True)
+    )
+    return assigned, sorted(int(b) for b in obs.get["b"])
+
+
+def _dv_dir(spark: SparkSession, path: str, version: int) -> str | None:
+    """Version ``version``'s DV directory when it holds DV state (what
+    a verbatim carry byte-copies — no Spark job, r16), else None."""
+    if _read_dv(spark, path, version) is None:
+        return None
+    return f"{path}/_dv/v={version}"
 
 
 # ---------------------------------------------------------------------------
@@ -1805,46 +2082,22 @@ def _alter_schema_commit(
     **op_params,
 ) -> int:
     """Commit a schema change as a structural version (restore-shaped:
-    manifest and DV state carry forward VERBATIM — zero data reads or
-    writes, O(manifest) like every metadata commit). Ordering: intent
-    marker -> DV copy -> ``.schema`` sidecar -> op tag (carrying
-    ``schema_change`` so _schema_as_of can reject orphan sidecars) ->
-    manifest copy (the commit point)."""
-    import json as _json
-
+    manifest and DV state carry forward VERBATIM as driver-side byte
+    copies — zero data reads or writes, O(manifest) like every metadata
+    commit). The ``.schema`` sidecar rides an op tag carrying
+    ``schema_change``, so _schema_as_of can reject orphan sidecars."""
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"alter schema: no table at {path}")
     v = versions[-1]
-    v_new = v + 1
-    _begin_commit(spark, path, v_new, writer or _unique_writer())
-    jvm, fs, _ = _fs(spark, path)
-    for stale in (
-        f"{path}/_dv/v={v_new}",
-        f"{path}/_manifest/v={v_new}.schema",
-    ):
-        sp = jvm.org.apache.hadoop.fs.Path(stale)
-        if fs.exists(sp):
-            fs.delete(sp, True)
-    dv = _read_dv(spark, path, v)
-    if dv is not None:  # verbatim carry: byte copy, no Spark job (r16)
-        _copy_dir(spark, f"{path}/_dv/v={v}", f"{path}/_dv/v={v_new}")
-    payload = {k: v2 for k, v2 in doc.items() if k != "since_version"}
-    _write_small_file(
-        spark,
-        f"{path}/_manifest/v={v_new}.schema",
-        _json.dumps(payload, sort_keys=True),
+    return _Commit(spark, path, v + 1, writer).publish(
+        "ALTER SCHEMA",
+        manifest=f"{path}/_manifest/v={v}",
+        dv=_dv_dir(spark, path, v),
+        schema=doc,
+        schema_change=True,
+        **op_params,
     )
-    _write_commit_op(
-        spark, path, v_new, "ALTER SCHEMA",
-        changed_buckets=[], schema_change=True, **op_params,
-    )
-    # metadata-only commit: the manifest carries forward verbatim —
-    # a driver-side byte copy, not a Spark read+rewrite job (r16)
-    _copy_manifest_dir(
-        spark, f"{path}/_manifest/v={v}", f"{path}/_manifest/v={v_new}"
-    )
-    return v_new
 
 
 def rename_column(
@@ -2075,26 +2328,23 @@ def versioned_layout_write(
     written = spark.read.option("basePath", f"{path}/data").parquet(
         f"{path}/data"
     )
-    rows = _with_bloom(
-        written.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-        written,
-        point_cols,
-        bloom_bits,
-    )
-    _write_table_meta(
-        spark,
-        path,
-        key=key,
+    t = _Table(0, None, None, key, list(stats_cols), list(point_cols), bloom_bits)
+    # the first version has no rival to exclude: no begin marker
+    _Commit(spark, path, 0, None, begin=False).publish(
+        "WRITE",
+        manifest=_manifest_rows(t, written),
+        table_files={
+            "_table.json": _table_meta_json(
+                spark,
+                path,
+                key=key,
+                n_buckets=int(n_buckets),
+                stats_cols=list(stats_cols),
+                point_cols=list(point_cols),
+            )
+        },
         n_buckets=int(n_buckets),
-        stats_cols=list(stats_cols),
-        point_cols=list(point_cols),
     )
-    _write_commit_op(
-        spark, path, 0, "WRITE", changed_buckets=[], n_buckets=int(n_buckets)
-    )
-    # r17: one collect-shaped job + a driver-side parquet write instead
-    # of a scheduled coalesce(1) write through the Hadoop committer
-    _write_manifest(spark, rows, f"{path}/_manifest/v=0")
 
 
 def read_version(
@@ -2349,14 +2599,6 @@ def upsert_versioned(
     view of the touched buckets with ``version`` and
     ``touched_buckets`` attached.
     """
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"upsert_versioned: no table at {target_path} — bootstrap with "
-            "versioned_layout_write"
-        )
-    v = versions[-1]
     # CHECK-constraint gate (constraints.py): a violating batch fails
     # here, before the intent marker, before any write — one FS probe
     # when the table declares no constraints
@@ -2365,73 +2607,46 @@ def upsert_versioned(
     )
 
     check_batch(spark, target_path, staging)
+    t = _open_table(spark, target_path, "upsert_versioned", key)
+    v, key = t.v, t.key
     # r16 column mapping: logical batch -> frozen physical file names
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        staging = _apply_generated(staging, sch, "upsert_versioned")
-        staging = _to_physical(staging, sch, "upsert_versioned")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    # checkpoint the assigned staging ONCE, with the touched-bucket
-    # set riding the materialization as an Observation (r16): the
-    # distinct-collect job is gone, and the merged write below reads
-    # the checkpoint instead of recomputing the staging pipeline.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
+    staging = _to_physical(
+        _apply_generated(staging, t.sch, "upsert_versioned"),
+        t.sch,
+        "upsert_versioned",
     )
-    touched = sorted(int(b) for b in obs.get["b"])
+    assigned, touched = _assign_touched(staging, t.manifest, key)
     if not touched:
         # empty staging: a zero-data no-op commit (manifest and DV
-        # carry forward verbatim) rather than a crash — quarantine
-        # mode can legitimately strip a batch to nothing
-        _begin_commit(spark, target_path, v + 1, writer)
-        dv = _read_dv(spark, target_path, v)
-        if dv is not None:  # verbatim carry: byte copy, no Spark job
-            _copy_dir(
-                spark,
-                f"{target_path}/_dv/v={v}",
-                f"{target_path}/_dv/v={v + 1}",
-            )
-        if commit_meta is not None:
-            _write_commit_meta(spark, target_path, v + 1, commit_meta)
-        _write_commit_op(
-            spark, target_path, v + 1, "MERGE", changed_buckets=[], tier="cow"
+        # carry forward verbatim as byte copies) rather than a crash —
+        # quarantine mode can legitimately strip a batch to nothing
+        commit = _Commit(spark, target_path, v + 1, writer)
+        commit.publish(
+            "MERGE",
+            manifest=f"{target_path}/_manifest/v={v}",
+            dv=_dv_dir(spark, target_path, v),
+            meta=commit_meta,
+            tier="cow",
         )
-        # manifest carries forward VERBATIM — a driver-side byte copy
-        # like every other no-op carry commit (r16 advice: this branch
-        # was the one carry still paying a Spark coalesce(1) job)
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
-        )
-        out = _project_logical(assigned.drop("_kr"), sch)
+        out = _project_logical(assigned.drop("_kr"), t.sch)
         out.version = v + 1
         out.touched_buckets = []
         return out
     # every live generation of the touched buckets (merge-on-read
     # history included), resolved through the version's DV (read once —
-    # the carry below reuses it instead of a second _read_dv)
+    # the carry reuses it instead of a second _read_dv)
     dv = _read_dv(spark, target_path, v)
     target = _apply_dv(
         _read_gen_dirs(
             spark,
             target_path,
-            [r for r in manifest.collect() if r._kr in set(touched)],
+            [r for r in t.manifest.collect() if r._kr in set(touched)],
         ),
         dv,
     )
     # conflict gate BEFORE any write: the loser must not contaminate
     # the winner's generation directories
-    _begin_commit(spark, target_path, v + 1, writer)
+    commit = _Commit(spark, target_path, v + 1, writer)
     # anti+union with allowMissingColumns: staging may CARRY new columns
     # (schema evolution — untouched rows get NULL) or OMIT evolved ones
     # (NULL for the fresh copies); the union resolves both by name, so
@@ -2441,55 +2656,24 @@ def upsert_versioned(
     untouched = target.drop("_gen").join(
         assigned.select(key), key, "left_anti"
     )
-    merged = (
-        untouched.unionByName(assigned, allowMissingColumns=True)
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
+    merged = _new_generation(
+        untouched.unionByName(assigned, allowMissingColumns=True), v + 1
     )
-    # allowMissingColumns: rewritten buckets' rows carry no `ext` (they
-    # are local now), a clone's untouched rows keep theirs
-    new_manifest = manifest.where(~F.col("_kr").isin(touched)).unionByName(
-        _with_bloom(
-            merged.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            merged, point_cols, bloom_bits,
+    commit.publish(
+        "MERGE",
+        manifest=_manifest_rows(
+            t, merged, _without_buckets(t.manifest, touched)
         ),
-        allowMissingColumns=True,
-    )
-
-    # the three independent commit writes overlap (r17, guide §2.6):
-    # data append, DV carry, and the manifest aggregation all read the
-    # already-materialized checkpoint (or immutable committed state),
-    # so per-commit latency is the slowest of the three, not their sum
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        merged.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    def _carry_dv() -> None:
+        data=merged,
+        buckets=touched,
         # touched buckets are fully rewritten: their DV entries die
         # with their superseded generations; untouched buckets' carry
         # verbatim (byte copy per bucket directory — r17)
-        if dv is not None:
-            _carry_dv_except(spark, target_path, dv, v, v + 1, touched)
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
+        dv=None if dv is None else (dv, v, touched),
+        meta=commit_meta,
+        tier="cow",
     )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    # meta BEFORE the manifest commit point (r12 advice): a crash
-    # between manifest-_SUCCESS and a later meta write would leave a
-    # committed version invisible to committed_metas, so a replayed
-    # epoch would re-commit a duplicate version. Written this side of
-    # the commit, a crash leaves an uncommitted version whose meta is
-    # filtered out by committed_metas (it checks _SUCCESS) — no window.
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE", changed_buckets=[], tier="cow"
-    )
-    m_publish()
-    out = _project_logical(merged.drop("_gen"), sch)
+    out = _project_logical(merged.drop("_gen"), t.sch)
     out.version = v + 1
     out.touched_buckets = touched
     return out
@@ -2547,133 +2731,55 @@ def upsert_versioned_dv(
     ConcurrentWriteError exactly as before — upsert_with_retry's
     rebase handles them. A winner that never commits (crashed holder)
     times out (_ADMIT_WAIT_S) and re-raises."""
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"upsert_versioned_dv: no table at {target_path} — bootstrap "
-            "with versioned_layout_write"
-        )
-    v = versions[-1]
     # CHECK-constraint gate — see upsert_versioned
     from data_pipeline_bigquery_to_sftp_server_spark.operators.constraints import (
         check_batch,
     )
 
     check_batch(spark, target_path, staging)
+    # auto_evolve (Delta's MERGE WITH SCHEMA EVOLUTION) first commits
+    # one metadata-only ADD COLUMN per unknown staging column
+    if auto_evolve:
+        _auto_evolve_schema(spark, target_path, staging)
+    t = _open_table(spark, target_path, "upsert_versioned_dv", key)
     # r16 column mapping: the user's LOGICAL batch translates to the
     # files' frozen physical names at the write boundary (no-op for
     # tables that never ran a schema DDL); DV / manifest stats /
-    # bucket layout stay uniform across any rename. auto_evolve
-    # (Delta's MERGE WITH SCHEMA EVOLUTION) first commits one
-    # metadata-only ADD COLUMN per unknown staging column.
-    if auto_evolve:
-        _auto_evolve_schema(spark, target_path, staging)
-        v = _list_versions(spark, f"{target_path}/_manifest")[-1]
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        staging = _apply_generated(staging, sch, "upsert_versioned_dv")
-        staging = _to_physical(staging, sch, "upsert_versioned_dv")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
+    # bucket layout stay uniform across any rename
+    staging = _to_physical(
+        _apply_generated(staging, t.sch, "upsert_versioned_dv"),
+        t.sch,
+        "upsert_versioned_dv",
+    )
     # stage BEFORE the commit gate: the materialized assignment is
     # what disjoint admission reuses across winners (and the critical
-    # section shrinks for everyone else). The touched-bucket set rides
-    # the checkpoint materialization as an Observation (r16, guide
-    # §1.2: one job, not a checkpoint job plus a distinct-collect job
-    # — the same trick connected_components uses for its label sum).
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = assign_range_bucket(staging, manifest, key)
-    assigned = assigned.observe(
-        obs, F.collect_set("_kr").alias("b")
-    ).localCheckpoint(eager=True)
-    touched = sorted(int(b) for b in obs.get["b"])
-    admitted_over: list[int] = []
-    while True:
-        try:
-            _begin_commit(spark, target_path, v + 1, writer)
-            break
-        except ConcurrentWriteError:
-            if not admit_disjoint:
-                raise
-            if not _wait_for_commit(spark, target_path, v + 1):
-                raise  # crashed holder: rebase/rollback path decides
-            win = _commit_op_payload(spark, target_path, v + 1) or {}
-            op_name = win.get("operation")
-            tier = (win.get("parameters") or {}).get("tier")
-            cb = win.get("changed_buckets")
-            admissible = (
-                op_name == "DELETE" or (op_name == "MERGE" and tier == "mor")
-            )
-            if not admissible or cb is None or set(cb) & set(touched):
-                raise
-            admitted_over.append(v + 1)
-            v = v + 1
-            manifest = _read_manifest(spark, target_path, v)
+    # section shrinks for everyone else)
+    assigned, touched = _assign_touched(staging, t.manifest, t.key)
+    commit = _Commit(
+        spark, target_path, t.v + 1, writer,
+        admit=touched if admit_disjoint else None,
+    )
+    v = commit.version - 1
+    if commit.admitted_over:  # the winners appended rows in THEIR buckets
+        t = t._replace(v=v, manifest=_read_manifest(spark, target_path, v))
     fresh = assigned.withColumn("_gen", F.lit(v + 1).cast("long"))
     dv_new = fresh.select(
-        "_kr", key, F.lit(v + 1).cast("long").alias("live_gen")
+        "_kr", t.key, F.lit(v + 1).cast("long").alias("live_gen")
     )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        dv_new
-        if old_dv is None
-        else old_dv.join(dv_new.select(key), key, "left_anti").unionByName(
-            dv_new
-        )
+    commit.publish(
+        "MERGE",
+        touched,
+        manifest=_manifest_rows(t, fresh, t.manifest),
+        data=fresh,
+        buckets=touched,
+        dv=_dv_union(_read_dv(spark, target_path, v), dv_new, t.key),
+        meta=commit_meta,
+        tier="mor",
     )
-    # a staging batch may omit a declared stats column (or carry new
-    # ones — schema evolution); pad for the manifest aggregate only,
-    # the data files stay exactly what staging carried
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src, point_cols, bloom_bits,
-        ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
-    )
-
-    # data append, DV write, and manifest aggregation are independent
-    # reads of the materialized checkpoint / committed state — overlap
-    # them (r17, guide §2.6); the commit point stays the manifest
-    # _SUCCESS, written last by m_publish
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        fresh.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(
-        _write_data,
-        lambda: _write_dv(dv_state, target_path, v + 1),
-        m_collect,
-    )
-    # meta before the manifest commit point — see upsert_versioned
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE",
-        changed_buckets=touched, tier="mor",
-    )
-    m_publish()
-    out = _project_logical(fresh.drop("_gen"), sch)
+    out = _project_logical(fresh.drop("_gen"), t.sch)
     out.version = v + 1
     out.touched_buckets = touched
-    out.admitted_over = admitted_over
+    out.admitted_over = commit.admitted_over
     return out
 
 
@@ -2732,69 +2838,26 @@ def delete_versioned(
     version still serves it. Deleting an absent key is a no-op entry.
     ``writer`` defaults per-call-unique (see _unique_writer). Returns
     the new version number."""
-    writer = writer or _unique_writer()
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"delete_versioned: no table at {target_path}")
-    v = versions[-1]
-    # r16 column mapping: the key frame arrives under its logical name
-    sch = _schema_as_of(spark, target_path)
-    if sch is not None:
-        keys = _to_physical(keys.select(key), sch, "delete_versioned")
-        key = _phys_name(sch, key)
-    manifest = _read_manifest(spark, target_path, v)
-    # checkpoint the assigned keys ONCE with the touched-bucket set
-    # riding the materialization as an Observation (r16): previously
-    # the keys pipeline was computed twice — a distinct-collect job
-    # for `touched`, then again inside the DV write's union.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    assigned = (
-        assign_range_bucket(keys.select(key), manifest, key)
-        .observe(obs, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(int(b) for b in obs.get["b"])
-    _begin_commit(spark, target_path, v + 1, writer)
+    t = _open_table(spark, target_path, "delete_versioned", key)
+    v = t.v
+    # r16 column mapping: the key frame arrives under its logical name;
+    # the assigned keys are checkpointed once (r16 — the DV union reads
+    # the checkpoint instead of recomputing the keys pipeline)
+    keys = _to_physical(keys.select(key), t.sch, "delete_versioned")
+    assigned, touched = _assign_touched(keys.select(t.key), t.manifest, t.key)
+    commit = _Commit(spark, target_path, v + 1, writer)
     dv_new = assigned.select(
-        "_kr", key, F.lit(v + 1).cast("long").alias("live_gen")
+        "_kr", t.key, F.lit(v + 1).cast("long").alias("live_gen")
     )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        dv_new
-        if old_dv is None
-        else old_dv.join(dv_new.select(key), key, "left_anti").unionByName(
-            dv_new
-        )
+    # data untouched: the DV write is the commit's only Spark job, and
+    # the manifest carries forward verbatim as a byte copy (r16)
+    return commit.publish(
+        "DELETE",
+        touched,
+        manifest=f"{target_path}/_manifest/v={v}",
+        dv=_dv_union(_read_dv(spark, target_path, v), dv_new, t.key),
+        meta=commit_meta,
     )
-    # the DV write (the commit's only Spark job) overlaps with the
-    # driver-side metadata work — manifest byte-copy and sidecar
-    # writes (r17, guide §2.6); the _SUCCESS commit point lands last
-    def _metadata() -> None:
-        # data untouched: the manifest carries forward verbatim — a
-        # driver-side byte copy, not a Spark job (r16); _SUCCESS
-        # deferred past the DV write below
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
-            commit=False,
-        )
-        # meta before the manifest commit point — see upsert_versioned
-        if commit_meta is not None:
-            _write_commit_meta(spark, target_path, v + 1, commit_meta)
-        _write_commit_op(
-            spark, target_path, v + 1, "DELETE", changed_buckets=touched
-        )
-
-    _run_concurrent(
-        lambda: _write_dv(dv_state, target_path, v + 1), _metadata
-    )
-    _write_small_file(
-        spark, f"{target_path}/_manifest/v={v + 1}/_SUCCESS", ""
-    )
-    return v + 1
 
 
 def merge_arms_versioned_dv(
@@ -2837,57 +2900,37 @@ def merge_arms_versioned_dv(
     update_arms, delete_codes, insert_codes, _bs = _arm_actions(
         matched, not_matched
     )
-    versions = _list_versions(spark, f"{target_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"merge_arms_versioned_dv: no table at {target_path} — "
-            "bootstrap with versioned_layout_write"
-        )
     if auto_evolve:
         # Delta's MERGE WITH SCHEMA EVOLUTION: unknown staging columns
         # become declared columns (metadata-only commits) BEFORE the
         # merge, so update/insert arms can take them
         _auto_evolve_schema(spark, target_path, staging)
-        versions = _list_versions(spark, f"{target_path}/_manifest")
-    v = versions[-1]
-    manifest = _read_manifest(spark, target_path, v)
-    stats_cols = _stats_cols_of(manifest)
+    t = _open_table(spark, target_path, "merge_arms_versioned_dv", key)
+    v, sch = t.v, t.sch
     # r16 column mapping: arm conditions and staging use LOGICAL names,
     # so the merge computes in logical space — the live read projects
     # physical->logical here, and the fresh rows translate back to the
-    # files' frozen physical names at the write boundary below
-    sch = _schema_as_of(spark, target_path)
-    # the staged assignment is checkpointed ONCE with the touched-
-    # bucket set riding the materialization as an Observation (r17 —
-    # the plain DV upsert's r16 treatment): previously the assignment
-    # pipeline ran twice (a distinct-collect job for `touched`, then
-    # again as the build side of the arm-classification join below)
-    from pyspark.sql import Observation
-
-    obs_t = Observation()
-    assigned = (
-        assign_range_bucket(staging, manifest, key)
-        .observe(obs_t, F.collect_set("_kr").alias("b"))
-        .localCheckpoint(eager=True)
-    )
-    touched = sorted(int(b) for b in obs_t.get["b"])
+    # files' frozen physical names at the write boundary below. The
+    # staged assignment is checkpointed once (r17 — it is also the
+    # build side of the arm-classification join below)
+    assigned, touched = _assign_touched(staging, t.manifest, key)
     live = _project_logical(
         _apply_dv(
             _read_gen_dirs(
                 spark,
                 target_path,
-                [r for r in manifest.collect() if r._kr in set(touched)],
+                [r for r in t.manifest.collect() if r._kr in set(touched)],
             ),
             _read_dv(spark, target_path, v),
         ).drop("_gen", "_kr"),
         sch,
     )
     table_cols = live.columns
-    t = live.alias("t")
+    tl = live.alias("t")
     s = assigned.alias("s")
     # right join: every staging key (matched or not); target-only rows
     # never enter — they are no-ops by construction in the DV tier
-    joined = t.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "right")
+    joined = tl.join(s, F.col(f"t.{key}") == F.col(f"s.{key}"), "right")
     has_t = F.col(f"t.{key}").isNotNull()
     classified = joined.withColumn(
         # right join: the staging side is always present
@@ -2969,30 +3012,13 @@ def merge_arms_versioned_dv(
     # nor moved a cutpoint, so `resolved` (computed pre-gate) is still
     # exactly what a serial execution would produce; the DV union
     # below re-reads the winner's committed state.
-    admitted_over: list[int] = []
-    writer = writer or _unique_writer()
-    while True:
-        try:
-            _begin_commit(spark, target_path, v + 1, writer)
-            break
-        except ConcurrentWriteError:
-            if not admit_disjoint:
-                raise
-            if not _wait_for_commit(spark, target_path, v + 1):
-                raise  # crashed holder: rebase/rollback path decides
-            win = _commit_op_payload(spark, target_path, v + 1) or {}
-            op_name = win.get("operation")
-            tier = (win.get("parameters") or {}).get("tier")
-            cb = win.get("changed_buckets")
-            admissible = (
-                op_name == "DELETE" or (op_name == "MERGE" and tier == "mor")
-            )
-            if not admissible or cb is None or set(cb) & set(touched):
-                raise
-            admitted_over.append(v + 1)
-            v = v + 1
-            # the winner may have appended manifest rows in ITS buckets
-            manifest = _read_manifest(spark, target_path, v)
+    commit = _Commit(
+        spark, target_path, v + 1, writer,
+        admit=touched if admit_disjoint else None,
+    )
+    v = commit.version - 1
+    if commit.admitted_over:  # the winners appended rows in THEIR buckets
+        t = t._replace(v=v, manifest=_read_manifest(spark, target_path, v))
     fresh = resolved.where(
         F.col("_arm").isin(list(update_arms) + insert_codes)
     ).drop("_arm").withColumn("_gen", F.lit(v + 1).cast("long"))
@@ -3010,7 +3036,6 @@ def merge_arms_versioned_dv(
     # disk (files, DV, manifest stats); `fresh` itself stays logical
     # for the returned frame
     fresh_phys = _to_physical(fresh, sch, "merge_arms_versioned_dv")
-    key_phys = _phys_name(sch, key) if sch is not None else key
     wrote_data = (n_updated + n_inserted) > 0
     # DV entries for every CLAIMED key: updates+inserts point at their
     # fresh copy, deletes point at a generation holding no copy.
@@ -3018,83 +3043,31 @@ def merge_arms_versioned_dv(
     # get NO entry — their state is untouched by this commit.
     claimed = resolved.where(~F.col("_arm").isin(["noop", "skip"])).select(
         "_kr",
-        F.col(key).alias(key_phys),  # DVs carry the physical key name
+        F.col(key).alias(t.key),  # DVs carry the physical key name
         F.lit(v + 1).cast("long").alias("live_gen"),
     )
-    old_dv = _read_dv(spark, target_path, v)
-    dv_state = (
-        claimed
-        if old_dv is None
-        else old_dv.join(
-            claimed.select(key_phys), key_phys, "left_anti"
-        ).unionByName(claimed)
+    commit.publish(
+        "MERGE",
+        # the CDF change set is the CLAIMED keys' buckets (noop/skip
+        # rows wrote no DV entry) — the checkpoint's Observation above
+        claimed_buckets,
+        # a zero-data-file commit carries the manifest verbatim
+        manifest=(
+            _manifest_rows(t, fresh_phys, t.manifest)
+            if wrote_data
+            else f"{target_path}/_manifest/v={v}"
+        ),
+        data=fresh_phys if wrote_data else None,
+        buckets=touched,
+        dv=_dv_union(_read_dv(spark, target_path, v), claimed, t.key),
+        meta=commit_meta,
+        tier="mor",
+        arms=len(tuple(matched)) + len(tuple(not_matched)),
     )
-    if wrote_data:
-        stats_src = fresh_phys
-        for c in stats_cols:
-            if c not in stats_src.columns:
-                stats_src = stats_src.withColumn(
-                    c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-                )
-        point_cols = _point_cols_of(manifest)
-        new_manifest = manifest.unionByName(
-            _with_bloom(
-                stats_src.groupBy("_kr").agg(
-                    *_manifest_agg(key_phys, stats_cols)
-                ),
-                stats_src,
-                point_cols,
-                _bloom_bits_of(manifest, point_cols) if point_cols else 0,
-            ),
-            allowMissingColumns=True,  # clones: old rows may carry `ext`
-        )
-    else:
-        new_manifest = manifest  # zero-data-file commit: carry forward
-
-    # data append, DV write, and manifest aggregation overlap (r17,
-    # guide §2.6) — all are independent reads of the materialized
-    # resolved checkpoint / committed state; _SUCCESS lands last
-    def _write_data() -> None:
-        if not wrote_data:
-            return
-        _clean_uncommitted_generation(spark, target_path, touched, v + 1)
-        fresh_phys.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{target_path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(
-        _write_data,
-        lambda: _write_dv(dv_state, target_path, v + 1),
-        m_collect if wrote_data else None,
-    )
-    # meta before the manifest commit point — see upsert_versioned
-    if commit_meta is not None:
-        _write_commit_meta(spark, target_path, v + 1, commit_meta)
-    # the CDF change set is the CLAIMED keys' buckets (noop/skip rows
-    # wrote no DV entry) — captured by the checkpoint's Observation
-    # above, no extra job
-    _write_commit_op(
-        spark, target_path, v + 1, "MERGE",
-        changed_buckets=claimed_buckets,
-        tier="mor", arms=len(tuple(matched)) + len(tuple(not_matched)),
-    )
-    if wrote_data:
-        m_publish()
-    else:
-        # zero-data-file commit: the manifest carries forward VERBATIM
-        # — a driver-side byte copy like every other carry commit (r17)
-        _copy_manifest_dir(
-            spark,
-            f"{target_path}/_manifest/v={v}",
-            f"{target_path}/_manifest/v={v + 1}",
-        )
     out = fresh.drop("_gen")
     out.version = v + 1
     out.touched_buckets = touched
-    out.admitted_over = admitted_over
+    out.admitted_over = commit.admitted_over
     out.n_updated = int(n_updated)
     out.n_deleted = int(n_deleted)
     out.n_inserted = int(n_inserted)
@@ -3225,39 +3198,21 @@ def compact_table(
     contract as every layout.py caller. The bucket assignment itself
     (key ranges) is untouched: z-clustering changes file-internal
     order and statistics, never commit semantics."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
     # compaction rewrites files, which keep their frozen PHYSICAL
     # names (r16 column mapping) — caller-supplied names translate
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
-    zorder_by = [_phys_name(sch, c, "zorder_by") for c in (zorder_by or [])]
-    if zorder_by:
-        # promoted dimensions join the maintained stats set (the key
-        # itself already has min_key/max_key)
-        stats_cols = stats_cols + [
-            c for c in zorder_by if c not in stats_cols and c != key
-        ]
-    live = read_version(spark, path, v, physical=True)  # DV-resolved
-    # DROPped columns' retired physicals are scrubbed by any full
-    # rewrite (r16 — Delta's REORG column purge): time travel to
-    # pre-drop versions still reads the OLD generations, which keep
-    # the bytes until vacuum
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in live.columns
-    ]
-    if retired:
-        live = live.drop(*retired)
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    compacted = (
-        live.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
+    t = _open_table(spark, path, "compact_table", key)
+    v, key = t.v, t.key
+    zorder_by = [_phys_name(t.sch, c, "zorder_by") for c in (zorder_by or [])]
+    # promoted dimensions join the maintained stats set (the key
+    # itself already has min_key/max_key)
+    t = t._replace(
+        stats_cols=t.stats_cols
+        + [c for c in zorder_by if c not in t.stats_cols and c != key]
     )
+    # DV-resolved, and a full rewrite scrubs retired columns
+    live = _drop_retired(read_version(spark, path, v, physical=True), t.sch)
+    commit = _Commit(spark, path, v + 1, writer)
+    compacted = _new_generation(live, v + 1)
     to_write = compacted
     if zorder_by:
         from data_pipeline_bigquery_to_sftp_server_spark.operators.layout import (
@@ -3279,39 +3234,18 @@ def compact_table(
             F.col("_gen"),
             zorder_key([F.col(c) for c in zorder_by], bits=int(zorder_bits)),
         )
-    point_cols = _point_cols_of(manifest)
-    new_manifest = _with_bloom(
-        compacted.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-        compacted,
-        point_cols,
-        _bloom_bits_of(manifest, point_cols) if point_cols else 0,
-    )
-
-    # data rewrite and manifest aggregation overlap (r17, guide §2.6):
-    # both read the materialized checkpoint; _SUCCESS lands last
-    def _write_data() -> None:
-        _clean_uncommitted_generation(
-            spark, path,
-            # manifest is a LocalRelation: the bucket set is a free
-            # driver-side projection, not a distinct-aggregation job
-            sorted({r[0] for r in manifest.select("_kr").collect()}),
-            v + 1,
-        )
-        to_write.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE", changed_buckets=[],
+    new_manifest = _manifest_rows(t, compacted)
+    # no DV at v+1: the compacted generation holds only live rows
+    new_manifest.version = commit.publish(
+        "OPTIMIZE",
+        manifest=new_manifest,
+        data=to_write,
+        # manifest is a LocalRelation: the bucket set is a free
+        # driver-side projection, not a distinct-aggregation job
+        buckets=sorted({r[0] for r in t.manifest.select("_kr").collect()}),
         mode="zorder" if zorder_by else "full",
         **({"zorder_by": list(zorder_by)} if zorder_by else {}),
     )
-    m_publish()
-    new_manifest.version = v + 1
     return new_manifest
 
 
@@ -3342,16 +3276,9 @@ def compact_small_generations(
     Returns the new manifest frame with ``version``/``n_packed_dirs``/
     ``n_new_dirs`` attached; a table with nothing to pack returns the
     CURRENT manifest (no empty commit) with n_packed_dirs = 0."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
     # packed rewrites keep frozen PHYSICAL names (r16 column mapping)
-    key = _phys_name(_schema_as_of(spark, path, v), key)
+    t = _open_table(spark, path, "compact_small_generations", key)
+    v, manifest = t.v, t.manifest
     jvm, fs, _ = _fs(spark, path)
     rows = manifest.collect()
     from collections import defaultdict
@@ -3373,45 +3300,28 @@ def compact_small_generations(
         manifest.n_packed_dirs = 0
         manifest.n_new_dirs = 0
         return manifest
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
+    commit = _Commit(spark, path, v + 1, writer)
     dv = _read_dv(spark, path, v)
-    data = _apply_dv(
-        _read_gen_dirs(
-            spark,
-            path,
-            [by_gen[(b, g)] for b, gs in packed.items() for g in gs],
+    fresh = _new_generation(
+        _apply_dv(
+            _read_gen_dirs(
+                spark,
+                path,
+                [by_gen[(b, g)] for b, gs in packed.items() for g in gs],
+            ),
+            dv,
         ),
-        dv,
+        v + 1,
     )
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
     cond = F.lit(False)
     for b, gs in packed.items():
         cond = cond | (
             (F.col("_kr") == int(b)) & F.col("gen").isin([int(g) for g in gs])
         )
-    new_manifest = manifest.where(~cond).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
-        ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
-    )
-    # data rewrite, the DV's verbatim byte-copy carry (r16), and the
-    # manifest aggregation overlap (r17, guide §2.6)
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, list(packed), v + 1)
+    new_manifest = _manifest_rows(t, fresh, manifest.where(~cond))
+    new_manifest.version = commit.publish(
+        "OPTIMIZE",
+        manifest=new_manifest,
         # packed files are RE-SORTED by (bucket, table key) on the way
         # out (r15 — Delta liquid clustering's OPTIMIZE behavior): for
         # a table bootstrapped over a Morton key this incrementally
@@ -3421,25 +3331,14 @@ def compact_small_generations(
         # bytes — no shuffle. ``_gen`` is one value here; it leads the
         # sort with ``_kr`` so the writer keeps the key order (see
         # compact_table).
-        fresh.sortWithinPartitions("_kr", "_gen", key).write.mode(
-            "append"
-        ).partitionBy("_kr", "_gen").parquet(f"{path}/data")
-
-    def _carry_dv() -> None:
+        data=fresh.sortWithinPartitions("_kr", "_gen", t.key),
+        buckets=list(packed),
         # fresh copies at v+1 satisfy every surviving entry's
-        # `_gen >= live_gen`, dead keys wrote none
-        if dv is not None:
-            _copy_dir(spark, f"{path}/_dv/v={v}", f"{path}/_dv/v={v + 1}")
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
+        # `_gen >= live_gen`, dead keys wrote none: the DV carries
+        # verbatim (byte copy, r16)
+        dv=None if dv is None else f"{path}/_dv/v={v}",
+        mode="binpack",
     )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE", changed_buckets=[], mode="binpack"
-    )
-    m_publish()
-    new_manifest.version = v + 1
     new_manifest.n_packed_dirs = sum(len(gs) for gs in packed.values())
     new_manifest.n_new_dirs = len(packed)
     return new_manifest
@@ -3467,17 +3366,9 @@ def purge_deletion_vectors(
     the current manifest without committing. Returns the new manifest
     with ``version`` / ``n_purged_buckets`` / ``n_dv_entries``
     (entries folded) attached."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
     # rewrites land under frozen PHYSICAL names (r16 column mapping)
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
+    t = _open_table(spark, path, "purge_deletion_vectors", key)
+    v, manifest = t.v, t.manifest
     dv = _read_dv(spark, path, v)
     if dv is None:
         manifest.version = v
@@ -3492,64 +3383,34 @@ def purge_deletion_vectors(
     ).first()
     debt = sorted(int(b) for b in _dv_facts["b"])
     n_entries = int(_dv_facts["n"])
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    rows = manifest.collect()
-    data = _apply_dv(
-        _read_gen_dirs(spark, path, [r for r in rows if r._kr in set(debt)]),
-        dv,
-    )
+    commit = _Commit(spark, path, v + 1, writer)
     # rewritten buckets scrub DROPped columns' retired physicals too
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in data.columns
-    ]
-    if retired:
-        data = data.drop(*retired)
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.where(
-        ~F.col("_kr").isin([int(b) for b in debt])
-    ).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
+    fresh = _new_generation(
+        _drop_retired(
+            _apply_dv(
+                _read_gen_dirs(
+                    spark, path, [r for r in manifest.collect() if r._kr in set(debt)]
+                ),
+                dv,
+            ),
+            t.sch,
         ),
-        allowMissingColumns=True,  # clones: old rows may carry `ext`
+        v + 1,
     )
-    # deliberately NO _dv/v=<v+1> write: the debt is folded — every
-    # entry pointed into a rewritten bucket, and the fresh generation
-    # holds exactly the live rows. Data rewrite and manifest
-    # aggregation overlap (r17, guide §2.6).
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, debt, v + 1)
+    new_manifest = _manifest_rows(t, fresh, _without_buckets(manifest, debt))
+    # deliberately NO DV at v+1: the debt is folded — every entry
+    # pointed into a rewritten bucket, and the fresh generation holds
+    # exactly the live rows
+    new_manifest.version = commit.publish(
+        "REORG",
+        manifest=new_manifest,
         # one task per bucket (as compact_table): unshuffled, every
         # scan task would write its own file into each bucket
-        fresh.repartition("_kr").sortWithinPartitions(
-            "_kr", "_gen", key
-        ).write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
+        data=fresh.repartition("_kr").sortWithinPartitions("_kr", "_gen", t.key),
+        buckets=debt,
+        mode="purge",
+        purged_buckets=len(debt),
     )
-    _run_concurrent(_write_data, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "REORG",
-        changed_buckets=[], mode="purge", purged_buckets=len(debt),
-    )
-    m_publish()
-    new_manifest.version = v + 1
     new_manifest.n_purged_buckets = len(debt)
     new_manifest.n_dv_entries = int(n_entries)
     return new_manifest
@@ -3576,16 +3437,8 @@ def compact_key_range(
     entries are already optimal and are skipped even when in range.
     Returns the new manifest with ``version`` / ``n_compacted_buckets``
     attached (no work -> current manifest, no commit)."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
-    sch = _schema_as_of(spark, path, v)
-    key = _phys_name(sch, key)
+    t = _open_table(spark, path, "compact_key_range", key)
+    v, manifest = t.v, t.manifest
     rows = manifest.collect()
     dv = _read_dv(spark, path, v)
     dv_buckets = (
@@ -3606,66 +3459,32 @@ def compact_key_range(
         manifest.version = v
         manifest.n_compacted_buckets = 0
         return manifest
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
-    data = _apply_dv(
-        _read_gen_dirs(spark, path, [r for r in rows if r._kr in set(hit)]),
-        dv,
-    )
-    retired = [
-        c for c in (sch or {}).get("retired", []) if c in data.columns
-    ]
-    if retired:  # scoped rewrites scrub dropped columns too
-        data = data.drop(*retired)
-    fresh = (
-        data.drop("_gen")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
-    )
-    stats_src = fresh
-    for c in stats_cols:
-        if c not in stats_src.columns:
-            stats_src = stats_src.withColumn(
-                c, F.lit(None).cast(manifest.schema[f"min_{c}"].dataType)
-            )
-    new_manifest = manifest.where(
-        ~F.col("_kr").isin([int(b) for b in hit])
-    ).unionByName(
-        _with_bloom(
-            stats_src.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-            stats_src,
-            point_cols,
-            bloom_bits,
+    commit = _Commit(spark, path, v + 1, writer)
+    # scoped rewrites scrub dropped columns too
+    fresh = _new_generation(
+        _drop_retired(
+            _apply_dv(
+                _read_gen_dirs(spark, path, [r for r in rows if r._kr in set(hit)]),
+                dv,
+            ),
+            t.sch,
         ),
-        allowMissingColumns=True,
+        v + 1,
     )
-
-    # data rewrite, DV carry (compacted buckets' entries fold away;
-    # other buckets' byte-copy verbatim — r17), and the manifest
-    # aggregation overlap (guide §2.6); _SUCCESS lands last
-    def _write_data() -> None:
-        _clean_uncommitted_generation(spark, path, hit, v + 1)
+    new_manifest = _manifest_rows(t, fresh, _without_buckets(manifest, hit))
+    new_manifest.version = commit.publish(
+        "OPTIMIZE",
+        manifest=new_manifest,
         # one task per bucket (as compact_table): unshuffled, every
         # scan task would write its own file into each bucket
-        fresh.repartition("_kr").sortWithinPartitions(
-            "_kr", "_gen", key
-        ).write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    def _carry_dv() -> None:
-        if dv is not None:
-            _carry_dv_except(spark, path, dv, v, v + 1, hit)
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
+        data=fresh.repartition("_kr").sortWithinPartitions("_kr", "_gen", t.key),
+        buckets=hit,
+        # compacted buckets' DV entries fold away; the other buckets'
+        # byte-copy verbatim (r17)
+        dv=None if dv is None else (dv, v, hit),
+        mode="range",
+        n_buckets_compacted=len(hit),
     )
-    _run_concurrent(_write_data, _carry_dv, m_collect)
-    _write_commit_op(
-        spark, path, v + 1, "OPTIMIZE",
-        changed_buckets=[], mode="range", n_buckets_compacted=len(hit),
-    )
-    m_publish()
-    new_manifest.version = v + 1
     new_manifest.n_compacted_buckets = len(hit)
     return new_manifest
 
@@ -3695,61 +3514,38 @@ def rebucket_table(
     the same O(table) price any re-layout costs; old generations stay
     until vacuumed. Returns the new manifest with ``version``
     attached."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no table at {path}")
-    v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
-    stats_cols = _stats_cols_of(manifest)
-    point_cols = _point_cols_of(manifest)
-    bloom_bits = _bloom_bits_of(manifest, point_cols) if point_cols else 0
     # the re-layout rewrites files under frozen PHYSICAL names (r16)
-    key = _phys_name(_schema_as_of(spark, path, v), key)
+    t = _open_table(spark, path, "rebucket_table", key)
+    v, key = t.v, t.key
     live = read_version(spark, path, v, physical=True).drop("_gen", "_kr")
-    _begin_commit(spark, path, v + 1, writer or _unique_writer())
+    commit = _Commit(spark, path, v + 1, writer)
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
         with_global_rank,
     )
 
     ranked, n_total = with_global_rank(live, [key])
-    fresh = (
+    fresh = _new_generation(
         ranked.withColumn(
             "_kr",
             F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}").cast(
                 "long"
             ),
-        )
-        .drop("grank")
-        .withColumn("_gen", F.lit(v + 1).cast("long"))
-        .localCheckpoint(eager=True)
+        ).drop("grank"),
+        v + 1,
     )
-    new_manifest = _with_bloom(
-        fresh.groupBy("_kr").agg(*_manifest_agg(key, stats_cols)),
-        fresh,
-        point_cols,
-        bloom_bits,
+    new_manifest = _manifest_rows(t, fresh)
+    new_manifest.version = commit.publish(
+        "REBUCKET",
+        manifest=new_manifest,
+        data=fresh,
+        buckets=range(int(n_buckets)),
+        table_files={
+            "_table.json": _table_meta_json(
+                spark, path, key=key, n_buckets=int(n_buckets)
+            )
+        },
+        n_buckets=int(n_buckets),
     )
-
-    # data rewrite and manifest aggregation overlap (r17, guide §2.6)
-    def _write_data() -> None:
-        _clean_uncommitted_generation(
-            spark, path, list(range(int(n_buckets))), v + 1
-        )
-        fresh.write.mode("append").partitionBy("_kr", "_gen").parquet(
-            f"{path}/data"
-        )
-
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{path}/_manifest/v={v + 1}"
-    )
-    _run_concurrent(_write_data, m_collect)
-    _write_table_meta(spark, path, key=key, n_buckets=int(n_buckets))
-    _write_commit_op(
-        spark, path, v + 1, "REBUCKET",
-        changed_buckets=[], n_buckets=int(n_buckets),
-    )
-    m_publish()
-    new_manifest.version = v + 1
     return new_manifest
 
 
@@ -4034,17 +3830,7 @@ def restore_version(
             f"restore_version: version {version} not in {versions} "
             "(already vacuumed, or never committed)"
         )
-    _begin_commit(spark, path, v_new, writer or _unique_writer())
-    jvm, fs, _ = _fs(spark, path)
-    # DV state is part of the snapshot: restore it alongside (absence
-    # of a DV at the restored version means absence at the new one —
-    # a stale _dv/v=v_new from a rolled-back attempt must not leak in)
-    for stale in (f"{path}/_dv/v={v_new}", f"{path}/_manifest/v={v_new}.schema"):
-        if fs.exists(jvm.org.apache.hadoop.fs.Path(stale)):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(stale), True)
-    dv = _read_dv(spark, path, version)
-    if dv is not None:  # verbatim carry: byte copy, no Spark job (r16)
-        _copy_dir(spark, f"{path}/_dv/v={version}", f"{path}/_dv/v={v_new}")
+    commit = _Commit(spark, path, v_new, writer)
     # the COLUMN MAPPING is part of the snapshot too (r16 — Delta's
     # RESTORE restores metadata): when a mapping is in force anywhere
     # in history, re-commit the restored version's schema (explicit
@@ -4054,8 +3840,6 @@ def restore_version(
     # ran a schema DDL skip all of this.
     restored_sch = None
     if _schema_as_of(spark, path) is not None:
-        import json as _json
-
         restored_sch = _schema_as_of(spark, path, version)
         if restored_sch is None:
             man_r = _read_manifest(spark, path, version)
@@ -4072,34 +3856,18 @@ def restore_version(
                 ],
                 "retired": [],
             }
-        _write_small_file(
-            spark,
-            f"{path}/_manifest/v={v_new}.schema",
-            _json.dumps(
-                {
-                    k: s
-                    for k, s in restored_sch.items()
-                    if k != "since_version"
-                },
-                sort_keys=True,
-            ),
-        )
-    # meta before the manifest commit point — see upsert_versioned
-    if commit_meta is not None:
-        _write_commit_meta(spark, path, v_new, commit_meta)
-    _write_commit_op(
-        spark, path, v_new, "RESTORE",
-        changed_buckets=[], restored_version=int(version),
+    # restore-as-commit re-publishes the restored manifest and DV
+    # state verbatim — driver-side byte copies, not Spark jobs (r16);
+    # no DV at the restored version means none at the new one
+    return commit.publish(
+        "RESTORE",
+        manifest=f"{path}/_manifest/v={version}",
+        dv=_dv_dir(spark, path, version),
+        schema=restored_sch,
+        meta=commit_meta,
+        restored_version=int(version),
         schema_change=bool(restored_sch),
     )
-    # restore-as-commit re-publishes the restored manifest verbatim —
-    # a driver-side byte copy, not a Spark read+rewrite job (r16)
-    _copy_manifest_dir(
-        spark,
-        f"{path}/_manifest/v={version}",
-        f"{path}/_manifest/v={v_new}",
-    )
-    return v_new
 
 
 def clone_table(
@@ -4157,52 +3925,37 @@ def clone_table(
         manifest = manifest.withColumn("ext", F.lit(f"{src_path}/data"))
     # reads src's manifest, writes dst's: disjoint paths, no checkpoint
     v0 = max(int(r.gen) for r in manifest.select("gen").collect())
-    _begin_commit(spark, dst_path, v0, writer or _unique_writer())
-    dv = _read_dv(spark, src_path, v)
-    if dv is not None:  # verbatim carry: byte copy, no Spark job (r16)
-        _copy_dir(spark, f"{src_path}/_dv/v={v}", f"{dst_path}/_dv/v={v0}")
-    # the COLUMN MAPPING travels with the clone (r16): the fork
-    # version's ``.schema`` sidecar is the source's schema as of the
-    # cloned version, and the fork op carries ``schema_change`` so
-    # _schema_as_of accepts it — a clone of a renamed table reads
-    # under the same logical names as its source did
+    commit = _Commit(spark, dst_path, v0, writer)
+    # table METADATA travels with the clone (Delta clones constraints):
+    # a fork of a constrained table is constrained, and _table.json
+    # (key / layout / stats declarations) keeps SQL DML resolving the
+    # merge key. Tags deliberately do NOT travel — they are pointers
+    # into the SOURCE's version history, which the clone does not
+    # share (its numbering starts at the fork), and refs staying behind
+    # matches Iceberg clones.
+    table_files = {}
+    for name in ("_constraints.json", "_table.json"):
+        raw = _read_small_file(spark, f"{src_path}/_manifest/{name}")
+        if raw is not None:
+            table_files[name] = raw
+    # the COLUMN MAPPING travels too (r16): the fork version's
+    # ``.schema`` sidecar is the source's schema as of the cloned
+    # version, and the fork op carries ``schema_change`` so
+    # _schema_as_of accepts it — a clone of a renamed table reads under
+    # the same logical names as its source did. The DV state is a byte
+    # copy, and the manifest (a LocalRelation + one literal column)
+    # costs ZERO Spark jobs to write (r17).
     src_sch = _schema_as_of(spark, src_path, v)
-    if src_sch is not None:
-        import json as _json
-
-        _write_small_file(
-            spark,
-            f"{dst_path}/_manifest/v={v0}.schema",
-            _json.dumps(
-                {k: s for k, s in src_sch.items() if k != "since_version"},
-                sort_keys=True,
-            ),
-        )
-    _write_commit_op(
-        spark, dst_path, v0, "CLONE",
-        changed_buckets=[], source=src_path, source_version=int(v),
+    return commit.publish(
+        "CLONE",
+        manifest=manifest,
+        dv=_dv_dir(spark, src_path, v),
+        schema=src_sch,
+        table_files=table_files,
+        source=src_path,
+        source_version=int(v),
         schema_change=bool(src_sch),
     )
-    # table METADATA travels with the clone (Delta clones constraints):
-    # a fork of a constrained table is constrained. Tags deliberately
-    # do NOT travel — they are pointers into the SOURCE's version
-    # history, which the clone does not share (its numbering starts at
-    # the fork), and refs staying behind matches Iceberg clones.
-    con = _read_small_file(spark, f"{src_path}/_manifest/_constraints.json")
-    if con is not None:
-        _write_small_file(
-            spark, f"{dst_path}/_manifest/_constraints.json", con
-        )
-    # ... and so does _table.json (key / layout / stats declarations):
-    # a clone is the same logical table forked, so SQL DML keeps
-    # resolving its merge key without a call-site parameter
-    tbl = _read_small_file(spark, f"{src_path}/_manifest/_table.json")
-    if tbl is not None:
-        _write_small_file(spark, f"{dst_path}/_manifest/_table.json", tbl)
-    # the clone's bootstrap manifest is a LocalRelation + one literal
-    # column: the driver-side write costs ZERO Spark jobs (r17)
-    _write_manifest(spark, manifest, f"{dst_path}/_manifest/v={v0}")
-    return v0
 
 
 def _with_tag_lock(spark: SparkSession, path: str, mutate) -> dict[str, int]:
