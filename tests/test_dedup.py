@@ -317,7 +317,8 @@ def test_connected_components_null_endpoints_and_self_pairs(spark):
 
 def _jobs(spark, run) -> int:
     """Spark jobs ``run`` schedules, read off the DAGScheduler's job-id
-    counter (the tools/job_count.py method)."""
+    counter (the count bench.py's per-item ``jobs`` must match,
+    tests/test_bench.py)."""
     sc = spark.sparkContext._jsc.sc()
     before = int(sc.dagScheduler().nextJobId())
     run()

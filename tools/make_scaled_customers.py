@@ -7,11 +7,12 @@ here: these operators key on c_custkey (all distinct by construction)
 and the line/CDC semantics derive from per-row field values, so
 copying preserves the workload's shape while growing its volume.
 
-Also drops a copy of the sf0.1 documents table into the output dir so
-tools/scale_curve.py's warmup query can run against the same dir.
+Also drops a copy of the sf0.1 documents table into the output dir,
+so a `python bench.py --sf-dir <out_dir>` run can mix document queries
+in with the customer ones.
 
 Usage: python tools/make_scaled_customers.py [out_dir] [factor]
-       (defaults: /root/repo/.scratch/cust10x 10)
+       (defaults: <repo>/.scratch/cust10x 10)
 """
 
 from __future__ import annotations
@@ -25,10 +26,12 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1"
+# derived corpora go to the repo's git-ignored .scratch/
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/cust10x"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "cust10x")
     factor = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out_dir, exist_ok=True)
     t = pq.read_table(f"{SRC}/customer.parquet")

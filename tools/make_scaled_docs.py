@@ -24,7 +24,7 @@ scaling measurements — correctness oracles stay on the driver-provided
 /root/testdata parquet, untouched.
 
 Usage: python tools/make_scaled_docs.py [out_dir] [n_docs]
-       (defaults: /root/repo/.scratch/sf1x 50000)
+       (defaults: <repo>/.scratch/sf1x 50000)
 """
 
 from __future__ import annotations
@@ -38,12 +38,14 @@ import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1/documents.parquet"
 SEED = 42
+# derived corpora go to the repo's git-ignored .scratch/
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 DUP_FRAC = 0.025  # fraction of base docs that get one mutated twin
 MUTATE_P = 0.05  # per-word resample probability in the twin
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1x"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf1x")
     n_docs = int(sys.argv[2]) if len(sys.argv) > 2 else 50_000
     rng = np.random.default_rng(SEED)
 

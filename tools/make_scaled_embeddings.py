@@ -19,7 +19,7 @@ Output: {out_dir}/embeddings.parquet with the sf0.1 schema
 correctness oracles stay on /root/testdata.
 
 Usage: python tools/make_scaled_embeddings.py [out_dir] [n_vecs]
-       (defaults: /root/repo/.scratch/sf1x 20000)
+       (defaults: <repo>/.scratch/sf1x 20000)
 """
 
 from __future__ import annotations
@@ -33,12 +33,14 @@ import pyarrow.parquet as pq
 
 SRC = "/root/testdata/sf0.1/embeddings.parquet"
 SEED = 42
+# derived corpora go to the repo's git-ignored .scratch/
+SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
 DUP_FRAC = 0.025  # fraction of base vectors that get one twin
 TWIN_SIGMA = 0.04  # per-dim twin noise -> cos ~ 0.95 at 64 dims
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scratch/sf1x"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(SCRATCH, "sf1x")
     n_vecs = int(sys.argv[2]) if len(sys.argv) > 2 else 20_000
     rng = np.random.default_rng(SEED)
 

@@ -6,10 +6,12 @@ rerunning .explain by hand. Usage: python tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from bench import HEADLINE
 from data_pipeline_bigquery_to_sftp_server_spark.plans import explain
@@ -82,7 +84,7 @@ def main() -> None:
         "the multi-consumer training-style queries (verified for",
         "nb_classify: 24 static vs 12 distinct hash exchanges).",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote PLANS.md ({len(lines)} lines)")
 
