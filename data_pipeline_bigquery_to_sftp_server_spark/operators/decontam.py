@@ -14,9 +14,7 @@ the eval set, i.e. map-side, no shuffle of the training corpus. (Outer
 rather than semi on purpose: every gram row survives the join, so ONE
 per-doc rollup counts totals and hits together — a semi-join
 formulation needs a second derivation of the gram base plus a join
-back to restore clean docs.) The rollup shuffles doc keys only. With a
-large eval side, drop ``broadcast_eval`` and the join shuffles on the
-gram key like any fact-fact join.
+back to restore clean docs.) The rollup shuffles doc keys only.
 
 N-grams reuse :func:`dedup.shingle_hashes` (xxhash64-chained word
 grams folded to 32 bits, distinct per doc) so the gram id is a compact
@@ -131,7 +129,6 @@ def ngram_contamination(
     id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 4,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Per-training-document contamination report against an eval set.
 
@@ -141,9 +138,14 @@ def ngram_contamination(
     grams, rounded to 6dp. Documents shorter than ``n`` tokens fall
     back to their whole normalized text as a single gram (same rule as
     the dedup shinglers, so a verbatim short-question copy still hits).
+
+    Join choice: the eval side's distinct gram set is always broadcast,
+    so it must fit in executor memory (benchmarks are thousands of
+    documents, not billions); the training corpus is never shuffled
+    for the probe.
     """
     grams = shingle_hashes(F.col(text_col), n)
-    # One pass: every (doc, gram) row probes the (broadcast) eval gram
+    # One pass: every (doc, gram) row probes the broadcast eval gram
     # set via a LEFT join and a single per-doc aggregation counts both
     # totals and hits — no second join back to restore clean docs
     # (every gram row survives a left join, so every doc reaches the
@@ -152,14 +154,12 @@ def ngram_contamination(
     t_grams = ensure_parallelism(train).select(
         F.col(id_col), F.explode(grams).alias("_g")
     )
-    e_grams = (
+    e_grams = F.broadcast(
         ensure_parallelism(eval_df)
         .select(F.explode(shingle_hashes(F.col(text_col), n)).alias("_g"))
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    if broadcast_eval:
-        e_grams = F.broadcast(e_grams)
     return (
         t_grams.join(e_grams, "_g", "left")
         .groupBy(id_col)

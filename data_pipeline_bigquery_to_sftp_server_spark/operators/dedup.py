@@ -160,7 +160,6 @@ def minhash_lsh_pairs(
     ngram: int = 3,
     jaccard_threshold: float = 0.8,
     seed: int = 42,
-    broadcast_right: bool = False,
     max_bucket_rows: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via MinHash banding, verified with
@@ -191,11 +190,10 @@ def minhash_lsh_pairs(
     (exactness vs the brute-force oracle); cap-drop behavior pinned in
     test_dedup.
 
-    ``broadcast_right=True`` hash-joins against a broadcast copy of the
-    banded signatures instead of shuffling both sides — the right call
-    when the signature table fits in executor memory (signatures are
-    ~100 bytes/doc: tens of millions of docs per broadcast). Beyond
-    that, leave it off and let the bucket-key shuffle scale out.
+    Join choice: the band self-join carries no broadcast hint, so it
+    shuffles both sides on the bucket key and scales out with the
+    corpus; no side has to fit in executor memory (AQE may still
+    switch to a broadcast when a runtime side is small).
     """
     rows_per_band = num_hashes // bands
     # Shingle -> hash ids once; the pair join and the Jaccard verify both
@@ -236,10 +234,9 @@ def minhash_lsh_pairs(
         banded = banded.join(F.broadcast(hot), ["band", "bh"], "left_anti")
 
     left = banded.alias("l")
-    right = F.broadcast(banded.alias("r")) if broadcast_right else banded.alias("r")
     cand = (
         left.join(
-            right,
+            banded.alias("r"),
             (F.col("l.band") == F.col("r.band"))
             & (F.col("l.bh") == F.col("r.bh"))
             & (F.col("l._id") < F.col("r._id")),
@@ -397,7 +394,6 @@ def ngram_jaccard_pairs(
     ngram: int = 3,
     threshold: float = 0.5,
     bucket_col: Column | None = None,
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """All-pairs n-gram Jaccard within buckets.
 
@@ -412,13 +408,12 @@ def ngram_jaccard_pairs(
       |A| >= t*|B| and |B| >= t*|A|, so disproportionate pairs never
       materialize.
 
-    ``broadcast_right=True`` replaces the bucket-key shuffle join with a
-    broadcast hash join on the right side. Prefix blocking yields few
-    distinct buckets, so the shuffle join degrades to few tasks (key
-    skew); broadcasting keeps pair generation partitioned by the *left*
-    rows instead. Only valid while the hashed-shingle table fits in
-    executor memory — at full corpus scale use the default shuffle path
-    with a higher-cardinality ``bucket_col``.
+    Join choice: the pair join carries no broadcast hint, so it
+    shuffles both sides on the bucket key and no side has to fit in
+    executor memory (AQE may still switch to a broadcast when a
+    runtime side is small). Prefix blocking yields few distinct
+    buckets, so the shuffle can skew onto few tasks — pass a
+    higher-cardinality ``bucket_col`` at full corpus scale.
     """
     norm = normalize_text(F.col(text_col))
     bucket = bucket_col if bucket_col is not None else F.split(norm, " ")[0]
@@ -428,7 +423,7 @@ def ngram_jaccard_pairs(
         bucket.alias("_bk"),
     ).withColumn("_n", F.size("_hs"))
     l = base.alias("l")
-    r = F.broadcast(base.alias("r")) if broadcast_right else base.alias("r")
+    r = base.alias("r")
     t = F.lit(threshold)
     inter = F.size(F.array_intersect(F.col("l._hs"), F.col("r._hs"))).cast("double")
     # |A ∪ B| = |A| + |B| - |A ∩ B| — one array op per pair, not two.

@@ -180,9 +180,7 @@ def build_dedup_state(
     )
 
 
-def screen_against_state(
-    new: DataFrame, state: DedupState, broadcast_new: bool = True
-) -> DataFrame:
+def screen_against_state(new: DataFrame, state: DedupState) -> DataFrame:
     """Per-batch incremental dedup report against a prebuilt state —
     same one-row-per-new-doc contract as
     ``dedup.incremental_dedup_report``::
@@ -191,14 +189,14 @@ def screen_against_state(
 
     and bit-identical output (same oracle replays both): the hash-order
     prefix join is complete, the verify is the exact Jaccard, ranking
-    rounds to 6dp with ties on smallest corpus id. ``broadcast_new``
-    (default) broadcasts the delta prefix table so the corpus prefix
-    scan never shuffles; disable for jumbo back-fill batches."""
+    rounds to 6dp with ties on smallest corpus id.
+
+    Join choice: the new batch's prefix table is always broadcast, so
+    the corpus prefix scan never shuffles; the batch's prefixes must
+    fit in executor memory (split a jumbo back-fill into batches)."""
     id_col, text_col = state.id_col, state.text_col
     nbase = persist_tracked(_shingle_base(new, id_col, text_col, state.ngram))
-    nprefix = _hash_order_prefixes(nbase, state.threshold)
-    if broadcast_new:
-        nprefix = F.broadcast(nprefix)
+    nprefix = F.broadcast(_hash_order_prefixes(nbase, state.threshold))
     t = F.lit(float(state.threshold))
     cand = (
         state.prefixes.alias("c")

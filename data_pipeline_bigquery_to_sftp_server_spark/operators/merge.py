@@ -3892,12 +3892,14 @@ def clone_table(
     merge-on-read commits keep sharing untouched source files forever.
 
     Generation-number contract: dst's first version number is one
-    above the max generation the cloned manifest references, so every
-    later local generation strictly exceeds every shared one — a
-    clone-local DV entry can never accidentally keep a stale SHARED
-    copy alive (`_gen >= live_gen` needs local > external) — and no
-    inherited DV entry has ``live_gen`` equal to the fork version, so
-    the fork's stamped ``changed_buckets: []`` is what its DV says
+    above both the cloned version and the max generation its manifest
+    references, so every later local generation strictly exceeds every
+    shared one — a clone-local DV entry can never accidentally keep a
+    stale SHARED copy alive (`_gen >= live_gen` needs local > external)
+    — and no inherited DV entry has ``live_gen`` equal to the fork
+    version (a DV-only delete stamps ``live_gen`` with its version and
+    writes no generation, so the max generation alone is not enough),
+    so the fork's stamped ``changed_buckets: []`` is what its DV says
     too. Version numbers are table-local; nothing requires them to
     start at 0 (readers use _list_versions order throughout).
 
@@ -3926,7 +3928,7 @@ def clone_table(
     else:
         manifest = manifest.withColumn("ext", F.lit(f"{src_path}/data"))
     # reads src's manifest, writes dst's: disjoint paths, no checkpoint
-    v0 = max(int(r.gen) for r in manifest.select("gen").collect()) + 1
+    v0 = max(v, *(int(r.gen) for r in manifest.select("gen").collect())) + 1
     commit = _Commit(spark, dst_path, v0, writer)
     # table METADATA travels with the clone (Delta clones constraints):
     # a fork of a constrained table is constrained, and _table.json

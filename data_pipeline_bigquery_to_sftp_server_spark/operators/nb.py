@@ -179,7 +179,6 @@ def naive_bayes_scores(
     label_col: str = "lang",
     smoothing: float = 1.0,
     train: DataFrame | None = None,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Multinomial NB with additive ``smoothing``: score every document
     against every training class and return the argmax. One row per
@@ -206,10 +205,9 @@ def naive_bayes_scores(
     the explode, so the combiner collapses each doc to k rows BEFORE
     the shuffle — a collect_list-of-arrays rollup would ship every
     token's array through the exchange instead). The pivoted table is
-    vocab x k doubles; ``broadcast_model=True`` (default) broadcasts
-    it so the probe is exchange-free. For vocabularies past the
-    broadcast threshold pass False and the probe becomes one
-    token-keyed shuffle join with Zipf skew handled by AQE.
+    vocab x k doubles and is always broadcast, so the probe is
+    exchange-free; the model (vocabulary x classes) must fit in
+    executor memory.
     """
     scored_toks = ensure_parallelism(df).select(
         F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("_t")
@@ -273,7 +271,6 @@ def naive_bayes_scores(
             ).alias("_ll"),
         )
     )
-    probe = tok_table if not broadcast_model else F.broadcast(tok_table)
     # ONE probe join per token occurrence. posexplode_OUTER keeps
     # unseen tokens (null _ll) as a single null-position row — they
     # need no per-token class array, only a COUNT: each contributes
@@ -281,7 +278,7 @@ def naive_bayes_scores(
     # the doc level as _nun * backoff[c]. Seen tokens explode to k
     # narrow rows; both rollups partial-aggregate map-side (tokens of
     # a doc are co-located after the explode).
-    per_tok = scored_toks.join(probe, "_t", "left").select(
+    per_tok = scored_toks.join(F.broadcast(tok_table), "_t", "left").select(
         id_col, F.posexplode_outer("_ll").alias("_pos", "_l")
     )
     per_cls = per_tok.groupBy(id_col, "_pos").agg(

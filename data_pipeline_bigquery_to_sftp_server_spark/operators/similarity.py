@@ -718,7 +718,6 @@ def cross_near_dup_pairs_banded(
     num_planes: int | str = 16,
     bands: int = 4,
     seed: int = 42,
-    broadcast_new: bool = True,
 ) -> DataFrame:
     """Incremental embedding dedup, UNBOUNDED-corpus tier: SRP-banded
     (new ⋈ corpus) screen. The scale-safe sibling of
@@ -735,8 +734,9 @@ def cross_near_dup_pairs_banded(
     vs the exact twin in test_similarity).
 
     Plan shape at 100 TB: the delta (``new``) is small by contract, so
-    with ``broadcast_new`` the candidate join is a broadcast hash join
-    — the corpus is scanned once, signatured map-side, and never
+    its banded signatures are always broadcast — the new batch must
+    fit in executor memory — and the candidate join is a broadcast hash
+    join: the corpus is scanned once, signatured map-side, and never
     shuffles; only candidates (bounded by bucket collisions) reach the
     dedup + verify stages. ``num_planes="auto"`` derives the hash
     width from a corpus count via :func:`auto_srp_num_planes` (one
@@ -761,8 +761,6 @@ def cross_near_dup_pairs_banded(
         planes,
         bands,
     )
-    if broadcast_new:
-        n_side = F.broadcast(n_side)
     c_side = _band_explode(
         corpus.select(F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")),
         "_cid",
@@ -773,7 +771,7 @@ def cross_near_dup_pairs_banded(
     # candidate dedup BEFORE the exact verify: a pair colliding in
     # several bands must be scored once (same rule as the self-join)
     cand = (
-        c_side.join(n_side, ["band", "bh"])
+        c_side.join(F.broadcast(n_side), ["band", "bh"])
         .select("_nid", "_nv", "_cid", "_cv")
         .dropDuplicates(["_nid", "_cid"])
     )

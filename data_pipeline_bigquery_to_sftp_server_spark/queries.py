@@ -904,9 +904,7 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def minhash_pairs_df(d: DataFrame) -> DataFrame:
-    # Default shuffle pair-join on (band, band_hash) buckets — the 100 TB
-    # shape. broadcast_right stays available as a small-corpus opt-in but
-    # is never hardcoded in the query corpus.
+    # Shuffle pair-join on (band, band_hash) buckets — the 100 TB shape.
     return dedup.minhash_lsh_pairs(
         d, "doc_id", "text", num_hashes=32, bands=8, ngram=3,
         jaccard_threshold=0.5,

@@ -24,7 +24,12 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import (
+    DataSource,
+    DataSourceReader,
+    DataSourceStreamReader,
+    InputPartition,
+)
 from pyspark.sql.types import StructType
 
 
@@ -107,18 +112,12 @@ class RestPagesReader(DataSourceReader):
 #
 # Offsets are manifest versions ({"version": N} = consumed through N),
 # so replay after a checkpoint restart re-reads IMMUTABLE history —
-# readBetweenOffsets is deterministic and the feed is exactly-once
-# end-to-end when paired with an epoch-gated sink. TWO reader tiers
-# share these offsets (r14): the DEFAULT partition-based reader
-# (VersionedCdfPartitionedReader below — one InputPartition per
-# (version, changed bucket), executor-side parquet reads, the 100 TB
-# path: a backfill MERGE's change set never lands in driver memory)
-# and .option("reader", "simple")'s SimpleDataSourceStreamReader
-# (driver-side pyarrow prefetch — cheapest when commits are small
-# enough that a Spark job per micro-batch costs more than it saves).
+# partitions(start, end) is deterministic and the feed is exactly-once
+# end-to-end when paired with an epoch-gated sink. The reader
+# (VersionedCdfPartitionedReader below) plans one InputPartition per
+# (version, changed bucket) and reads parquet EXECUTOR-side, so a
+# backfill MERGE's change set never lands in driver memory.
 # --------------------------------------------------------------------------
-
-from pyspark.sql.datasource import SimpleDataSourceStreamReader  # noqa: E402
 
 
 # --------------------------------------------------------------------------
@@ -243,27 +242,16 @@ def _cdf_committed_versions(path: str, fs=None) -> list[int]:
 
 
 def _cdf_read_dir(d: str, fs=None):
-    """All rows of one parquet directory as a list of dicts (pyarrow,
-    driver-side; the directories this source reads are single-commit
-    DV files and MOR fresh generations — CDC-sized by the DV
-    contract). Descends one level of hive partition subdirectories
-    (the r15 bucket-partitioned DV layout ``_kr=<b>/``) — partition
-    VALUES are not re-injected, which is fine because the CDF readers
-    never consume ``_kr`` from row content."""
-    import pyarrow.fs as pafs
+    """All rows of one MOR generation directory (``_kr=<b>/_gen=<g>``)
+    as a list of dicts (pyarrow, in the reader's executor-side
+    partitions; a generation holds one commit's fresh copies for one
+    bucket — CDC-sized by the DV contract)."""
     import pyarrow.parquet as pq
 
     fs = fs or _cdf_resolve_fs(d)[0]
     rows: list[dict] = []
     for info in _fs_ls(fs, d):
-        f = info.base_name
-        if (
-            info.type == pafs.FileType.Directory
-            and "=" in f
-            and not f.startswith(".")
-        ):
-            rows.extend(_cdf_read_dir(info.path, fs))
-        elif f.endswith(".parquet"):
+        if info.base_name.endswith(".parquet"):
             rows.extend(pq.read_table(info.path, filesystem=fs).to_pylist())
     return rows
 
@@ -274,8 +262,8 @@ def _cdf_prev_live_rows(
     """{key value -> row dict} of ``bucket``'s live rows at version
     ``pv``, restricted to ``changed_keys`` — the OLD images the delta
     change vocabulary needs (update_preimage / delete-with-values).
-    Mirror of the Spark read path in pure pyarrow (runs driver-side in
-    the simple tier, EXECUTOR-side in the partitioned tier): manifest
+    Mirror of the Spark read path in pure pyarrow (runs EXECUTOR-side,
+    inside the reader's partitions): manifest
     rows name the bucket's live (gen) directories (ext-aware for
     clones), the version's DV supplies live_gen, and a row survives
     iff its gen >= live_gen with the newest-gen copy winning. Memory
@@ -587,17 +575,6 @@ class VersionedCdfDataSource(DataSource):
         )
 
     def streamReader(self, schema: StructType):
-        # the partition-based (executor-side) reader is the default;
-        # .option("reader", "simple") raises pyspark's NOT_IMPLEMENTED
-        # sentinel so datasource_internal._streamReader falls back to
-        # simpleStreamReader below (driver-side prefetch tier)
-        if str(self.options.get("reader", "partitioned")).lower() == "simple":
-            from pyspark.errors import PySparkNotImplementedError
-
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         fs, path = self._fs_path()
         return VersionedCdfPartitionedReader(
             path,
@@ -666,20 +643,6 @@ class VersionedCdfDataSource(DataSource):
             )
         return k
 
-    def simpleStreamReader(self, schema: StructType):
-        fs, path = self._fs_path()
-        return VersionedCdfStreamReader(
-            path,
-            self._key(),
-            self._fetch_cols(),
-            self._starting_version(),
-            self._max_versions(),
-            self._starting_ts(),
-            fs,
-            self._max_bytes(),
-            self._change_format(),
-        )
-
 
 def _cdf_commit_bytes(path: str, version: int, fs=None) -> int:
     """The physical bytes commit ``version`` added: its DV file plus
@@ -730,147 +693,11 @@ def _cdf_clamp_end(
     return newer[n - 1] if n < len(newer) else max(versions[-1], after)
 
 
-class VersionedCdfStreamReader(SimpleDataSourceStreamReader):
-    def __init__(
-        self,
-        path: str,
-        key: str,
-        cols: list[str],
-        start: int | None,
-        max_versions: int | None = None,
-        start_ts: int | None = None,
-        fs=None,
-        max_bytes: int | None = None,
-        change_format: str = "collapsed",
-    ):
-        self.path = path
-        self.key = key
-        self.cols = cols
-        self.start = start
-        self.max_versions = max_versions
-        self.start_ts = start_ts
-        self.fs = fs if fs is not None else _cdf_resolve_fs(path)[0]
-        self.max_bytes = max_bytes
-        self.change_format = change_format
-
-    def initialOffset(self) -> dict:
-        # the table's first committed version — the bootstrap snapshot
-        # is never a change, and a shallow clone's fork commit (which
-        # carries the source's DV verbatim as inherited state) must be
-        # silent exactly like any bootstrap. An EXPLICIT
-        # starting_version below the first version clamps up: pre-fork
-        # versions don't exist in this table's history, and emitting
-        # the fork's inherited DV would yield phantom deletes (the
-        # shared copies live in the source's directories, not gen=v0).
-        # starting_timestamp resolves through the commit clock — see
-        # _cdf_resolve_start.
-        return _cdf_resolve_start(self.path, self.start, self.start_ts, self.fs)
-
-    def _changes(self, after: int, through: int):
-        fs = self.fs
-        versions = _cdf_committed_versions(self.path, fs)
-        for v in versions:
-            if not (after < v <= through):
-                continue
-            # planning first (sidecar / directory listing / streamed
-            # scan): a silent commit — structural, COW — skips without
-            # reading its carried-forward DV at all, and with the r15
-            # bucket-partitioned layout only the CHANGED buckets' DV
-            # directories and _gen=<v> directories are ever opened
-            buckets = _cdf_changed_buckets(self.path, v, fs)
-            if not buckets:
-                continue
-            dv_root = f"{self.path}/_dv/v={v}"
-            if _fs_isdir(fs, f"{dv_root}/_kr={buckets[0]}"):
-                dv = []
-                for b in buckets:
-                    dv.extend(_cdf_read_dir(f"{dv_root}/_kr={b}", fs))
-            else:
-                dv = _cdf_read_dir(dv_root, fs)
-            changed = [r for r in dv if r.get("live_gen") == v]
-            if not changed:
-                continue  # structural commit (compact/COW/restore): silent
-            if self.change_format == "delta":
-                # Delta's full vocabulary: classify per bucket against
-                # the bucket's live state at the PREVIOUS version (the
-                # preimage read opens only changed buckets' dirs)
-                pv = versions[versions.index(v) - 1]
-                for b in buckets:
-                    fresh_b: dict = {}
-                    for r in _cdf_read_dir(
-                        f"{self.path}/data/_kr={b}/_gen={v}", fs
-                    ):
-                        fresh_b[r[self.key]] = r
-                    bdir = f"{self.path}/_dv/v={v}/_kr={b}"
-                    if _fs_isdir(fs, bdir):
-                        keys_b = [
-                            r[self.key]
-                            for r in _cdf_read_dir(bdir, fs)
-                            if r.get("live_gen") == v
-                        ]
-                    else:  # flat legacy DV: this bucket's slice
-                        keys_b = [
-                            r[self.key]
-                            for r in dv
-                            if r.get("live_gen") == v and r.get("_kr") == b
-                        ]
-                    yield from _cdf_delta_rows(
-                        self.path, v, pv, b, self.key, self.cols,
-                        keys_b, fresh_b, fs,
-                    )
-                continue
-            fresh: dict = {}
-            # bucket-locality: a changed key's fresh copy can only be
-            # in its own bucket's _gen=<v> directory
-            for b in buckets:
-                for r in _cdf_read_dir(
-                    f"{self.path}/data/_kr={b}/_gen={v}", fs
-                ):
-                    fresh[r[self.key]] = r
-            for r in changed:
-                k = r[self.key]
-                if k in fresh:
-                    row = fresh[k]
-                    yield tuple(
-                        [row.get(c) for c in self.cols] + ["upsert", v]
-                    )
-                else:
-                    yield tuple(
-                        [k if c == self.key else None for c in self.cols]
-                        + ["delete", v]
-                    )
-
-    def read(self, start: dict):
-        end = {
-            "version": _cdf_clamp_end(
-                self.path,
-                start["version"],
-                self.max_versions,
-                self.fs,
-                self.max_bytes,
-            )
-        }
-        # a list ITERATOR: the runner drains it to prefetch, then
-        # pickles the materialized rows to ship to executors — a bare
-        # generator fails pickling, a bare list fails iteration
-        # (CDC-sized by the DV contract either way)
-        return iter(list(self._changes(start["version"], end["version"]))), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        # immutable history: deterministic replay for restart recovery
-        return iter(list(self._changes(start["version"], end["version"])))
-
-
 # --------------------------------------------------------------------------
-# Distributed (partition-based) tier of the CDF source (r14 — the r13
-# verdict's one scale gap): the simple reader above materializes every
-# micro-batch's change rows ON THE DRIVER, which is O(|commit batch|)
-# driver memory — honest for CDC-sized commits but wrong for a backfill
-# MERGE that touches 1% of a 100 TB table. This reader keeps the SAME
-# offset semantics ({"version": N}, initial = first committed version,
-# deterministic replay over immutable history) but plans one
+# The CDF stream reader (r14 — the r13 verdict's one scale gap): one
 # InputPartition per (version, changed bucket), and each partition does
-# its parquet reads EXECUTOR-side:
+# its parquet reads EXECUTOR-side, so no micro-batch's change rows are
+# ever materialized on the driver:
 #
 #   driver   — lists committed versions; learns which buckets changed
 #              from the commit-time ``changed_buckets`` stamp in the
@@ -889,19 +716,10 @@ class VersionedCdfStreamReader(SimpleDataSourceStreamReader):
 # output), and a key's fresh copy — when it exists — is written to that
 # same bucket's _gen=<v> directory. So partition (v, b) sees exactly
 # the changed keys whose fresh copy could only be in bucket b, and the
-# per-bucket upsert/delete classification equals the simple reader's
-# global one (byte-equal feed pinned in test_merge).
-#
-# Selection: this reader is the default (DataSource.streamReader wins
-# over simpleStreamReader); ``.option("reader", "simple")`` raises the
-# NOT_IMPLEMENTED sentinel so pyspark's _streamReader falls back to the
-# driver-side prefetch tier — kept for the tiny-commit case where one
-# Spark task per bucket costs more than it saves, and as the parity
-# twin the equality test runs against.
+# per-bucket upsert/delete classification equals the global one that
+# merge.table_changes computes in Spark (equal feeds pinned in
+# test_merge).
 # --------------------------------------------------------------------------
-
-from pyspark.sql.datasource import DataSourceStreamReader  # noqa: E402
-
 
 class CdfPartition(InputPartition):
     """One (committed version, changed bucket) unit of change-feed
@@ -977,9 +795,9 @@ def _cdf_commit_timestamps(
 def _cdf_resolve_start(
     path: str, start_version: int | None, start_ts: int | None, fs=None
 ) -> dict:
-    """The shared initial-offset rule for both reader tiers: the
-    bootstrap snapshot (a clone's fork commit included) is silent, an
-    explicit starting_version below the first commit clamps up, and
+    """The reader's initial-offset rule: the bootstrap snapshot (a
+    clone's fork commit included) is silent, an explicit
+    starting_version below the first commit clamps up, and
     starting_timestamp T resolves to "emit every version whose commit
     timestamp is >= T" (Delta's CDF startingTimestamp) — an offset of
     first-such-version - 1, clamped to the bootstrap rule; T beyond
@@ -1108,10 +926,13 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
         self._planned = None
 
     def initialOffset(self) -> dict:
-        # identical semantics to VersionedCdfStreamReader: the
-        # bootstrap snapshot (a clone's fork commit included) is
-        # silent; starting_version clamps up; starting_timestamp
-        # resolves through the commit clock (_cdf_resolve_start)
+        # the bootstrap snapshot is never a change, and a shallow
+        # clone's fork commit (the source's DV carried verbatim) is
+        # silent the same way; starting_version clamps up, because
+        # pre-fork versions are not in this table's history and the
+        # fork's inherited DV would read as phantom deletes;
+        # starting_timestamp resolves through the commit clock
+        # (_cdf_resolve_start)
         off = _cdf_resolve_start(self.path, self.start, self.start_ts, self.fs)
         self._planned = off["version"]  # fresh start: position known
         return off
@@ -1151,8 +972,7 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
                     )
                 )
         # structural-only ranges (compaction, restore) plan zero
-        # partitions — an empty micro-batch, exactly the simple
-        # reader's silence
+        # partitions — an empty micro-batch
         return parts
 
     def read(self, partition: CdfPartition):
@@ -1233,8 +1053,6 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
 
 
 def register_versioned_cdf(spark) -> None:
-    """Idempotent registration of the versioned_cdf stream source."""
-    try:
-        spark.dataSource.register(VersionedCdfDataSource)
-    except Exception:
-        pass  # already registered in this session
+    """Register the versioned_cdf stream source. Idempotent: a second
+    registration in the same session replaces the first."""
+    spark.dataSource.register(VersionedCdfDataSource)

@@ -49,24 +49,6 @@ def test_contamination_vs_brute_force(spark, sf_dir):
     assert any(v[1] > 0 for v in expected.values())
 
 
-def test_contamination_broadcast_off_identical(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    train = d.where(F.col("doc_id") % 20 != 0)
-    ev = d.where(F.col("doc_id") % 20 == 0)
-    a = sorted(
-        map(tuple, decontam.ngram_contamination(train, ev, n=4).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            decontam.ngram_contamination(
-                train, ev, n=4, broadcast_eval=False
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 def test_contamination_stateless_equals_join_formulation(spark, sf_dir):
     """The broadcast-literal array_intersect probe must report exactly
     what the left-join + rollup reports, and its plan must be a pure

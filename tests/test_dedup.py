@@ -164,7 +164,7 @@ def test_star_contraction_equals_min_label(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents")
     real = dedup.ngram_jaccard_pairs(
-        d, "doc_id", "text", ngram=1, threshold=0.5, broadcast_right=True
+        d, "doc_id", "text", ngram=1, threshold=0.5
     )
     a = {(r.node, r.component)
          for r in dedup.connected_components(real).collect()}
@@ -196,7 +196,7 @@ def test_dedup_clusters_matches_union_find(spark, sf_dir):
     a driver-side union-find on the same (collected) pair set."""
     d = load_table(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(
-        d, "doc_id", "text", ngram=1, threshold=0.5, broadcast_right=True
+        d, "doc_id", "text", ngram=1, threshold=0.5
     )
     edges = [(r.id_a, r.id_b) for r in pairs.select("id_a", "id_b").collect()]
 
