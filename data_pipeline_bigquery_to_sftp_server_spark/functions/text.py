@@ -35,10 +35,6 @@ def bpe_ish_token_count(col: Column) -> Column:
     return F.regexp_count(col, F.lit(pattern))
 
 
-def char_count(col: Column) -> Column:
-    return F.length(col)
-
-
 def stopword_ratio(col: Column) -> Column:
     """Fraction of tokens that are (English) stopwords — one of the
     classic quality signals (C4/Gopher rules)."""

@@ -844,7 +844,6 @@ def connected_components(
     dst: str = "id_b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    general: bool = False,
 ) -> DataFrame:
     """Cluster a near-dup pair graph into components: returns
     ``(node, component)`` where ``component`` is the minimum node id
@@ -860,12 +859,11 @@ def connected_components(
     non-NULL endpoint keeps its own component and NULL is returned as
     one node labeled NULL. A self-pair is a node on its own.
 
-    ``general=True`` is the documented swap for graphs whose diameter
-    ISN'T bounded (long chains — the serially-correlated-key pathology
-    the ER docstring names): it dispatches to
-    :func:`connected_components_star`, which converges in O(log n)
-    rounds on any shape and returns the identical contract (pinned
-    equal on fixtures in test_dedup).
+    Graphs whose diameter ISN'T bounded (long chains — the
+    serially-correlated-key pathology the ER docstring names) take
+    :func:`connected_components_star` instead, which converges in
+    O(log n) rounds on any shape and returns the identical contract
+    (pinned equal on fixtures in test_dedup).
 
     Plan: ONE scan of ``pairs`` builds the symmetric edge set plus a
     self-loop per endpoint (one explode of four structs, a distinct,
@@ -914,9 +912,6 @@ def connected_components(
       result is no longer needed.
     """
     from pyspark.sql import Observation
-
-    if general:
-        return connected_components_star(pairs, src, dst, max_iter=max(max_iter, 50))
 
     spark = pairs.sparkSession
     scoped_dir = None
@@ -1163,55 +1158,6 @@ def dedup_clusters(
     return comp.groupBy(F.col("component").alias("keep_id")).agg(
         F.count("*").alias("n_members"),
         F.sort_array(F.collect_list("node")).alias("members"),
-    )
-
-
-def dedup_keep_best(
-    pairs: DataFrame,
-    quality: DataFrame,
-    id_col: str = "doc_id",
-    quality_col: str = "q",
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
-    """Keep/drop decisions with a QUALITY rule instead of min-id:
-    within each near-dup component, keep the member with the highest
-    ``quality_col`` (ties -> smallest id) — how production dedup
-    actually chooses (keep the longest / highest-quality copy, drop
-    boilerplate-truncated ones). Returns one row per component:
-    ``(keep_id, keep_quality, n_members, members)``.
-
-    ``quality`` maps ``id_col`` -> ``quality_col`` (token count, LM
-    score, classifier margin — anything orderable). Plan: the CC
-    labels join quality on the member id (id-keyed, uniform), then one
-    per-component argmax via window row_number — the same two-shuffle
-    rollup as dedup_clusters plus the quality join.
-    """
-    from pyspark.sql import Window
-
-    comp = connected_components(pairs, src, dst)
-    labeled = comp.join(
-        quality.select(F.col(id_col).alias("node"), F.col(quality_col)),
-        "node",
-    )
-    w = Window.partitionBy("component").orderBy(
-        F.desc(quality_col), F.asc("node")
-    )
-    best = (
-        labeled.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            "component",
-            F.col("node").alias("keep_id"),
-            F.col(quality_col).alias("keep_quality"),
-        )
-    )
-    rollup = labeled.groupBy("component").agg(
-        F.count("*").alias("n_members"),
-        F.sort_array(F.collect_list("node")).alias("members"),
-    )
-    return best.join(rollup, "component").select(
-        "keep_id", "keep_quality", "n_members", "members"
     )
 
 

@@ -12,17 +12,10 @@ at 100 TB the difference between reading 3% of files and reading all of
 them, bought entirely at write time with two bounded shuffles (one
 range exchange + the write).
 
-Two deployments:
-
-- :func:`zorder_write` — the production path: ``repartitionByRange``
-  on the Morton key (distributed sampling sort) + per-partition sort +
-  parquet write; file boundaries come from range sampling, so they are
-  performant but not bit-reproducible run-to-run.
-- :func:`zorder_buckets` — the DETERMINISTIC twin used by the
-  oracle-checked query: exact global rank over (z, tiebreaker) via
-  ``with_global_rank`` (no single-partition window), bucket =
-  ``(rank-1) * n_buckets // N`` — pure integer math an oracle replays
-  exactly, with the same clustering quality as the write path.
+:func:`zorder_buckets` assigns the buckets deterministically: exact
+global rank over (z, tiebreaker) via ``with_global_rank`` (no
+single-partition window), bucket = ``(rank-1) * n_buckets // N`` — pure
+integer math an oracle replays exactly.
 
 Quantization: callers pass dimensions already reduced to
 ``[0, 2**bits)`` integers (day-of-month, id * 2**bits // (max+1),
@@ -82,35 +75,18 @@ def zorder_buckets(
     ``with_global_rank``), then ``bucket = (rank-1) * n_buckets // N``.
     Returns the input columns plus ``z`` and ``bucket``. Buckets are
     equal-sized to within one row and bit-reproducible on every engine
-    — the property the write path trades away for sampling speed."""
+    — the property a ``repartitionByRange`` write trades away for
+    sampling speed."""
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
+        rank_bucket,
         with_global_rank,
     )
 
     z = zorder_key([F.col(c) for c in dim_cols], bits=bits)
     keyed = df.withColumn("z", z)
     ranked, n_total = with_global_rank(keyed, ["z", tiebreak])
-    bucket = F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}")
-    return ranked.withColumn("bucket", bucket.cast("long")).drop("grank")
-
-
-def zorder_write(
-    df: DataFrame,
-    dim_cols: Sequence[str],
-    path: str,
-    bits: int = 8,
-    n_files: int = 32,
-) -> None:
-    """The production layout path: range-partition on the Morton key
-    (distributed sampling sort — no global window, no driver
-    materialization), sort within each partition, and write one parquet
-    file per partition. Downstream scans prune on the per-file min/max
-    of every interleaved dimension."""
-    z = zorder_key([F.col(c) for c in dim_cols], bits=bits)
-    (
-        df.withColumn("z", z)
-        .repartitionByRange(int(n_files), "z")
-        .sortWithinPartitions("z")
-        .write.mode("overwrite")
-        .parquet(path)
+    return ranked.withColumn("bucket", rank_bucket(n_total, n_buckets)).drop(
+        "grank"
     )
+
+

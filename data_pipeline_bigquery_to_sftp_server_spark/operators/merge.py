@@ -16,8 +16,8 @@ Strategy choice at scale:
 
 - ``upsert_anti_union``: one shuffle-free broadcast anti-join when the
   staging batch is small (the common CDC case), then a union. Cost is
-  O(|target|) rewrite only at write time; with a partitioned target,
-  dynamic partition overwrite limits the rewrite to touched partitions.
+  O(|target|) rewrite only at write time; the versioned key-range table
+  below (``upsert_versioned``) applies it to the touched buckets only.
 - ``upsert_full_outer``: symmetric full-outer + per-column coalesce.
   Handles the "staging may be missing columns" case and is the closest
   relational statement of MERGE semantics; costs a full shuffle of both
@@ -238,141 +238,6 @@ def merge_arms(
     )
 
 
-def upsert_partitioned(
-    spark: SparkSession,
-    target_path: str,
-    staging: DataFrame,
-    key: str,
-    partition_col: str,
-) -> DataFrame:
-    """MERGE limited to touched partitions — the partition-pruned upsert
-    the module docstring promises, and the difference at 100 TB between
-    rewriting a partition and rewriting the table.
-
-    The target lives as a hive-partitioned parquet directory
-    (``partition_col=<v>/``). The merge:
-
-    1. finds the partitions staging touches (distinct partition values
-       of the staging batch — a tiny frame);
-    2. reads ONLY those partitions of the target (the ``isin`` filter is
-       partition pruning: untouched directories are never opened);
-    3. anti-joins + unions exactly like :func:`upsert_anti_union`;
-    4. writes back with ``partitionOverwriteMode=dynamic``, which
-       replaces only the partition directories present in the written
-       frame — untouched partitions' files are not rewritten (asserted
-       file-level in tests).
-
-    Requires every staging row to carry its partition value; rows whose
-    key moves partitions must be handled as delete+insert upstream
-    (same contract as Hive/Delta replaceWhere).
-
-    Returns the merged view of the touched partitions (what was
-    written). Read the full table with ``spark.read.parquet(path)``.
-
-    Durability contract (plain parquet, no table format):
-    - First run bootstraps: if ``target_path`` does not exist yet, the
-      staging batch is written directly (the reference's CTAS-on-"Not
-      found: Table" behavior, main.py:366-372).
-    - The dynamic-partition-overwrite commit is atomic per partition
-      directory but NOT across partitions: a concurrent reader can
-      briefly observe a mix of old and new partitions. Single-writer,
-      no-concurrent-reader is the assumed deployment (same as the
-      reference's BigQuery-job serialization); a lakehouse format
-      (Delta/Iceberg) is the upgrade when snapshot isolation matters.
-    - The pre-write ``localCheckpoint`` is executor-local: an executor
-      loss between checkpoint and commit aborts the job with the OLD
-      table intact (the write never started or dynamic overwrite
-      replaces no directory until its new files commit) — rerun the
-      batch; the MERGE is idempotent on the key.
-    """
-    touched = [
-        r[0] for r in staging.select(partition_col).distinct().collect()
-    ]
-    # Probe target existence explicitly (scheme-aware Hadoop FS, same
-    # pattern as connected_components). Catching AnalysisException
-    # around the read would also swallow analysis failures on an
-    # EXISTING table — schema drift, a target written without
-    # partition_col, an empty directory — and misread them as
-    # "bootstrap", overwriting the table with the staging batch. The
-    # reference's equivalent catch matches only "Not found: Table"
-    # (main.py:366-368); absence must be the ONLY bootstrap trigger.
-    jvm = spark.sparkContext._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(target_path)
-    fs = jpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        # Bootstrap: no target yet — first batch becomes the table.
-        staging.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
-        )
-        return spark.read.parquet(target_path).where(
-            F.col(partition_col).isin(touched)
-        )
-    # Any failure from here on (unreadable parquet, missing
-    # partition_col) propagates — the existing table stays intact.
-    target = spark.read.parquet(target_path).where(
-        F.col(partition_col).isin(touched)
-    )
-    # Materialize the merged partitions before writing: Spark (rightly)
-    # refuses to overwrite a path that the write plan is still reading
-    # from. localCheckpoint truncates lineage to the computed blocks —
-    # bounded by the touched partitions, which is the operator's whole
-    # budget. (A lakehouse table format does this swap transactionally;
-    # this is the plain-parquet equivalent.)
-    merged = upsert_anti_union(target, staging, key).localCheckpoint(eager=True)
-    # per-write option, not the session conf: the conf is shared by
-    # every thread of the session
-    (
-        merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
-        .parquet(target_path)
-    )
-    return spark.read.parquet(target_path).where(
-        F.col(partition_col).isin(touched)
-    )
-
-
-def range_layout_write(
-    df: DataFrame, key: str, path: str, n_buckets: int = 16
-) -> None:
-    """Lay a table out as ``n_buckets`` contiguous KEY-RANGE buckets
-    (hive directories ``_kr=<b>/``) plus a min/max manifest — the
-    plain-parquet analogue of the per-file key statistics a lakehouse
-    transaction log keeps, and the layout :func:`upsert_fileskip`
-    prunes against. Bucket assignment is the deterministic global-rank
-    math zorder_buckets uses (``(rank-1) * n div N`` over the
-    range-repartitioned exact rank — no single-partition window), so an
-    oracle can replay the cutpoints exactly. The manifest
-    (``_kr, min_key, max_key, n_rows`` — n_buckets rows) lives under
-    ``<path>/_manifest``; the leading underscore keeps Spark's parquet
-    reader from treating it as data. ``key`` must be unique (the MERGE
-    key contract)."""
-    from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
-        with_global_rank,
-    )
-
-    ranked, n_total = with_global_rank(df, [key])
-    laid = ranked.withColumn(
-        "_kr",
-        F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}").cast(
-            "long"
-        ),
-    ).drop("grank")
-    laid.write.mode("overwrite").partitionBy("_kr").parquet(path)
-    written = df.sparkSession.read.parquet(path)
-    # r17: one collect-shaped job + a driver-side parquet write instead
-    # of a scheduled coalesce(1) write through the Hadoop committer
-    _write_manifest(
-        df.sparkSession,
-        written.groupBy("_kr").agg(
-            F.min(key).alias("min_key"),
-            F.max(key).alias("max_key"),
-            F.count(F.lit(1)).alias("n_rows"),
-        ),
-        f"{path}/_manifest",
-    )
-
-
 def assign_range_bucket(
     rows: DataFrame, manifest: DataFrame, key: str
 ) -> DataFrame:
@@ -444,71 +309,10 @@ def assign_range_bucket(
     ).drop("min_key", "next_min")
 
 
-def upsert_fileskip(
-    spark: SparkSession, target_path: str, staging: DataFrame, key: str
-) -> DataFrame:
-    """MERGE that touches ONLY the key-range buckets the staging batch
-    intersects — the file-skipping tier (r10 verdict #6): z-order/
-    min-max statistics (the manifest :func:`range_layout_write` keeps)
-    composed with the partition-pruned upsert. At 100 TB this is the
-    difference between rewriting ~2 of 10,000 range files for a
-    contiguous CDC batch and rewriting the table; it is exactly the
-    pruning a Delta/Iceberg MERGE gets from its file-statistics log,
-    expressed on plain parquet.
-
-    Plan: (1) assign each staging key a bucket from the broadcast
-    manifest (greatest ``min_key <= key``, new-high keys extend the
-    last bucket); (2) read ONLY the touched bucket directories (the
-    ``isin`` filter is partition pruning — untouched directories are
-    never opened, asserted file-level in test_merge); (3) anti+union
-    per :func:`upsert_anti_union`; (4) dynamic-partition-overwrite
-    write rewrites only the touched directories; (5) refresh the
-    manifest rows for touched buckets (n_buckets-row frame). Same
-    durability contract as :func:`upsert_partitioned`; idempotent on
-    the key, pinned by re-apply in tests. Returns the merged view of
-    the touched buckets with ``touched_buckets`` attached."""
-    manifest = spark.read.parquet(f"{target_path}/_manifest")
-    assigned, touched = _assign_touched(staging, manifest, key)
-    target = spark.read.parquet(target_path).where(F.col("_kr").isin(touched))
-    merged = upsert_anti_union(
-        target, assigned.select(*target.columns), key
-    ).localCheckpoint(eager=True)
-    new_manifest = manifest.where(~F.col("_kr").isin(touched)).unionByName(
-        merged.groupBy("_kr").agg(
-            F.min(key).alias("min_key"),
-            F.max(key).alias("max_key"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-    )
-    # r17: the manifest aggregation COLLECTS (toArrow) concurrently
-    # with the data rewrite (guide §2.6), then publishes driver-side —
-    # this also retires the refresh's defensive localCheckpoint (the
-    # collected rows are immune to the overwrite of their read path)
-    # and the scheduled coalesce(1) write. 4 jobs -> 2 per refresh.
-    m_collect, m_publish = _manifest_writer(
-        spark, new_manifest, f"{target_path}/_manifest"
-    )
-
-    def _write_data() -> None:
-        # a pool thread: the per-write option leaves the session-global
-        # partitionOverwriteMode alone
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("_kr").parquet(target_path)
-
-    _run_concurrent(m_collect, _write_data)
-    m_publish()
-    out = spark.read.parquet(target_path).where(F.col("_kr").isin(touched))
-    out.touched_buckets = touched
-    return out
-
-
 # ---------------------------------------------------------------------------
-# Versioned layout + time travel (J1e): the snapshot half of the
-# lakehouse story on plain parquet. Where upsert_fileskip REWRITES the
-# touched bucket directories (current-version-only, like a compacting
-# store), the versioned tier never overwrites: each MERGE writes the
-# touched buckets as NEW generation directories and commits a new
+# Versioned layout + time travel (J1e): the engine's one table format,
+# on plain parquet. A MERGE never overwrites: it writes the touched
+# key-range buckets as NEW generation directories and commits a new
 # immutable manifest version mapping every bucket to its live
 # generation — exactly Iceberg/Delta's snapshot mechanism in
 # miniature. Any retained version stays readable (time travel), the
@@ -1313,14 +1117,6 @@ def _manifest_writer(spark: SparkSession, df: DataFrame, dest_dir: str):
             pass
 
     return collect, publish
-
-
-def _write_manifest(spark: SparkSession, df: DataFrame, dest_dir: str) -> None:
-    """Commit manifest ``df`` into ``dest_dir`` (driver-side fast
-    path, Spark-write fallback) — the sequential spelling of
-    _manifest_writer for committers with nothing to overlap."""
-    _, publish = _manifest_writer(spark, df, dest_dir)
-    publish()
 
 
 def _cutpoints(manifest: DataFrame) -> DataFrame:
@@ -2307,17 +2103,13 @@ def versioned_layout_write(
     per-column statistics in the commit log let read_version_pruned
     skip directories for NON-key predicates too)."""
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
+        rank_bucket,
         with_global_rank,
     )
 
     ranked, n_total = with_global_rank(df, [key])
     laid = (
-        ranked.withColumn(
-            "_kr",
-            F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}").cast(
-                "long"
-            ),
-        )
+        ranked.withColumn("_kr", rank_bucket(n_total, n_buckets))
         .drop("grank")
         .withColumn("_gen", F.lit(0).cast("long"))
     )
@@ -3520,17 +3312,13 @@ def rebucket_table(
     live = read_version(spark, path, v, physical=True).drop("_gen", "_kr")
     commit = _Commit(spark, path, v + 1, writer)
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
+        rank_bucket,
         with_global_rank,
     )
 
     ranked, n_total = with_global_rank(live, [key])
     fresh = _new_generation(
-        ranked.withColumn(
-            "_kr",
-            F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_total)}").cast(
-                "long"
-            ),
-        ).drop("grank"),
+        ranked.withColumn("_kr", rank_bucket(n_total, n_buckets)).drop("grank"),
         v + 1,
     )
     new_manifest = _manifest_rows(t, fresh)

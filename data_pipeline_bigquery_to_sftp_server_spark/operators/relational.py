@@ -22,11 +22,6 @@ from pyspark.sql.window import Window
 # --- Projection / filter (P1-P7) ------------------------------------------
 
 
-def project(df: DataFrame, *cols: str | Column) -> DataFrame:
-    """P1/P3 column projection; Catalyst prunes the parquet scan."""
-    return df.select(*cols)
-
-
 def distinct_keys(df: DataFrame, key: str) -> DataFrame:
     """P1+P2+A1: ``SELECT DISTINCT key WHERE key IS NOT NULL``
     (reference main.py:85-89 get_existing_ticket_ids).
@@ -35,19 +30,6 @@ def distinct_keys(df: DataFrame, key: str) -> DataFrame:
     tests are expressed as semi/anti joins (J2/J3).
     """
     return df.select(key).where(F.col(key).isNotNull()).distinct()
-
-
-def filter_not_null(df: DataFrame, *cols: str) -> DataFrame:
-    """P2: IS NOT NULL conjunction (main.py:88)."""
-    out = df
-    for c in cols:
-        out = out.where(F.col(c).isNotNull())
-    return out
-
-
-def filter_non_empty(df: DataFrame, col: str) -> DataFrame:
-    """P7 truthy-string filter (main.py:108-109, 49-51)."""
-    return df.where(F.col(col).isNotNull() & (F.length(F.col(col)) > 0))
 
 
 # --- Joins (J1-J4 + general family) ----------------------------------------
@@ -257,6 +239,17 @@ def with_global_rank(
         .drop("_pid", "_lrn", "_off")
     )
     return out, total
+
+
+def rank_bucket(n_rows: int, n_buckets: int) -> Column:
+    """The equal-width bucket of :func:`with_global_rank`'s ``grank``:
+    ``(grank - 1) * n_buckets div n_rows`` as a long. Buckets hold
+    equal row counts to within one row, and the integer math is what
+    an oracle replays exactly (the key-range table layout, its
+    rebucket, and the z-order buckets all cut their ranks here)."""
+    return F.expr(f"(grank - 1) * {int(n_buckets)} div {int(n_rows)}").cast(
+        "long"
+    )
 
 
 def ntile_by_rank(rank: Column, n_rows: int, n_buckets: int) -> Column:

@@ -331,30 +331,12 @@ def _srp_hyperplanes(dim: int, num_planes: int, seed: int) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(num_planes)]
 
 
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Sign-random-projection signature: bit i = (vec · plane_i) > 0.
-    Returned as array<int> of 0/1 for banding.
-
-    Expression form — num_planes x dim literal nodes per signature.
-    Fine for one-off column use; the LSH operators use
-    :func:`_with_srp_signature_np` instead, whose per-batch matmul
-    avoids both the interpreted per-plane folds and (empirically the
-    bigger cost locally) Janino compiling the thousand-literal
-    projection."""
-    return F.array(
-        *[
-            (dot(vec, F.array(*[F.lit(w) for w in plane])) > 0).cast("int")
-            for plane in planes
-        ]
-    )
-
-
 def _with_srp_signature_np(
     df: DataFrame, id_col: str, vec_col: str, planes: list[list[float]]
 ) -> DataFrame:
-    """(id, vec, _sig array<int>): SRP signatures via one numpy matmul
-    per Arrow batch — sign(vec @ planes.T), identical bits to
-    :func:`srp_signature` (float64 both ways; planes are Gaussian, so
+    """(id, vec, _sig array<int>): sign-random-projection signatures,
+    bit i = ``(vec · plane_i) > 0``, via one numpy matmul per Arrow
+    batch — sign(vec @ planes.T) in float64 (planes are Gaussian, so
     exact-zero dot products don't occur)."""
     import numpy as np
     import pandas as pd_local

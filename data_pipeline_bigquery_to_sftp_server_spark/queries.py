@@ -9828,11 +9828,10 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     own sort key and reads every bucket for the day predicate — the
     data-skipping argument for multi-dimension clustering, stated as
     integers an oracle replays exactly. Bucket assignment is the
-    deterministic global-rank twin of the production
-    repartitionByRange write path (zorder_write, pinned in
-    test_layout)."""
+    deterministic global-rank cut (relational.rank_bucket)."""
     from data_pipeline_bigquery_to_sftp_server_spark.operators import layout
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
+        rank_bucket,
         with_global_rank,
     )
 
@@ -9851,7 +9850,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked, n_total = with_global_rank(d, ["ub", "event_id"])
     lb = ranked.select(
         F.lit("linear_user").alias("layout"),
-        F.expr(f"(grank - 1) * 32 div {n_total}").cast("long").alias("bucket"),
+        rank_bucket(n_total, 32).alias("bucket"),
         "day0",
         "ub",
     )
@@ -11681,27 +11680,21 @@ def q_streaming_transitions_state(spark: SparkSession, sf_dir: str) -> DataFrame
     return _transition_report(counts)
 
 
-def q_merge_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1 file-skipping tier (r10 verdict #6), ORACLE-CHECKED: MERGE
-    against a key-range-laid-out parquet table (operators/merge.py
-    range_layout_write + upsert_fileskip) where a contiguous CDC batch
-    (a 500-key rank slice + 5 new high keys) touches only the 2-3 of 16
-    range buckets its keys intersect — the parquet answer to "Delta at
-    100 TB" from the SURVEY risk register: min/max manifest statistics
-    prune the rewrite exactly as a lakehouse MERGE's file-statistics
-    log would. The output reports every bucket of the FINAL table
-    (row count, cents sum, key range, touched flag); the oracle replays
-    the deterministic rank-math cutpoints, the clamp-rule bucket
-    assignment, the anti+union MERGE, and the touched set — so the
-    skip evidence itself is oracle-checked, not just the merged values.
-    Untouched-file byte-identity + idempotent re-apply are pinned in
-    test_merge."""
+def _orders_cdc_merge(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> tuple[str, DataFrame]:
+    """orders as a 16-bucket versioned key-range table (version 0) and
+    one CDC MERGE into it (version 1): the 500-key rank slice
+    2001..2500 with cents + 10,000, plus 5 new keys above the table
+    maximum. Returns the table path and upsert_versioned's merged view
+    (``touched_buckets`` attached) — the batch the merge_fileskip and
+    time_travel oracles replay."""
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
-    path = _scratch_dir("fileskip_target_")
-    merge.range_layout_write(o, "o_orderkey", path, n_buckets=16)
+    path = _scratch_dir(prefix)
+    merge.versioned_layout_write(o, "o_orderkey", path, n_buckets=16)
     ranked, _n = relational.with_global_rank(o, ["o_orderkey"])
     upd = ranked.where(
         (F.col("grank") >= 2001) & (F.col("grank") <= 2500)
@@ -11711,9 +11704,27 @@ def q_merge_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("id") * 1000 + 99).alias("cents"),
     )
     staging = upd.unionByName(ins)
-    merged_view = merge.upsert_fileskip(spark, path, staging, "o_orderkey")
+    return path, merge.upsert_versioned(spark, path, staging, "o_orderkey")
+
+
+def q_merge_fileskip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J1 file skipping (r10 verdict #6), ORACLE-CHECKED: MERGE into
+    the versioned key-range table (operators/merge.py
+    versioned_layout_write + upsert_versioned) where a contiguous CDC
+    batch (a 500-key rank slice + 5 new high keys) touches only the 2-3
+    of 16 range buckets its keys intersect — the parquet answer to
+    "Delta at 100 TB" from the SURVEY risk register: min/max manifest
+    statistics prune the rewrite exactly as a lakehouse MERGE's
+    file-statistics log would. The output reports every bucket of the
+    latest version (row count, cents sum, key range, touched flag); the
+    oracle replays the deterministic rank-math cutpoints, the
+    clamp-rule bucket assignment, the anti+union MERGE, and the touched
+    set — so the skip evidence itself is oracle-checked, not just the
+    merged values. Untouched-file identity + idempotent re-apply are
+    pinned in test_merge."""
+    path, merged_view = _orders_cdc_merge(spark, sf_dir, "fileskip_target_")
     touched = [int(b) for b in merged_view.touched_buckets]
-    final = spark.read.parquet(path)
+    final = merge.read_version(spark, path)
     return (
         final.groupBy(F.col("_kr").alias("bucket"))
         .agg(
@@ -11837,7 +11848,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1e snapshot isolation + time travel on plain parquet (r11),
     ORACLE-CHECKED: the versioned key-range layout (operators/merge.py
     versioned_layout_write / upsert_versioned / read_version) applies
-    the same CDC batch as q_merge_fileskip, but by writing the touched
+    the same CDC batch as q_merge_fileskip, writing the touched
     buckets as NEW generation directories and committing manifest v1 —
     v0 stays byte-untouched and readable forever (the Iceberg/Delta
     snapshot mechanism in miniature; vacuum_versions is the reclaim
@@ -11846,21 +11857,7 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw table and v1 as the anti+union MERGE, so time travel itself is
     what's being value-checked. Reading v0 after the merge costs the
     same as before it — dead generations are never opened."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    path = _scratch_dir("timetravel_")
-    merge.versioned_layout_write(o, "o_orderkey", path, n_buckets=16)
-    ranked, _n = relational.with_global_rank(o, ["o_orderkey"])
-    upd = ranked.where(
-        (F.col("grank") >= 2001) & (F.col("grank") <= 2500)
-    ).select("o_orderkey", (F.col("cents") + 10_000).alias("cents"))
-    ins = spark.range(5).select(
-        (F.col("id") + 30_000_000).alias("o_orderkey"),
-        (F.col("id") * 1000 + 99).alias("cents"),
-    )
-    merge.upsert_versioned(spark, path, upd.unionByName(ins), "o_orderkey")
+    path, _ = _orders_cdc_merge(spark, sf_dir, "timetravel_")
 
     def report(v: int) -> DataFrame:
         t = merge.read_version(spark, path, v)
@@ -13985,7 +13982,7 @@ def q_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.lit(2_000_000) + F.col("c_custkey") % 97).alias("id_b"),
     )
     edges = chain_edges.unionByName(star_edges)
-    labels = dedup.connected_components(edges, general=True)
+    labels = dedup.connected_components_star(edges)
     return (
         labels.groupBy("component")
         .agg(

@@ -13,11 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S10: canonical columnar scan — pushdown + pruning built in."""
-    return spark.read.parquet(path)
-
-
 def read_csv(
     spark: SparkSession,
     path_or_glob: str,
@@ -82,15 +77,6 @@ def write_orc(
     writer.orc(path)
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType | str | None = None
-) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
 def read_json_permissive(
     spark: SparkSession,
     path: str,
@@ -111,27 +97,6 @@ def read_json_permissive(
         .option("columnNameOfCorruptRecord", corrupt_col)
         .json(path)
     )
-
-
-def compact_parquet(
-    spark: SparkSession, path: str, out_path: str, target_rows_per_file: int
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into files of
-    ~``target_rows_per_file`` rows. The streaming/micro-batch sinks and
-    per-partition writers that feed a 100 TB lake produce thousands of
-    tiny files; scans then pay per-file open/footer costs and listing
-    dominates planning. Compaction is a repartition to
-    ceil(rows/target) — row-count based here; at scale drive it from
-    file sizes (AQE rebalance or maxRecordsPerFile) per partition
-    directory. Returns the file count written."""
-    df = spark.read.parquet(path)
-    n = df.count()
-    parts = max(1, -(-n // target_rows_per_file))
-    df.repartition(parts).write.mode("overwrite").parquet(out_path)
-    import glob as _glob
-    import os as _os
-
-    return len(_glob.glob(_os.path.join(out_path, "part-*.parquet")))
 
 
 # --- staging-table lifecycle (S4/S8/S9) -------------------------------------

@@ -159,7 +159,7 @@ def test_star_contraction_equals_min_label(spark, sf_dir):
     a = {(r.node, r.component)
          for r in dedup.connected_components(pairs).collect()}
     b = {(r.node, r.component)
-         for r in dedup.connected_components(pairs, general=True).collect()}
+         for r in dedup.connected_components_star(pairs).collect()}
     assert a == b
 
     d = load_table(spark, sf_dir, "documents")

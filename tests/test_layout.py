@@ -1,5 +1,5 @@
 """Z-order layout (X67): Morton key bit math, range guards,
-deterministic bucket twin, production write path."""
+deterministic buckets."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -7,7 +7,6 @@ import pytest
 from data_pipeline_bigquery_to_sftp_server_spark.operators.layout import (
     zorder_buckets,
     zorder_key,
-    zorder_write,
 )
 
 
@@ -49,22 +48,3 @@ def test_buckets_are_balanced_and_ordered(spark):
     for k in range(9):
         assert stats[k][1] <= stats[k + 1][0]
 
-
-def test_write_path_produces_disjoint_z_ranges(spark, tmp_path):
-    df = spark.range(0, 2000).select(
-        F.col("id").alias("rid"),
-        (F.col("id") % 32).alias("a"),
-        ((F.col("id") * 13) % 32).alias("b"),
-    )
-    path = str(tmp_path / "zw")
-    zorder_write(df, ["a", "b"], path, bits=5, n_files=8)
-    back = spark.read.parquet(path).withColumn("f", F.input_file_name())
-    ranges = sorted(
-        (r.z0, r.z1)
-        for r in back.groupBy("f")
-        .agg(F.min("z").alias("z0"), F.max("z").alias("z1"))
-        .collect()
-    )
-    assert 1 < len(ranges) <= 8
-    for (a0, a1), (b0, b1) in zip(ranges, ranges[1:]):
-        assert a1 <= b0  # file z ranges never overlap -> footer pruning works

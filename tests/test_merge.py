@@ -56,131 +56,6 @@ def test_merge_counts(spark):
     assert (row.inserted, row.updated) == (1, 1)
 
 
-def _pmake(spark):
-    target = spark.createDataFrame(
-        [(1, "2024-01", "a"), (2, "2024-01", "b"), (3, "2024-02", "c")],
-        "id int, month string, name string",
-    )
-    staging = spark.createDataFrame(
-        [(2, "2024-01", "B!"), (9, "2024-01", "new")],
-        "id int, month string, name string",
-    )
-    return target, staging
-
-
-def test_upsert_partitioned_merges_and_prunes(spark, tmp_path):
-    """Dynamic-overwrite MERGE rewrites only touched partition dirs:
-    the untouched partition's files are byte-identical afterwards."""
-    import os
-
-    path = str(tmp_path / "t")
-    target, staging = _pmake(spark)
-    target.write.partitionBy("month").parquet(path)
-    before = {
-        f: os.path.getmtime(os.path.join(path, "month=2024-02", f))
-        for f in os.listdir(os.path.join(path, "month=2024-02"))
-        if f.endswith(".parquet")
-    }
-    merge.upsert_partitioned(spark, path, staging, key="id", partition_col="month")
-    full = {r.id: r.name for r in spark.read.parquet(path).collect()}
-    assert full == {1: "a", 2: "B!", 3: "c", 9: "new"}
-    after = {
-        f: os.path.getmtime(os.path.join(path, "month=2024-02", f))
-        for f in os.listdir(os.path.join(path, "month=2024-02"))
-        if f.endswith(".parquet")
-    }
-    assert after == before  # untouched partition not rewritten
-
-
-def test_upsert_fileskip_touches_only_intersecting_buckets(spark, tmp_path):
-    """The file-skipping MERGE (r10 verdict #6): a contiguous staging
-    batch rewrites only the key-range buckets it intersects; every
-    other bucket directory is byte-identical afterwards, and the final
-    table equals the plain whole-table MERGE."""
-    import os
-
-    path = str(tmp_path / "t")
-    target = spark.range(100).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-    merge.range_layout_write(target, "k", path, n_buckets=8)
-    # updates in [40, 49] (buckets 3 cover ~[37..49]) + one new high key
-    staging = spark.createDataFrame(
-        [(k, k * 10 + 1) for k in range(40, 50)] + [(500, 9)], "k long, v long"
-    )
-
-    def _mtimes():
-        out = {}
-        for d in os.listdir(path):
-            if not d.startswith("_kr="):
-                continue
-            for f in os.listdir(os.path.join(path, d)):
-                if f.endswith(".parquet"):
-                    out[(d, f)] = os.path.getmtime(os.path.join(path, d, f))
-        return out
-
-    before = _mtimes()
-    out = merge.upsert_fileskip(spark, path, staging, "k")
-    after = _mtimes()
-    touched = set(out.touched_buckets)
-    assert 7 in touched and len(touched) <= 3  # narrow batch, not the table
-    untouched_same = {
-        kv for kv in before
-        if int(kv[0].split("=")[1]) not in touched
-    }
-    assert untouched_same and all(before[kv] == after[kv] for kv in untouched_same)
-
-    expected = {r.k: r.v for r in merge.upsert_anti_union(
-        target, staging, "k").collect()}
-    got = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert got == expected
-
-    # idempotent re-apply: same staging again changes nothing
-    merge.upsert_fileskip(spark, path, staging, "k")
-    got2 = {r.k: r.v for r in spark.read.parquet(path).collect()}
-    assert got2 == expected
-    # manifest tracks the extended last bucket
-    man = {r._kr: (r.min_key, r.max_key, r.n_rows)
-           for r in spark.read.parquet(f"{path}/_manifest").collect()}
-    assert len(man) == 8 and man[7][1] == 500
-
-
-def test_upsert_partitioned_bootstraps_missing_target(spark, tmp_path):
-    """First run against a nonexistent path must create the table from
-    the staging batch (reference CTAS-on-not-found, main.py:366-372)."""
-    path = str(tmp_path / "fresh")
-    _, staging = _pmake(spark)
-    out = merge.upsert_partitioned(spark, path, staging, key="id", partition_col="month")
-    assert {r.id: r.name for r in out.collect()} == {2: "B!", 9: "new"}
-    assert {r.id for r in spark.read.parquet(path).collect()} == {2, 9}
-    # and the next run merges normally on top of the bootstrap
-    more = spark.createDataFrame(
-        [(9, "2024-01", "upd"), (5, "2024-03", "e")], "id int, month string, name string"
-    )
-    merge.upsert_partitioned(spark, path, more, key="id", partition_col="month")
-    full = {r.id: r.name for r in spark.read.parquet(path).collect()}
-    assert full == {2: "B!", 9: "upd", 5: "e"}
-
-
-def test_upsert_partitioned_existing_table_failure_is_not_bootstrap(spark, tmp_path):
-    """An analysis failure on an EXISTING target (here: a table written
-    without the partition column) must propagate, NOT be misread as
-    'table absent' — the old data-loss mode overwrote the table with
-    the staging batch. Bootstrap triggers on path absence only."""
-    import pytest
-    from pyspark.errors import AnalysisException
-
-    path = str(tmp_path / "nopart")
-    spark.createDataFrame(
-        [(1, "a"), (2, "b")], "id int, name string"
-    ).write.parquet(path)  # existing table WITHOUT `month`
-    _, staging = _pmake(spark)
-    with pytest.raises(AnalysisException):
-        merge.upsert_partitioned(spark, path, staging, key="id", partition_col="month")
-    # the existing table is intact, not replaced by the staging batch
-    assert {r.id: r.name for r in spark.read.parquet(path).collect()} == {1: "a", 2: "b"}
-
-
 def test_snapshot_diff_classifies_including_null_transitions(spark):
     from data_pipeline_bigquery_to_sftp_server_spark.operators import merge as M
 
@@ -399,7 +274,9 @@ def test_scd3_new_key_has_null_prev(spark):
 def test_versioned_upsert_time_travel_and_vacuum(spark, tmp_path):
     """Snapshot tier (J1e): every version stays readable after later
     merges; only touched buckets gain generations; vacuum drops dead
-    generations without breaking retained versions."""
+    generations without breaking retained versions; a contiguous batch
+    plus a new high key rewrites only the buckets it intersects, and
+    re-applying it changes nothing."""
     import os
 
     path = str(tmp_path / "vt")
@@ -443,6 +320,41 @@ def test_versioned_upsert_time_travel_and_vacuum(spark, tmp_path):
 
     with _pytest.raises(ValueError):
         merge.read_version(spark, path, 0)
+
+    # file skipping: keys [40, 49] (bucket 3) plus one new high key
+    # touch bucket 3 and the last bucket, whose manifest range extends
+    # to the new key; every other bucket's files are left as they were
+    def _mtimes():
+        root = os.path.join(path, "data")
+        return {
+            (d, g, f): os.path.getmtime(os.path.join(root, d, g, f))
+            for d in os.listdir(root)
+            if d.startswith("_kr=")
+            for g in os.listdir(os.path.join(root, d))
+            for f in os.listdir(os.path.join(root, d, g))
+            if f.endswith(".parquet")
+        }
+
+    s3 = spark.createDataFrame(
+        [(k, k * 10 + 1) for k in range(40, 50)] + [(500, 9)], "k long, v long"
+    )
+    before = _mtimes()
+    out3 = merge.upsert_versioned(spark, path, s3, "k")
+    after = _mtimes()
+    touched = set(out3.touched_buckets)
+    assert 7 in touched and len(touched) <= 3  # narrow batch, not the table
+    untouched = {f for f in before if int(f[0].split("=")[1]) not in touched}
+    assert untouched and all(before[f] == after[f] for f in untouched)
+    expected = {**v2, **{r.k: r.v for r in s3.collect()}}
+    assert {r.k: r.v for r in merge.read_version(spark, path).collect()} \
+        == expected
+    man = merge._read_manifest(spark, path, out3.version).collect()
+    assert {r._kr for r in man} == set(range(8))
+    assert max(r.max_key for r in man if r._kr == 7) == 500
+    # idempotent re-apply: the same batch again changes no row
+    merge.upsert_versioned(spark, path, s3, "k")
+    assert {r.k: r.v for r in merge.read_version(spark, path).collect()} \
+        == expected
 
 
 def test_compact_table_preserves_contents_and_collapses_generations(spark, tmp_path):
@@ -4633,7 +4545,7 @@ def test_read_manifest_fast_path_schema(spark, tmp_path):
     produce (long, int, double, string, binary/bloom, date, timestamp,
     decimal) must read back through _read_manifest's pyarrow
     LocalRelation path with EXACTLY the schema spark.read.parquet
-    gives — and the r17 driver-side _write_manifest must round-trip
+    gives — and the r17 driver-side manifest writer must round-trip
     the same frame to the same schema under BOTH readers."""
     import datetime
     from decimal import Decimal
@@ -4680,9 +4592,9 @@ def test_read_manifest_fast_path_schema(spark, tmp_path):
     # pyarrow fast path actually taken for a local dir (LocalRelation
     # plans contain no scan node)
     assert "LocalRelation" in via_pa._jdf.queryExecution().logical().toString()
-    # driver-written manifest (r17 _write_manifest) round-trips to the
-    # IDENTICAL schema under both readers
-    merge._write_manifest(spark, df, f"{path}/_manifest/v=1")
+    # driver-written manifest (r17 _manifest_writer's publish)
+    # round-trips to the IDENTICAL schema under both readers
+    merge._manifest_writer(spark, df, f"{path}/_manifest/v=1")[1]()
     w_pa = merge._read_manifest(spark, path, 1)
     w_spark = spark.read.parquet(f"{path}/_manifest/v=1")
     assert w_pa.schema == via_pa.schema
@@ -4984,44 +4896,6 @@ def test_local_fs_path_keeps_escaped_file_uris_on_hadoop(spark, tmp_path):
     # Hadoop resolved the escape literally: nothing landed under "a b"
     assert os.listdir(base) == []
     assert os.path.isdir(tmp_path / "a%20b" / "t" / "_manifest" / "v=1")
-
-
-def test_session_overwrite_mode_untouched_by_partitioned_upserts(spark, tmp_path):
-    """upsert_partitioned and upsert_fileskip overwrite only the
-    partitions they rewrite through a per-write option; the
-    session-global partitionOverwriteMode (shared by every thread of
-    the session) keeps its value."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "static")
-        target = str(tmp_path / "p")
-        spark.createDataFrame(
-            [(1, "a", 0), (2, "b", 1)], "id int, name string, part int"
-        ).write.partitionBy("part").parquet(target)
-        merge.upsert_partitioned(
-            spark, target,
-            spark.createDataFrame([(1, "A", 0)], "id int, name string, part int"),
-            "id", "part",
-        )
-        assert spark.conf.get(key) == "static"
-        got = {r.id: r.name for r in spark.read.parquet(target).collect()}
-        assert got == {1: "A", 2: "b"}  # partition 1 was not overwritten
-        ranged = str(tmp_path / "r")
-        merge.range_layout_write(
-            spark.range(40).selectExpr("id AS k", "id * 10 AS v"),
-            "k", ranged, n_buckets=4,
-        )
-        out = merge.upsert_fileskip(
-            spark, ranged,
-            spark.createDataFrame([(5, 1)], "k long, v long"), "k",
-        )
-        assert spark.conf.get(key) == "static"
-        assert len(out.touched_buckets) == 1
-        got = {r.k: r.v for r in spark.read.parquet(ranged).collect()}
-        assert got == {**{i: i * 10 for i in range(40)}, 5: 1}
-    finally:
-        spark.conf.set(key, prev)
 
 
 def _file_rows(d, cols):

@@ -55,3 +55,41 @@ def test_rows_only_queries_are_the_documented_set():
         f"rows-only drift: +{sorted(set(rows_only) - documented)} "
         f"-{sorted(documented - set(rows_only))}"
     )
+
+
+def test_every_public_name_is_referenced():
+    """Every public top-level function or class of the package is used:
+    some Name, Attribute or import in the package, ``bench.py``,
+    ``__spark_entry__.py``, ``tools/``, ``perfbench/`` or ``tests/``
+    refers to it. Static (AST only, no Spark). A public name nothing
+    refers to is dead code: delete it, or give it a caller or a test."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "data_pipeline_bigquery_to_sftp_server_spark"
+    defined: dict[str, str] = {}
+    for f in sorted(pkg.rglob("*.py")):
+        for node in ast.parse(f.read_text()).body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not node.name.startswith("_"):
+                defined.setdefault(node.name, str(f.relative_to(root)))
+    sources = [*pkg.rglob("*.py"), root / "bench.py", root / "__spark_entry__.py"]
+    for d in ("tools", "perfbench", "tests"):
+        sources += (root / d).rglob("*.py")
+    referenced: set[str] = set()
+    for f in sources:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if isinstance(node, ast.Name):
+                referenced.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                referenced.add(node.attr)
+            elif isinstance(node, ast.alias):
+                referenced.add(node.name.rsplit(".", 1)[-1])
+    unused = sorted(
+        f"{where}: {name}"
+        for name, where in defined.items()
+        if name not in referenced
+    )
+    assert not unused, f"public names nothing refers to: {unused}"

@@ -4,7 +4,7 @@ SFTP transport roundtrip (S5/S6), staging lifecycle (S4/S8/S9)."""
 import pytest
 from pyspark.sql import types as T
 
-from data_pipeline_bigquery_to_sftp_server_spark.sources import files, rest, sftp
+from data_pipeline_bigquery_to_sftp_server_spark.sources import files, rest, sftp, sheets
 
 
 def test_scan_pages_stops_on_empty_and_short_page(spark):
@@ -154,20 +154,25 @@ def test_permissive_json_quarantines_malformed_lines(spark, tmp_path):
     assert rows[0]._corrupt_record is None
 
 
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    """1000 rows scattered over 50 files must compact to the expected
-    ceil(rows/target) file count, preserving the data."""
-    from data_pipeline_bigquery_to_sftp_server_spark.sources import files
-
-    src = str(tmp_path / "small")
-    dst = str(tmp_path / "compact")
-    spark.range(1000).repartition(50).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/part-*.parquet")) == 50
-    n_files = files.compact_parquet(spark, src, dst, target_rows_per_file=500)
-    assert n_files == 2
-    assert spark.read.parquet(dst).count() == 1000
+def test_read_sheet_latest_tab_explicit_schema(spark):
+    """The README's Sheets flow: the latest tab (max name — tabs are
+    date-named) reads under the given schema, a key missing from a row
+    reads as NULL, and a sheet with no tabs raises ValueError."""
+    client = sheets.FakeSheetClient(
+        {
+            "2024-01-31": [{"id": 1, "name": "old"}],
+            "2024-03-31": [{"id": 3, "name": "c"}, {"id": 4}],
+            "2024-02-29": [{"id": 2, "name": "mid"}],
+        }
+    )
+    schema = "id INT, name STRING"
+    df = sheets.read_sheet(spark, client, "s1", schema)
+    assert df.schema == T.StructType(
+        [T.StructField("id", T.IntegerType()), T.StructField("name", T.StringType())]
+    )
+    assert sorted(tuple(r) for r in df.collect()) == [(3, "c"), (4, None)]
+    with pytest.raises(ValueError, match="no tabs"):
+        sheets.read_sheet(spark, sheets.FakeSheetClient({}), "empty", schema)
 
 
 def test_schema_evolution_merged_read_nulls_early_batches(spark, sf_dir):
