@@ -691,18 +691,15 @@ def _point_cols_of(manifest: DataFrame) -> list[str]:
     return [c[6:] for c in manifest.columns if c.startswith("bloom_")]
 
 
-def _bloom_bits_of(manifest: DataFrame, point_cols: list[str]) -> int:
-    """The table's Bloom width (bits), recovered from any committed
-    bitmap's byte length — fixed per table at bootstrap."""
-    for c in point_cols:
-        r = (
-            manifest.where(F.col(f"bloom_{c}").isNotNull())
-            .select(F.octet_length(f"bloom_{c}").alias("n"))
-            .first()
-        )
-        if r is not None:
-            return int(r.n) * 8
-    raise ValueError("no committed Bloom bitmap to recover num_bits from")
+def _bloom_width(bitmaps) -> int | None:
+    """The table's Bloom width (bits), recovered from the byte length of
+    the first non-NULL bitmap among ``bitmaps`` — manifest bytes the
+    driver already holds; the width is fixed per table at bootstrap.
+    None when every bitmap is NULL."""
+    for bm in bitmaps:
+        if bm is not None:
+            return len(bm) * 8
+    return None
 
 
 def _bloom_rows(
@@ -778,26 +775,18 @@ def _bloom_probe_positions(
 ) -> list[int]:
     """The probe value's k bit positions, computed through the SAME
     JVM xxhash64 the write side used: Python must not re-implement the
-    hash, it must ASK it. The k columns are literals projected over a
-    one-row Arrow-built LocalRelation, which the optimizer folds into a
-    LocalRelation of its own, so ``collect()`` answers on the driver
-    and schedules no job; a ``range(1)`` source would schedule one."""
-    row = (
-        local_frame(spark, [(0,)], "_ int")
-        .select(
-            *[
-                F.pmod(
-                    F.xxhash64(
-                        F.lit(value).cast(dtype), F.lit(_BLOOM_SEED + i)
-                    ),
-                    F.lit(num_bits),
-                ).alias(f"p{i}")
-                for i in range(_BLOOM_HASHES)
-            ]
-        )
-        .collect()[0]
+    hash, it must ASK it. The k positions are one parameterized
+    statement over a one-row VALUES table (one py4j planning round trip
+    instead of a Column tree per position); the optimizer folds it into
+    a LocalRelation, so ``collect()`` answers on the driver and
+    schedules no job. A statement with no FROM would schedule one."""
+    cols = ", ".join(
+        f"pmod(xxhash64(CAST(:v AS {dtype.simpleString()}), {_BLOOM_SEED + i}),"
+        f" {int(num_bits)})"
+        for i in range(_BLOOM_HASHES)
     )
-    return [int(row[f"p{i}"]) for i in range(_BLOOM_HASHES)]
+    row = spark.sql(f"SELECT {cols} FROM VALUES (0)", args={"v": value}).collect()[0]
+    return [int(p) for p in row]
 
 
 def _bloom_hit(bitmap: bytes | bytearray | None, positions: list[int]) -> bool:
@@ -867,6 +856,18 @@ def _as_nullable(dt):
     return dt
 
 
+def _data_files(local_dir: str) -> list[str]:
+    """The data files directly in ``local_dir``, sorted: every file but
+    the ``_``/``.`` markers and checksums Spark and Hadoop leave."""
+    import os
+
+    return sorted(
+        os.path.join(local_dir, n)
+        for n in os.listdir(local_dir)
+        if not n.startswith(("_", ".")) and os.path.isfile(os.path.join(local_dir, n))
+    )
+
+
 def _footer_schema(local_dir: str) -> T.StructType | None:
     """The data schema of the parquet files directly in ``local_dir``,
     read off ONE footer with pyarrow: a generation or DV bucket
@@ -875,20 +876,14 @@ def _footer_schema(local_dir: str) -> T.StructType | None:
     no column, as in Spark's inference); None when the footer carries
     no Spark schema or cannot be read — the caller then asks Spark."""
     import json
-    import os
 
     import pyarrow.parquet as pq
 
     try:
-        files = sorted(
-            n
-            for n in os.listdir(local_dir)
-            if not n.startswith(("_", "."))
-            and os.path.isfile(os.path.join(local_dir, n))
-        )
+        files = _data_files(local_dir)
         if not files:
             return T.StructType([])
-        meta = pq.read_metadata(os.path.join(local_dir, files[0])).metadata
+        meta = pq.read_metadata(files[0]).metadata
         raw = (meta or {}).get(_SPARK_ROW_METADATA)
         if raw is None:
             return None
@@ -933,7 +928,9 @@ def _partition_schema(spark: SparkSession, data, names) -> T.StructType | None:
     return out
 
 
-def _read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
+def _read_manifest(
+    spark: SparkSession, path: str, version: int, arrow=None
+) -> DataFrame:
     """One committed manifest version as a DRIVER-LOCAL DataFrame (r16
     optimization — guide §5: the driver should do almost no data work,
     but the commit LOG is driver-sized metadata, O(n_buckets x live
@@ -952,19 +949,34 @@ def _read_manifest(spark: SparkSession, path: str, version: int) -> DataFrame:
     the path provably living on the LOCAL filesystem (r16 advice —
     a remote defaultFS must not fall through to a stale same-named
     local directory); any other filesystem takes the Hadoop-routed
-    distributed read — behavior, not layout, is what changes."""
-    d = f"{path}/_manifest/v={version}"
-    local = _local_fs_path(spark, d)
-    if local is not None:
-        try:
-            import pyarrow.parquet as pq
+    distributed read — behavior, not layout, is what changes.
 
-            # pyarrow.dataset ignores "_"-prefixed files (_SUCCESS) by
-            # default
-            return local_frame(spark, pq.read_table(local))
+    ``arrow`` is this version's manifest as _manifest_arrow already
+    read it, so a caller that needs its bytes reads the files once."""
+    if arrow is None:
+        arrow = _manifest_arrow(spark, path, version)
+    if arrow is not None:
+        try:
+            return local_frame(spark, arrow)
         except Exception:
             pass
-    return spark.read.parquet(d)
+    return spark.read.parquet(f"{path}/_manifest/v={version}")
+
+
+def _manifest_arrow(spark: SparkSession, path: str, version: int):
+    """One committed manifest version as a pyarrow Table read on the
+    driver, or None off the local filesystem or when pyarrow cannot
+    read it (the caller then reads it with Spark)."""
+    local = _local_fs_path(spark, f"{path}/_manifest/v={version}")
+    if local is None:
+        return None
+    try:
+        import pyarrow.parquet as pq
+
+        # pyarrow.dataset ignores "_"-prefixed files (_SUCCESS) by default
+        return pq.read_table(local)
+    except Exception:
+        return None
 
 
 def _copy_manifest_dir(spark: SparkSession, src_dir: str, dst_dir: str) -> None:
@@ -1273,13 +1285,102 @@ def _apply_dv(data: DataFrame, dv: DataFrame | None) -> DataFrame:
     no DV entry pass through."""
     if dv is None:
         return data
-    key = [c for c in dv.columns if c not in ("_kr", "live_gen")][0]
+    key = _dv_key(dv.columns)
     d = dv.select(key, "live_gen")
     return (
         data.join(d, key, "left")
         .where(F.col("live_gen").isNull() | (F.col("_gen") >= F.col("live_gen")))
         .drop("live_gen")
     )
+
+
+def _dv_key(columns) -> str:
+    """The DV state's key column: the table's PHYSICAL merge key, the
+    one column that is neither ``_kr`` nor ``live_gen``."""
+    return [c for c in columns if c not in ("_kr", "live_gen")][0]
+
+
+def _dv_files(local_dir: str) -> list[str]:
+    """The data files of the DV state directory ``local_dir``, listed
+    explicitly: those of its ``_kr=<b>`` bucket directories, which
+    pyarrow's discovery skips for their ``_`` prefix, and the flat
+    layout's own. [] when the directory does not exist or holds only
+    markers (a zero-entry DV state)."""
+    import os
+
+    if not os.path.isdir(local_dir):
+        return []
+    out = _data_files(local_dir)
+    for n in sorted(os.listdir(local_dir)):
+        if n.startswith("_kr=") and os.path.isdir(os.path.join(local_dir, n)):
+            out += _data_files(os.path.join(local_dir, n))
+    return out
+
+
+def _arrow_eq_is_sparks(dtype, value) -> bool:
+    """Whether pyarrow's ``==`` between a column of Spark type ``dtype``
+    and the Python ``value`` answers what Spark's ``col = value`` does:
+    an int against an integral column, a str against a string column of
+    the default (binary) collation, a date against a date column.
+    Anything else — casts, time zones, decimals, floats — is Spark's to
+    decide."""
+    import datetime
+
+    if isinstance(value, bool):
+        return False
+    if isinstance(value, int):
+        return isinstance(dtype, T.IntegralType)
+    if isinstance(value, str):
+        return dtype == T.StringType()
+    return type(value) is datetime.date and isinstance(dtype, T.DateType)
+
+
+def _apply_dv_point(
+    spark: SparkSession, path: str, version: int, data: DataFrame, col: str, value
+) -> DataFrame:
+    """``data`` resolved against ``version``'s deletion vector for the
+    probe ``col = value``. When ``col`` is the table's key, only the
+    probed key's entry matters, and it becomes the literal predicate
+    ``_gen >= live_gen`` (no entry: every copy is live) — no DV join,
+    so no broadcast job. The entry is read on the driver where the DV
+    provably lives on the local filesystem and pyarrow decides the
+    equality as Spark would (_arrow_eq_is_sparks); otherwise it is one
+    Spark collect of the key-filtered DV. A probe on any other column
+    keeps _apply_dv's join."""
+    import os
+
+    gens = None
+    local = _local_fs_path(spark, f"{path}/_dv/v={version}")
+    if local is not None:
+        files = _dv_files(local)
+        if not files:
+            return data  # no DV state: nothing is superseded
+        sch = _footer_schema(os.path.dirname(files[0]))
+        if sch is not None and _dv_key(sch.names) != col:
+            return _apply_dv(data, _read_dv(spark, path, version))
+        if sch is not None and _arrow_eq_is_sparks(sch[col].dataType, value):
+            import pyarrow.parquet as pq
+
+            gens = (
+                pq.read_table(
+                    files,
+                    columns=["live_gen"],
+                    filters=[(col, "==", value)],
+                    partitioning=None,
+                )
+                .column(0)
+                .to_pylist()
+            )
+    if gens is None:
+        dv = _read_dv(spark, path, version)
+        if dv is None or _dv_key(dv.columns) != col:
+            return _apply_dv(data, dv)
+        gens = [
+            r[0]
+            for r in dv.where(F.col(col) == F.lit(value)).select("live_gen").collect()
+        ]
+    # a DV state holds one entry per key (_dv_union replaces old ones)
+    return data.where(F.col("_gen") >= max(gens)) if gens else data
 
 
 def _gen_root(path: str, r) -> str:
@@ -1573,7 +1674,8 @@ class _Table(NamedTuple):
     column mapping in force, the PHYSICAL merge key, and the stats,
     point (Bloom) columns and Bloom width every later commit keeps
     maintaining (recovered from the manifest schema — the bootstrap
-    declared them). ``bloom_bits`` None: recovered when needed."""
+    declared them). ``bloom_bits`` None: no bitmap was at hand when the
+    table was opened; _manifest_rows recovers it when it needs it."""
 
     v: int
     manifest: DataFrame | None
@@ -1595,15 +1697,23 @@ def _open_table(
             f"{what}: no table at {path} — bootstrap with versioned_layout_write"
         )
     v = versions[-1]
-    manifest = _read_manifest(spark, path, v)
+    arrow = _manifest_arrow(spark, path, v)
+    manifest = _read_manifest(spark, path, v, arrow)
     sch = _schema_as_of(spark, path, v)
+    point_cols = _point_cols_of(manifest)
+    bits = None
+    if arrow is not None:
+        bits = _bloom_width(
+            bm for c in point_cols for bm in arrow.column(f"bloom_{c}").to_pylist()
+        )
     return _Table(
         v,
         manifest,
         sch,
         None if key is None else _phys_name(sch, key),
         _stats_cols_of(manifest),
-        _point_cols_of(manifest),
+        point_cols,
+        bits,
     )
 
 
@@ -1624,8 +1734,15 @@ def _manifest_rows(
                 c, F.lit(None).cast(t.manifest.schema[f"min_{c}"].dataType)
             )
     bits = t.bloom_bits
-    if bits is None:
-        bits = _bloom_bits_of(t.manifest, t.point_cols) if t.point_cols else 0
+    if bits is None and t.point_cols:
+        # off the local filesystem the driver holds no manifest bytes
+        bits = _bloom_width(
+            bm
+            for r in t.manifest.select(*[f"bloom_{c}" for c in t.point_cols]).collect()
+            for bm in r
+        )
+        if bits is None:
+            raise ValueError("no committed Bloom bitmap to recover num_bits from")
     rows = _with_bloom(
         src.groupBy("_kr").agg(*_manifest_agg(t.key, t.stats_cols)),
         src,
@@ -2285,35 +2402,48 @@ def read_version_point(
     the RESULT is exact regardless of FPR; only ``dirs_read`` carries
     the (write-side-tunable) noise. A directory with a NULL bitmap
     (committed before the column was declared) degrades to 'cannot
-    prune'. The version's deletion vector applies after the scan as in
-    read_version. Attaches ``dirs_read``/``dirs_total``.
+    prune'. Attaches ``dirs_read``/``dirs_total``.
 
-    Scale: planning the lookup schedules no Spark job on a local
-    table. The probe is k=6 JVM xxhash64 calls folded on the driver
-    over a one-row Arrow LocalRelation (the probe must ask the SAME
-    hash the write side used), then a driver-side bit test over the
-    manifest (bounded: n_buckets x generations rows); at 10 bits/key
-    the bitmaps add ~1.25 bytes per row to the commit log. The probed
-    column's type comes from the newest directory's footer schema (the
-    schema Spark's own inference reads) so the literal hashes
-    identically to the stored column, and the scan and the deletion
-    vector plan from footer schemas too (_read_gen_dirs, _read_dv).
-    Only the final collect runs jobs. Off the local filesystem, each
-    schema is inferred by Spark as before."""
+    Scale: on a local table, planning the lookup runs no Spark query
+    but the probe statement, which the driver answers without a job.
+    The manifest rows come from the pyarrow-read manifest; the probe's
+    k=6 positions are one JVM statement (the probe must ask the SAME
+    xxhash64 the write side used), then a driver-side bit test over
+    the manifest (bounded: n_buckets x generations rows); at 10
+    bits/key the bitmaps add ~1.25 bytes per row to the commit log.
+    The probed column's type comes from the newest directory's footer
+    schema (the schema Spark's own inference reads) so the literal
+    hashes identically to the stored column, and the scan plans from
+    footer schemas too (_read_gen_dirs). A probe on the table's merge
+    key reads that key's deletion-vector entry on the driver and
+    applies it as the literal ``_gen >= live_gen`` (_apply_dv_point),
+    so a hit schedules one job, the scan; a probe on another column
+    joins the deletion vector as read_version does, which schedules a
+    second job to broadcast it. A probe no directory can hold returns
+    an empty frame of the version's schema and schedules none. Off the
+    local filesystem, manifests and schemas are read by Spark as
+    before and the key's DV entry costs one more collect."""
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"no manifest versions under {path}")
     v = versions[-1] if version is None else int(version)
     if v not in versions:
         raise ValueError(f"version {v} not in {versions}")
-    manifest = _read_manifest(spark, path, v)
-    rows = manifest.collect()
+    arrow = _manifest_arrow(spark, path, v)
+    if arrow is None:
+        manifest = spark.read.parquet(f"{path}/_manifest/v={v}")
+        columns, rows = manifest.columns, manifest.collect()
+    else:
+        from pyspark.sql import Row
+
+        columns = arrow.column_names
+        rows = [Row(**r) for r in arrow.to_pylist()]
     # r16 column mapping: Bloom bitmaps key on PHYSICAL names
     lsch = _schema_as_of(spark, path, v)
     col = _phys_name(lsch, col, "read_version_point col")
     bcol = f"bloom_{col}"
-    all_dirs = [_gen_dir(path, r) for r in rows]
-    if bcol in manifest.columns:
+    num_bits = _bloom_width(r[bcol] for r in rows) if bcol in columns else None
+    if num_bits is not None:
         # the column's Spark type, from a live footer schema — the
         # literal must hash exactly as the stored column did. Probe
         # one directory at a time (newest first: evolution adds
@@ -2321,7 +2451,7 @@ def read_version_point(
         # directory — the lookup's planning cost must not scale with
         # generation count.
         dtype = None
-        for d in sorted(all_dirs, reverse=True):
+        for d in sorted((_gen_dir(path, r) for r in rows), reverse=True):
             # the footer's Spark schema where the directory is provably
             # local; Spark's inference otherwise. No basePath: only the
             # column's type is wanted, and a clone's external directory
@@ -2335,28 +2465,18 @@ def read_version_point(
                 break
         if dtype is None:
             raise ValueError(f"read_version_point: no directory carries {col!r}")
-        num_bits = _bloom_bits_of(manifest, [col])
         positions = _bloom_probe_positions(spark, value, dtype, num_bits)
         live = [r for r in rows if _bloom_hit(r[bcol], positions)]
     else:
         live = list(rows)  # no bitmap for col: cannot prune
-    if not live:
-        out = _project_logical(
-            read_version(spark, path, v, physical=True)
-            .where(F.lit(False))
-            .where(F.col(col) == F.lit(value)),
-            lsch,
+    if live:
+        data = _apply_dv_point(
+            spark, path, v, _read_gen_dirs(spark, path, live), col, value
         )
-        out.dirs_read = 0
-        out.dirs_total = len(rows)
-        return out
-    data = _read_gen_dirs(spark, path, live)
-    out = _project_logical(
-        _apply_dv(data, _read_dv(spark, path, v)).where(
-            F.col(col) == F.lit(value)
-        ),
-        lsch,
-    )
+        out = data.where(F.col(col) == F.lit(value))
+    else:  # no directory can hold the value: no rows, no DV, no job
+        out = _read_gen_dirs(spark, path, rows).where(F.lit(False))
+    out = _project_logical(out, lsch)
     out.dirs_read = len(live)
     out.dirs_total = len(rows)
     return out
