@@ -1319,17 +1319,18 @@ def _dv_files(local_dir: str) -> list[str]:
 
 def _arrow_eq_is_sparks(dtype, value) -> bool:
     """Whether pyarrow's ``==`` between a column of Spark type ``dtype``
-    and the Python ``value`` answers what Spark's ``col = value`` does:
-    an int against an integral column, a str against a string column of
-    the default (binary) collation, a date against a date column.
-    Anything else — casts, time zones, decimals, floats — is Spark's to
-    decide."""
+    and the Python ``value`` answers what Spark's ``col = value`` does,
+    one key to one key: a 64-bit int against an integral column, a str
+    against a string column of the default (binary) collation, a date
+    against a date column. Anything else — casts, time zones, decimals,
+    floats, an int against a string key (Spark matches "5" and "05" to
+    5) — is Spark's to decide."""
     import datetime
 
     if isinstance(value, bool):
         return False
     if isinstance(value, int):
-        return isinstance(dtype, T.IntegralType)
+        return isinstance(dtype, T.IntegralType) and -(2**63) <= value < 2**63
     if isinstance(value, str):
         return dtype == T.StringType()
     return type(value) is datetime.date and isinstance(dtype, T.DateType)
@@ -1339,26 +1340,26 @@ def _apply_dv_point(
     spark: SparkSession, path: str, version: int, data: DataFrame, col: str, value
 ) -> DataFrame:
     """``data`` resolved against ``version``'s deletion vector for the
-    probe ``col = value``. When ``col`` is the table's key, only the
-    probed key's entry matters, and it becomes the literal predicate
-    ``_gen >= live_gen`` (no entry: every copy is live) — no DV join,
-    so no broadcast job. The entry is read on the driver where the DV
+    probe ``col = value``. When ``col`` is the table's key, the DV
     provably lives on the local filesystem and pyarrow decides the
-    equality as Spark would (_arrow_eq_is_sparks); otherwise it is one
-    Spark collect of the key-filtered DV. A probe on any other column
-    keeps _apply_dv's join."""
+    equality as Spark would (_arrow_eq_is_sparks), only the probed
+    key's entry matters: it is read on the driver and becomes the
+    literal predicate ``_gen >= live_gen`` (no entry: every copy is
+    live) — no DV join, so no broadcast job. Every other probe keeps
+    _apply_dv's join, which resolves each key against its own entry."""
     import os
 
-    gens = None
     local = _local_fs_path(spark, f"{path}/_dv/v={version}")
     if local is not None:
         files = _dv_files(local)
         if not files:
             return data  # no DV state: nothing is superseded
         sch = _footer_schema(os.path.dirname(files[0]))
-        if sch is not None and _dv_key(sch.names) != col:
-            return _apply_dv(data, _read_dv(spark, path, version))
-        if sch is not None and _arrow_eq_is_sparks(sch[col].dataType, value):
+        if (
+            sch is not None
+            and _dv_key(sch.names) == col
+            and _arrow_eq_is_sparks(sch[col].dataType, value)
+        ):
             import pyarrow.parquet as pq
 
             gens = (
@@ -1371,16 +1372,10 @@ def _apply_dv_point(
                 .column(0)
                 .to_pylist()
             )
-    if gens is None:
-        dv = _read_dv(spark, path, version)
-        if dv is None or _dv_key(dv.columns) != col:
-            return _apply_dv(data, dv)
-        gens = [
-            r[0]
-            for r in dv.where(F.col(col) == F.lit(value)).select("live_gen").collect()
-        ]
-    # a DV state holds one entry per key (_dv_union replaces old ones)
-    return data.where(F.col("_gen") >= max(gens)) if gens else data
+            # a DV state holds one entry per key (_dv_union replaces
+            # old ones), and the equality above matches one key
+            return data.where(F.col("_gen") >= max(gens)) if gens else data
+    return _apply_dv(data, _read_dv(spark, path, version))
 
 
 def _gen_root(path: str, r) -> str:
@@ -1448,6 +1443,22 @@ def _read_gen_dirs(spark: SparkSession, path: str, rows) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
     return out
+
+
+def _empty_gen_dirs(spark: SparkSession, path: str, rows) -> DataFrame:
+    """An empty frame with the schema _read_gen_dirs gives ``rows``.
+    Where the rows share one data root and _gen_dirs_schema derives
+    the schema from their footers, it is a driver-local frame: no
+    directory is listed, so no listing job however many there are, and
+    collecting it schedules none. Otherwise it is the scan filtered to
+    nothing."""
+    roots = {_gen_root(path, r) for r in rows}
+    if len(roots) == 1:
+        root = roots.pop()
+        schema = _gen_dirs_schema(spark, root, sorted(_gen_dir(path, r) for r in rows))
+        if schema is not None:
+            return local_frame(spark, [], schema)
+    return _read_gen_dirs(spark, path, rows).where(F.lit(False))
 
 
 def _table_meta_json(spark: SparkSession, path: str, **meta) -> str:
@@ -2419,10 +2430,13 @@ def read_version_point(
     applies it as the literal ``_gen >= live_gen`` (_apply_dv_point),
     so a hit schedules one job, the scan; a probe on another column
     joins the deletion vector as read_version does, which schedules a
-    second job to broadcast it. A probe no directory can hold returns
-    an empty frame of the version's schema and schedules none. Off the
-    local filesystem, manifests and schemas are read by Spark as
-    before and the key's DV entry costs one more collect."""
+    second job to broadcast it. So does a key probe whose value pyarrow
+    cannot compare as Spark does (an int against a string key), and
+    any probe off the local filesystem, where manifests and schemas are
+    read by Spark as before. A probe no directory can hold returns an
+    empty frame of the version's schema, built from the directories'
+    footers without listing them (_empty_gen_dirs), and schedules no
+    job."""
     versions = _list_versions(spark, f"{path}/_manifest")
     if not versions:
         raise FileNotFoundError(f"no manifest versions under {path}")
@@ -2475,7 +2489,7 @@ def read_version_point(
         )
         out = data.where(F.col(col) == F.lit(value))
     else:  # no directory can hold the value: no rows, no DV, no job
-        out = _read_gen_dirs(spark, path, rows).where(F.lit(False))
+        out = _empty_gen_dirs(spark, path, rows)
     out = _project_logical(out, lsch)
     out.dirs_read = len(live)
     out.dirs_total = len(rows)
@@ -4211,7 +4225,7 @@ def table_changes(
         # stamp, when present and non-empty, already proves changes)
         if stamped is None and not changed.limit(1).count():
             continue
-        key = [c for c in dv.columns if c not in ("_kr", "live_gen")][0]
+        key = _dv_key(dv.columns)
         manifest = _read_manifest(spark, path, v)
         gen_rows = [r for r in manifest.collect() if r.gen == v]
         fresh = (

@@ -1,9 +1,11 @@
 """Point reads (merge.read_version_point): a probe on the table's merge
-key answers exactly what a full read filtered on the key answers, at
-every version, after the key is renamed and off the local filesystem;
+key answers exactly what a full read filtered on the key answers, for
+string, long and date keys, at every version, after the key is renamed,
+off the local filesystem and for a value Spark compares across types;
 it schedules one Spark job when it hits and none when no directory can
-hold the key. A probe on another Bloom column keeps the deletion-vector
-join. The one-statement Bloom probe hashes as the Column-built one did."""
+hold the key. A probe on another Bloom column, off the local
+filesystem or across types keeps the deletion-vector join. The
+one-statement Bloom probe hashes as the Column-built one did."""
 
 import datetime
 import decimal
@@ -66,11 +68,71 @@ def table(spark, tmp_path_factory):
     return path
 
 
+def _day(i):
+    return datetime.date(2024, 1, 1) + datetime.timedelta(days=i)
+
+
+# per key type: the column type and the key of row i
+TYPED = {"long": ("long", lambda i: i * 1000 + 7), "date": ("date", _day)}
+
+
+@pytest.fixture(scope="module")
+def typed_tables(spark, tmp_path_factory):
+    """One 4-bucket table per TYPED key type, key ``k`` with a Bloom
+    index, after the same shape of history as ``table``: v1 updates
+    key 5 and inserts key 100, v2 deletes key 20, v3 updates key 5
+    again."""
+    out = {}
+    for name, (ddl, key_of) in TYPED.items():
+        path = str(tmp_path_factory.mktemp(f"point_{name}") / "t")
+        schema = f"k {ddl}, v long"
+        merge.versioned_layout_write(
+            spark.createDataFrame([(key_of(i), i) for i in range(60)], schema),
+            "k", path, n_buckets=4, point_cols=("k",), bloom_bits=1 << 12,
+        )
+
+        def upsert(rows):
+            merge.upsert_versioned_dv(spark, path, spark.createDataFrame(rows, schema), "k")
+
+        upsert([(key_of(5), 500), (key_of(100), 600)])
+        merge.delete_versioned(
+            spark, path, spark.createDataFrame([(key_of(20),)], f"k {ddl}"), "k"
+        )
+        upsert([(key_of(5), 501)])
+        out[name] = path
+    return out
+
+
 @pytest.mark.parametrize("version", [None, 1, 3])
-@pytest.mark.parametrize("key", [BASE, UPDATED, INSERTED, DELETED, ABSENT])
-def test_key_probe_equals_filtered_read(spark, table, key, version):
-    got = _same_answer(spark, table, "_id", key, version)
+@pytest.mark.parametrize(
+    "kind,key",
+    [("string", k) for k in (BASE, UPDATED, INSERTED, DELETED, ABSENT)]
+    + [
+        (name, key_of(i))
+        for name, (_, key_of) in TYPED.items()
+        for i in (1, 5, 100, 20, 999)  # base, updated, inserted, deleted, absent
+    ],
+)
+def test_key_probe_equals_filtered_read(spark, table, typed_tables, kind, key, version):
+    path, col = (table, "_id") if kind == "string" else (typed_tables[kind], "k")
+    got = _same_answer(spark, path, col, key, version)
     assert not _has_join(got)  # the DV entry is a literal predicate
+
+
+def test_key_probe_across_types_keeps_the_dv_join(spark, tmp_path):
+    """Spark matches the int 5 to the string keys "5" and "05", so the
+    DV entry of "5" must not filter the copies of "05"."""
+    path = str(tmp_path / "t")
+    schema = "k string, v long"
+    merge.versioned_layout_write(
+        spark.createDataFrame([("5", 1), ("05", 2), ("6", 3), ("7", 4)], schema),
+        "k", path, n_buckets=2,
+    )
+    merge.upsert_versioned_dv(spark, path, spark.createDataFrame([("5", 50)], schema), "k")
+    got = _same_answer(spark, path, "k", 5)
+    assert sorted(r.v for r in got.collect()) == [2, 50]
+    assert _has_join(got)
+    assert not _has_join(_same_answer(spark, path, "k", "5"))
 
 
 def test_key_probe_answers_by_version(spark, table):
@@ -118,8 +180,8 @@ def test_key_probe_after_renaming_the_key(spark, tmp_path):
 
 
 def test_key_probe_off_the_local_filesystem(spark, tmp_path):
-    """An escaped ``file:`` URI takes the Hadoop route: the key's DV
-    entry comes from one Spark collect of the key-filtered DV."""
+    """An escaped ``file:`` URI takes the Hadoop route, where the key
+    probe joins the DV as any other probe does."""
     base = tmp_path / "a b"
     base.mkdir()
     uri = base.as_uri() + "/t"
@@ -133,7 +195,9 @@ def test_key_probe_off_the_local_filesystem(spark, tmp_path):
     )
     merge.delete_versioned(spark, uri, spark.createDataFrame([(4,)], "k long"), "k")
     for k in (1, 3, 4, 30, 99):
-        _same_answer(spark, uri, "k", k)
+        got = _same_answer(spark, uri, "k", k)
+        if got.dirs_read:
+            assert _has_join(got)
 
 
 def _jobs(spark, tracer, build):
@@ -151,6 +215,25 @@ def test_key_probe_jobs(spark, table):
             spark, table, "_id", key)) == 1
     assert _jobs(spark, tracer, lambda: merge.read_version_point(
         spark, table, "_id", ABSENT)) == 0
+
+
+def test_absent_probe_lists_no_directory(spark, tmp_path):
+    """Past Spark's parallel partition discovery threshold (32 paths) a
+    scan's file listing is a job of its own; the empty frame of an
+    absent probe lists nothing, so it schedules none there either."""
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(f"id{i:03d}", i, f"s{i}") for i in range(120)], SCHEMA),
+        "_id", path, n_buckets=40, point_cols=("_id",), bloom_bits=1 << 12,
+    )
+    threshold = int(spark.conf.get(
+        "spark.sql.sources.parallelPartitionDiscovery.threshold", "32"))
+    probe = merge.read_version_point(spark, path, "_id", ABSENT)
+    assert probe.dirs_read == 0 and probe.dirs_total > threshold
+    tracer = Tracer(spark, enabled=True)
+    assert _jobs(spark, tracer, lambda: merge.read_version_point(
+        spark, path, "_id", ABSENT)) == 0
+    assert probe.schema == merge.read_version(spark, path).schema
 
 
 def _column_positions(spark, value, dtype, num_bits):
