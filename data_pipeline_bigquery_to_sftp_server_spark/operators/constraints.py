@@ -30,6 +30,8 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_to_sftp_server_spark import tablelog
+
 _FILE = "_constraints.json"
 
 
@@ -64,7 +66,7 @@ def set_constraints(
 
     _write_small_file(
         spark,
-        f"{path}/_manifest/{_FILE}",
+        tablelog.table_file(path, _FILE),
         json.dumps(dict(constraints), sort_keys=True),
     )
 
@@ -76,7 +78,7 @@ def get_constraints(spark: SparkSession, path: str) -> dict[str, str]:
         _read_small_file,
     )
 
-    raw = _read_small_file(spark, f"{path}/_manifest/{_FILE}")
+    raw = _read_small_file(spark, tablelog.table_file(path, _FILE))
     return {} if raw is None else json.loads(raw)
 
 

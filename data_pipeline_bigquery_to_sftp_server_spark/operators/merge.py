@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from data_pipeline_bigquery_to_sftp_server_spark import tablelog
 from data_pipeline_bigquery_to_sftp_server_spark.session import local_frame
 
 
@@ -348,60 +349,51 @@ def _fs(spark: SparkSession, path: str):
     return jvm, fs, jp
 
 
+_LOCAL_FILES = tablelog.ArrowFiles()
+
+
+def _files(spark: SparkSession, path: str):
+    """(file layer, ``path`` as that layer names it) for a table's small
+    files: pyarrow where _local_fs_path proves the path local, Hadoop
+    everywhere else."""
+    local = _local_fs_path(spark, path)
+    if local is not None:
+        return _LOCAL_FILES, local
+    return tablelog.HadoopFiles(spark, path), path
+
+
+def _snapshot(spark: SparkSession, path: str) -> tablelog.Snapshot:
+    """The commit log of the table at ``path`` from one listing of its
+    ``_manifest/``: each public call takes one and passes it down."""
+    return tablelog.Snapshot(*_files(spark, path))
+
+
 def _write_small_file(
     spark: SparkSession, path: str, payload: str, overwrite: bool = True
 ) -> None:
-    """Write one small metadata file (tags/constraints/op/meta
-    sidecars) through the Hadoop FS — one place to get encoding,
-    overwrite semantics, and stream closing right. ``overwrite=False``
-    is a create-exclusive: it raises when the file exists."""
-    _, fs, p = _fs(spark, path)
-    out = fs.create(p, overwrite)
-    try:
-        out.write(bytearray(payload, "utf-8"))
-    finally:
-        out.close()
+    """Write one small metadata file (sidecars, tags, constraints)
+    through the table's file layer. ``overwrite=False`` is a
+    create-exclusive: it raises when the file exists."""
+    files, p = _files(spark, path)
+    files.write(p, payload, overwrite)
 
 
 def _read_small_file(spark: SparkSession, path: str) -> str | None:
     """Read one small metadata file as text; None when absent."""
-    jvm, fs, p = _fs(spark, path)
-    if not fs.exists(p):
-        return None
-    stream = fs.open(p)
-    try:
-        raw = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return raw.decode("utf-8")
+    files, p = _files(spark, path)
+    return files.read(p)
 
 
 def _list_versions(spark: SparkSession, manifest_root: str) -> list[int]:
-    """COMMITTED manifest versions only: a version counts when its
-    ``v=<n>`` DIRECTORY carries the committer's ``_SUCCESS`` marker —
-    in-flight commits (a ``v=<n>.begin`` intent file, or a manifest
-    directory whose write is mid-air) are invisible to readers, which
-    is the read side of snapshot isolation."""
-    jvm, fs, jp = _fs(spark, manifest_root)
-    if not fs.exists(jp):
-        return []
-    out = []
-    for st in fs.listStatus(jp):
-        name = st.getPath().getName()
-        if not (name.startswith("v=") and st.isDirectory()):
-            continue  # .begin / .meta intent files ride the same dir
-        if not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{manifest_root}/{name}/_SUCCESS")
-        ):
-            continue  # mid-write manifest: not yet a committed version
-        out.append(int(name[2:]))
-    return sorted(out)
+    """The COMMITTED versions of the table whose log is ``manifest_root``."""
+    return _snapshot(spark, manifest_root.rsplit("/", 1)[0]).versions
 
 
 def _begin_commit(spark: SparkSession, path: str, version: int, writer: str) -> None:
     """Optimistic-concurrency gate (r11 verdict #4): atomically create
-    the intent file ``_manifest/v=<n>.begin`` (HDFS create-exclusive —
-    the same primitive Delta's HDFS LogStore commits through). Exactly
+    the intent file ``_manifest/v=<n>.begin`` (create-exclusive:
+    ``O_CREAT|O_EXCL`` on local disk, HDFS create-exclusive elsewhere —
+    the primitive Delta's HDFS LogStore commits through). Exactly
     one writer wins the create; a loser raises ConcurrentWriteError
     BEFORE writing any data. The file's content names the holder, so a
     crash-retry BY THE SAME WRITER re-enters idempotently (it finds its
@@ -409,7 +401,7 @@ def _begin_commit(spark: SparkSession, path: str, version: int, writer: str) -> 
     path), while a different writer fails loudly until the dead
     attempt is rolled back (rollback_inflight). Single-file CAS means
     no wall-clock, no lease, no tie-break heuristics."""
-    marker = f"{path}/_manifest/v={version}.begin"
+    marker = tablelog.sidecar(path, version, "begin")
     try:
         _write_small_file(spark, marker, writer, overwrite=False)
         return
@@ -434,7 +426,7 @@ def _write_commit_meta(
     the commit log, committed_metas() is the replay ledger that makes
     foreachBatch upserts exactly-once (r11 verdict #7)."""
     # own version slot: overwrite self-heals
-    _write_small_file(spark, f"{path}/_manifest/v={version}.meta", meta)
+    _write_small_file(spark, tablelog.sidecar(path, version, "meta"), meta)
 
 
 def _write_commit_op(
@@ -448,115 +440,43 @@ def _write_commit_op(
     """Tag a commit with its operation name (+ parameters) —
     ``_manifest/v=<n>.op`` — the provenance column Delta's DESCRIBE
     HISTORY leads with; the last sidecar _Commit writes before the
-    manifest commit point. Operation names are deterministic per committer, so the ledger
-    stays oracle-replayable.
+    manifest commit point. Operation names are deterministic per
+    committer, so the ledger stays oracle-replayable.
 
     Also PERSISTS the commit's monotonically-adjusted timestamp
-    (``commit_ts`` = max(now, prev committed ts + 1), Delta's
-    in-commit-timestamp rule): commit_timestamps previously re-derived
-    the chain from surviving _SUCCESS mtimes on every call, so
-    vacuuming an early version whose mtime exceeded later ones (clock
-    skew, copied tables) could change later versions' adjusted values
-    — and version_as_of(ts) with them. A stamped value is immune to
-    what vacuum deletes. Steady state reads ONE sidecar (the previous
-    version's persisted ts); the full-chain fallback only runs for
-    histories predating the stamp.
+    (``commit_ts``, Snapshot.next_commit_ts: Delta's in-commit-timestamp
+    rule), so vacuuming an early version cannot shift later versions'
+    timestamps — nor version_as_of(ts) with them. It takes the commit's
+    second snapshot of the log: the versions below this one as they
+    stand now.
 
     ``changed_buckets`` (r15) persists the commit's CDF change-set
     bucket list — the distinct ``_kr`` values of DV entries whose
-    ``live_gen`` equals this version. With it, the streaming CDF
-    source's partition PLANNING is a sidecar read (O(n_buckets)
-    metadata) instead of a driver-side scan over the version's DV
-    (O(changed keys) — the r14 verdict's last scale term). Every
-    committer must pass it: the MOR committers pass their touched /
-    claimed buckets, everything else passes ``[]`` because structural
-    and copy-on-write commits have EMPTY change sets by construction
-    (no DV entry carries their own version as live_gen). ``None``
-    (omit the key) is reserved for histories written before the stamp;
-    the CDF planner then falls back to scanning the DV."""
+    ``live_gen`` equals this version — so the streaming CDF source
+    plans partitions from this sidecar (O(n_buckets) metadata) instead
+    of scanning the version's DV. Every committer passes it: the MOR
+    committers their touched / claimed buckets, everything else ``[]``
+    because structural and copy-on-write commits have EMPTY change sets
+    by construction (no DV entry carries their own version as
+    live_gen). ``None`` (omit the key) is reserved for histories
+    written before the stamp; the CDF planner then scans the DV."""
     import json as _json
     import time as _time
 
-    prev_versions = [
-        v
-        for v in _list_versions(spark, f"{path}/_manifest")
-        if v < int(version)
-    ]
-    prev_ts = -1
-    if prev_versions:
-        last = prev_versions[-1]
-        p = _persisted_commit_ts(spark, path, last)
-        # unstamped versions are a PREFIX of history (every commit since
-        # the stamp existed stamps, and vacuum reclaims oldest-first),
-        # so "fully stamped" is provable from the EARLIEST retained
-        # version's sidecar alone. Fully stamped -> the last stamp is
-        # the chain's max (two sidecar reads, steady state). Any
-        # unstamped prefix -> derive from the full reader-visible chain
-        # (commit_timestamps, stamps preferred + monotonicized):
-        # an unstamped early version's inflated _SUCCESS mtime can push
-        # the adjusted chain past the last stamp, and the new stamp
-        # must exceed what READERS see or vacuuming the legacy version
-        # would shift later versions' effective timestamps.
-        fully_stamped = (
-            p is not None
-            and _persisted_commit_ts(spark, path, prev_versions[0])
-            is not None
-        )
-        prev_ts = (
-            p
-            if fully_stamped
-            else commit_timestamps(spark, path, prev_versions)[last]
-        )
-    ts = max(int(_time.time() * 1000), prev_ts + 1)
+    ts = _snapshot(spark, path).next_commit_ts(version, int(_time.time() * 1000))
     payload = {"operation": operation, "parameters": params, "commit_ts": ts}
     if changed_buckets is not None:
         payload["changed_buckets"] = sorted(int(b) for b in changed_buckets)
     # own version slot: overwrite self-heals after a crashed attempt
     _write_small_file(
-        spark,
-        f"{path}/_manifest/v={version}.op",
-        _json.dumps(payload, sort_keys=True),
+        spark, tablelog.sidecar(path, version, "op"), _json.dumps(payload, sort_keys=True)
     )
-
-
-def _persisted_commit_ts(
-    spark: SparkSession, path: str, version: int
-) -> int | None:
-    """The commit timestamp stamped into ``v=<n>.op`` at commit time,
-    or None for histories written before the stamp existed (their
-    commit_timestamps fall back to the _SUCCESS mtime)."""
-    import json as _json
-
-    raw = _read_small_file(spark, f"{path}/_manifest/v={version}.op")
-    if raw is None:
-        return None
-    try:
-        ts = _json.loads(raw).get("commit_ts")
-    except ValueError:
-        return None
-    return None if ts is None else int(ts)
 
 
 def commit_operations(spark: SparkSession, path: str) -> dict[int, str]:
     """version -> operation name for every COMMITTED version carrying a
     tag (commits made before the tag existed simply have none)."""
-    import json as _json
-
-    jvm, fs, mroot = _fs(spark, f"{path}/_manifest")
-    out: dict[int, str] = {}
-    if not fs.exists(mroot):
-        return out
-    committed = set(_list_versions(spark, f"{path}/_manifest"))
-    for st in fs.listStatus(mroot):
-        name = st.getPath().getName()
-        if not (name.startswith("v=") and name.endswith(".op")):
-            continue
-        v = int(name[2:-3])
-        if v not in committed:
-            continue
-        raw = _read_small_file(spark, st.getPath().toString())
-        out[v] = _json.loads(raw)["operation"]
-    return out
+    return _snapshot(spark, path).operations()
 
 
 def committed_metas(spark: SparkSession, path: str) -> dict[str, int]:
@@ -565,20 +485,7 @@ def committed_metas(spark: SparkSession, path: str) -> dict[str, int]:
     upsert_versioned: a replayed epoch finds itself already committed
     and skips — the manifest IS the idempotence ledger, so redelivery
     after a checkpoint restart cannot double-commit."""
-    _, fs, mroot = _fs(spark, f"{path}/_manifest")
-    out: dict[str, int] = {}
-    if not fs.exists(mroot):
-        return out
-    committed = set(_list_versions(spark, f"{path}/_manifest"))
-    for st in fs.listStatus(mroot):
-        name = st.getPath().getName()
-        if not (name.startswith("v=") and name.endswith(".meta")):
-            continue
-        v = int(name[2:-5])
-        if v not in committed:
-            continue
-        out[_read_small_file(spark, st.getPath().toString())] = v
-    return out
+    return _snapshot(spark, path).metas()
 
 
 def _slot_files(path: str, version: int) -> tuple[str, ...]:
@@ -588,10 +495,13 @@ def _slot_files(path: str, version: int) -> tuple[str, ...]:
     crashed attempt may have left any of them, so rollback_inflight
     deletes them all and a commit clears them when it takes the slot
     (_Commit): a leftover ``.schema`` would otherwise outlive the
-    version's expiry and become the table's schema (_schema_as_of
+    version's expiry and become the table's schema (schema_as_of
     trusts sidecars of vacuumed versions)."""
-    m = f"{path}/_manifest/v={version}"
-    return (m, f"{m}.meta", f"{m}.op", f"{m}.schema", f"{path}/_dv/v={version}")
+    return (
+        tablelog.manifest_dir(path, version),
+        *(tablelog.sidecar(path, version, k) for k in ("meta", "op", "schema")),
+        f"{path}/_dv/v={version}",
+    )
 
 
 def _delete_paths(spark: SparkSession, paths) -> None:
@@ -611,32 +521,24 @@ def rollback_inflight(spark: SparkSession, path: str) -> list[int]:
     written at gen n, and the intent marker — then a NEW writer's
     _begin_commit for that version succeeds. Safe to run any time:
     committed versions are never touched."""
-    jvm, fs, mroot = _fs(spark, f"{path}/_manifest")
-    rolled: list[int] = []
-    if not fs.exists(mroot):
+    rolled = _snapshot(spark, path).inflight()
+    if not rolled:
         return rolled
-    committed = set(_list_versions(spark, f"{path}/_manifest"))
+    jvm, fs, _ = _fs(spark, path)
     droot = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
     buckets = [
         st.getPath().getName()
         for st in (fs.listStatus(droot) if fs.exists(droot) else [])
         if st.getPath().getName().startswith("_kr=")
     ]
-    for st in fs.listStatus(mroot):
-        name = st.getPath().getName()
-        if not (name.startswith("v=") and name.endswith(".begin")):
-            continue
-        v = int(name[2:-6])
-        if v in committed:
-            continue
+    for v in rolled:
         _delete_paths(
             spark,
             [f"{path}/data/{b}/_gen={v}" for b in buckets]
             + list(_slot_files(path, v))
-            + [f"{path}/_manifest/v={v}.begin"],
+            + [tablelog.sidecar(path, v, "begin")],
         )
-        rolled.append(v)
-    return sorted(rolled)
+    return rolled
 
 
 def _clean_uncommitted_generation(
@@ -960,14 +862,14 @@ def _read_manifest(
             return local_frame(spark, arrow)
         except Exception:
             pass
-    return spark.read.parquet(f"{path}/_manifest/v={version}")
+    return spark.read.parquet(tablelog.manifest_dir(path, version))
 
 
 def _manifest_arrow(spark: SparkSession, path: str, version: int):
     """One committed manifest version as a pyarrow Table read on the
     driver, or None off the local filesystem or when pyarrow cannot
     read it (the caller then reads it with Spark)."""
-    local = _local_fs_path(spark, f"{path}/_manifest/v={version}")
+    local = _local_fs_path(spark, tablelog.manifest_dir(path, version))
     if local is None:
         return None
     try:
@@ -1091,7 +993,7 @@ def _manifest_writer(spark: SparkSession, df: DataFrame, dest_dir: str):
     may run CONCURRENTLY with the commit's data/DV writes
     (_run_concurrent); ``publish_fn`` must be called LAST — it writes
     the parquet bytes and then the ``_SUCCESS`` marker, which is the
-    atomic commit point _list_versions keys on, exactly the order
+    atomic commit point tablelog.Snapshot keys on, exactly the order
     Spark's own committer produced. A leftover partial destination
     from a crashed attempt is deleted first (mode("overwrite")).
     Non-local filesystems (and any Arrow conversion failure) fall back
@@ -1255,7 +1157,7 @@ def _carry_dv_except(
             True,
             conf,
         )
-    _write_small_file(spark, f"{dst_root}/_SUCCESS", "")
+    dfs.create(jvm.org.apache.hadoop.fs.Path(f"{dst_root}/_SUCCESS"), True).close()
 
 
 def _dv_bucket_set(
@@ -1482,16 +1384,7 @@ def table_meta(spark: SparkSession, path: str) -> dict:
     """The table's persisted metadata dict ({} for tables bootstrapped
     before ``_table.json`` existed — every consumer must treat missing
     keys as 'pass the parameter explicitly')."""
-    import json as _json
-
-    raw = _read_small_file(spark, f"{path}/_manifest/_table.json")
-    if raw is None:
-        return {}
-    try:
-        out = _json.loads(raw)
-    except ValueError:
-        return {}
-    return out if isinstance(out, dict) else {}
+    return tablelog.table_meta(*_files(spark, path))
 
 
 # ---------------------------------------------------------------------------
@@ -1512,12 +1405,13 @@ def _admissible(
     its stamped ``changed_buckets`` are disjoint from ``touched``. A
     winner that never commits (crashed holder) times out: not
     admissible, the rebase/rollback path decides."""
-    if not _wait_for_commit(spark, path, version):
+    snap = _wait_for_commit(spark, path, version)
+    if snap is None:
         return False
-    win = _commit_op_payload(spark, path, version) or {}
+    win = snap.op(version) or {}
     op_name = win.get("operation")
     tier = (win.get("parameters") or {}).get("tier")
-    cb = win.get("changed_buckets")
+    cb = snap.changed_buckets(version)
     return (
         (op_name == "DELETE" or (op_name == "MERGE" and tier == "mor"))
         and cb is not None
@@ -1561,7 +1455,7 @@ class _Commit:
        commit writes them again: the same writer's retry, or a later
        rebucket.
     4. Publish: the manifest ``_SUCCESS`` marker — the atomic commit
-       point _list_versions keys on — lands last.
+       point tablelog.Snapshot keys on — lands last.
 
     Crash rules: an exception anywhere before step 4 leaves the version
     uncommitted with its begin marker in place. Readers keep seeing the
@@ -1642,12 +1536,12 @@ class _Commit:
             thunks.append(
                 lambda: _carry_dv_except(spark, path, frame, v_from, v, drop)
             )
-        dest = f"{path}/_manifest/v={v}"
+        dest = tablelog.manifest_dir(path, v)
         if isinstance(manifest, str):
             thunks.append(lambda: _copy_manifest_dir(spark, manifest, dest))
 
             def commit() -> None:
-                _write_small_file(spark, f"{dest}/_SUCCESS", "")
+                _write_small_file(spark, f"{dest}/{tablelog.SUCCESS}", "")
 
         else:
             collect, commit = _manifest_writer(spark, manifest, dest)
@@ -1665,14 +1559,14 @@ class _Commit:
         if schema is not None:
             _write_small_file(
                 spark,
-                f"{path}/_manifest/v={v}.schema",
+                tablelog.sidecar(path, v, "schema"),
                 _json.dumps(
                     {k: x for k, x in schema.items() if k != "since_version"},
                     sort_keys=True,
                 ),
             )
         for name, content in (table_files or {}).items():
-            _write_small_file(spark, f"{path}/_manifest/{name}", content)
+            _write_small_file(spark, tablelog.table_file(path, name), content)
         if meta is not None:
             _write_commit_meta(spark, path, v, meta)
         _write_commit_op(
@@ -1695,22 +1589,20 @@ class _Table(NamedTuple):
     stats_cols: list
     point_cols: list
     bloom_bits: int | None = None
+    snap: tablelog.Snapshot | None = None
 
 
 def _open_table(
     spark: SparkSession, path: str, what: str, key: str | None = None
 ) -> _Table:
-    """The latest committed version of the table at ``path``; raises
-    FileNotFoundError when there is none."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(
-            f"{what}: no table at {path} — bootstrap with versioned_layout_write"
-        )
-    v = versions[-1]
+    """The latest committed version of the table at ``path``, with the
+    snapshot it was read from; raises FileNotFoundError when there is
+    none."""
+    snap = _snapshot(spark, path)
+    v = snap.at(None, what)
     arrow = _manifest_arrow(spark, path, v)
     manifest = _read_manifest(spark, path, v, arrow)
-    sch = _schema_as_of(spark, path, v)
+    sch = snap.schema_as_of(v)
     point_cols = _point_cols_of(manifest)
     bits = None
     if arrow is not None:
@@ -1725,6 +1617,7 @@ def _open_table(
         _stats_cols_of(manifest),
         point_cols,
         bits,
+        snap,
     )
 
 
@@ -1847,51 +1740,10 @@ _RESERVED_COLS = ("_kr", "_gen", "live_gen", "_op", "_version", "_change_type")
 def _schema_as_of(
     spark: SparkSession, path: str, version: int | None = None
 ) -> dict | None:
-    """The column-mapping schema in force at ``version`` (default: any
-    version — the latest), or None when the table has never run a
-    schema DDL (the overwhelmingly common case: one FS listing, no
-    file reads). A sidecar only counts when its version's commit op
-    carries ``schema_change`` — an orphan sidecar from a crashed DDL
-    whose version slot was later won by a different committer is
-    ignored (the op tag is written by the DDL after the sidecar and
-    before the manifest, so a COMMITTED schema change always
-    validates)."""
-    import json as _json
-
-    jvm, fs, _ = _fs(spark, f"{path}/_manifest")
-    root = jvm.org.apache.hadoop.fs.Path(f"{path}/_manifest")
-    if not fs.exists(root):
-        return None
-    cand = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if name.startswith("v=") and name.endswith(".schema"):
-            try:
-                k = int(name[2:-7])
-            except ValueError:
-                continue
-            if version is None or k <= int(version):
-                cand.append(k)
-    committed = _list_versions(spark, f"{path}/_manifest") if cand else []
-    for k in sorted(cand, reverse=True):
-        if committed and k >= committed[0]:
-            # the version is in the retained window: its op tag must
-            # vouch for the sidecar (a crashed DDL's orphan whose slot
-            # was later won by a different committer must not count)
-            if k not in committed:
-                continue
-            op = _commit_op_payload(spark, path, k) or {}
-            if not (op.get("parameters") or {}).get("schema_change"):
-                continue
-        # else: the version was VACUUMED (sidecars expire with it but
-        # ``.schema`` files deliberately survive — they are the only
-        # record of the mapping for the retained suffix) — accept
-        raw = _read_small_file(spark, f"{path}/_manifest/v={k}.schema")
-        if raw is not None:
-            doc = _json.loads(raw)
-            doc["since_version"] = k
-            return doc
-    return None
+    """The column-mapping schema in force at ``version`` (default: the
+    latest), or None when the table has never run a schema DDL — the
+    overwhelmingly common case (tablelog.Snapshot.schema_as_of)."""
+    return _snapshot(spark, path).schema_as_of(version)
 
 
 def _project_logical(
@@ -1953,12 +1805,13 @@ def _phys_name(sch: dict | None, key: str, what: str = "key") -> str:
     )
 
 
-def _schema_snapshot(spark: SparkSession, path: str) -> dict:
-    """Identity mapping bootstrapped from the table's current physical
-    schema (parquet footers only — no job) — the implicit schema every
-    pre-DDL table has."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    manifest = _read_manifest(spark, path, versions[-1])
+def _schema_snapshot(
+    spark: SparkSession, path: str, snap, version: int | None = None
+) -> dict:
+    """Identity mapping bootstrapped from the physical schema of the
+    table at ``version`` (default: the latest; parquet footers only — no
+    job) — the implicit schema every pre-DDL table has."""
+    manifest = _read_manifest(spark, path, snap.at(version, "schema"))
     data = _read_gen_dirs(spark, path, manifest.collect())
     return {
         "columns": [
@@ -1972,6 +1825,12 @@ def _schema_snapshot(spark: SparkSession, path: str) -> dict:
         ],
         "retired": [],
     }
+
+
+def _current_schema(spark: SparkSession, path: str, snap) -> dict:
+    """The mapping in force at the tip, or the identity mapping of a
+    table that never ran a schema DDL."""
+    return snap.schema_as_of() or _schema_snapshot(spark, path, snap)
 
 
 def _guard_constraint_refs(spark: SparkSession, path: str, col: str) -> None:
@@ -2001,6 +1860,7 @@ def _ident_ok(name: str) -> bool:
 def _alter_schema_commit(
     spark: SparkSession,
     path: str,
+    snap,
     doc: dict,
     writer: str | None,
     **op_params,
@@ -2009,14 +1869,11 @@ def _alter_schema_commit(
     manifest and DV state carry forward VERBATIM as driver-side byte
     copies — zero data reads or writes, O(manifest) like every metadata
     commit). The ``.schema`` sidecar rides an op tag carrying
-    ``schema_change``, so _schema_as_of can reject orphan sidecars."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"alter schema: no table at {path}")
-    v = versions[-1]
+    ``schema_change``, so schema_as_of can reject orphan sidecars."""
+    v = snap.at(None, "alter schema")
     return _Commit(spark, path, v + 1, writer).publish(
         "ALTER SCHEMA",
-        manifest=f"{path}/_manifest/v={v}",
+        manifest=tablelog.manifest_dir(path, v),
         dv=_dv_dir(spark, path, v),
         schema=doc,
         schema_change=True,
@@ -2038,7 +1895,8 @@ def rename_column(
     the new one. Renaming the merge key is fine (its physical name —
     what DVs and manifests use — never moves). Returns the new
     version."""
-    sch = _schema_as_of(spark, path) or _schema_snapshot(spark, path)
+    snap = _snapshot(spark, path)
+    sch = _current_schema(spark, path, snap)
     logicals = [e["logical"] for e in sch["columns"]]
     if old not in logicals:
         raise ValueError(f"rename_column: no column {old!r} in {logicals}")
@@ -2055,7 +1913,7 @@ def rename_column(
         "retired": list(sch.get("retired", [])),
     }
     return _alter_schema_commit(
-        spark, path, doc, writer,
+        spark, path, snap, doc, writer,
         action="RENAME COLUMN", rename_from=old, rename_to=new,
     )
 
@@ -2070,7 +1928,8 @@ def drop_column(
     resurrect the old values (the retired physical name is permanently
     reserved). Time travel before this version still serves it. The
     merge key cannot be dropped. Returns the new version."""
-    sch = _schema_as_of(spark, path) or _schema_snapshot(spark, path)
+    snap = _snapshot(spark, path)
+    sch = _current_schema(spark, path, snap)
     entry = next(
         (e for e in sch["columns"] if e["logical"] == name), None
     )
@@ -2092,7 +1951,7 @@ def drop_column(
         "retired": list(sch.get("retired", [])) + [entry["physical"]],
     }
     return _alter_schema_commit(
-        spark, path, doc, writer, action="DROP COLUMN", dropped=name,
+        spark, path, snap, doc, writer, action="DROP COLUMN", dropped=name,
     )
 
 
@@ -2120,7 +1979,8 @@ def add_column(
     rewritten — the documented divergence from Delta, which only
     allows generated columns at CREATE and therefore never faces the
     question."""
-    sch = _schema_as_of(spark, path) or _schema_snapshot(spark, path)
+    snap = _snapshot(spark, path)
+    sch = _current_schema(spark, path, snap)
     logicals = [e["logical"] for e in sch["columns"]]
     if name in logicals:
         raise ValueError(f"add_column: {name!r} already exists")
@@ -2156,7 +2016,7 @@ def add_column(
         "retired": list(sch.get("retired", [])),
     }
     return _alter_schema_commit(
-        spark, path, doc, writer,
+        spark, path, snap, doc, writer,
         action="ADD COLUMN", added=name, type=str(dtype),
         generated=bool(generated_as),
     )
@@ -2209,7 +2069,7 @@ def table_schema(spark: SparkSession, path: str) -> list[dict]:
     """The declared logical schema at the tip (``[{logical, physical,
     type}]``) — from the mapping when a schema DDL ever ran, else the
     identity snapshot of the physical files."""
-    sch = _schema_as_of(spark, path) or _schema_snapshot(spark, path)
+    sch = _current_schema(spark, path, _snapshot(spark, path))
     return [dict(e) for e in sch["columns"]]
 
 
@@ -2284,19 +2144,21 @@ def read_version(
     that never ran a schema DDL skip the projection entirely.
     ``physical=True`` returns raw file column names — the compaction /
     rebucket tier rewrites files under their frozen physical names."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no manifest versions under {path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
+    return _read_at(spark, path, _snapshot(spark, path), version, physical)
+
+
+def _read_at(
+    spark: SparkSession, path: str, snap, version: int | None, physical: bool = False
+) -> DataFrame:
+    """read_version at ``version`` of the snapshot ``snap``."""
+    v = snap.at(version, "read_version")
     manifest = _read_manifest(spark, path, v)
     data = _read_gen_dirs(spark, path, manifest.collect())
     # merge-on-read: resolve this version's deletion vector, if any
     out = _apply_dv(data, _read_dv(spark, path, v))
     if physical:
         return out
-    return _project_logical(out, _schema_as_of(spark, path, v))
+    return _project_logical(out, snap.schema_as_of(v))
 
 
 def read_version_pruned(
@@ -2319,18 +2181,16 @@ def read_version_pruned(
     residual predicate still runs in-stage (stats prune directories,
     they don't filter rows), and the version's deletion vector applies
     after the scan exactly as in read_version. Attaches
-    ``dirs_read``/``dirs_total`` as the pruning evidence."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no manifest versions under {path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
+    ``dirs_read``/``dirs_total`` as the pruning evidence. A range no
+    directory can meet builds its empty frame from the footers without
+    listing any directory (_empty_gen_dirs), so it schedules no job."""
+    snap = _snapshot(spark, path)
+    v = snap.at(version, "read_version_pruned")
     manifest = _read_manifest(spark, path, v)
     # r16 column mapping: stats columns live under PHYSICAL names;
     # the caller's predicate column translates, the result projects
     # back to the logical schema as of the version
-    sch = _schema_as_of(spark, path, v)
+    sch = snap.schema_as_of(v)
     col = _phys_name(sch, col, "read_version_pruned col")
     key = None if key is None else _phys_name(sch, key)
     if col == key:
@@ -2355,20 +2215,12 @@ def read_version_pruned(
         or r[hi_c] is None
         or not (r[hi_c] < lo or r[lo_c] > hi)
     ]
-    if not live:
-        out = read_version(spark, path, v, physical=True).where(F.lit(False))
-        out = _project_logical(
-            out.where((F.col(col) >= lo) & (F.col(col) <= hi)), sch
-        )
-        out.dirs_read = 0
-        out.dirs_total = len(rows)
-        return out
-    data = _read_gen_dirs(spark, path, live)
+    if live:
+        data = _apply_dv(_read_gen_dirs(spark, path, live), _read_dv(spark, path, v))
+    else:  # no directory meets the range: no rows, no DV, no job
+        data = _empty_gen_dirs(spark, path, rows)
     out = _project_logical(
-        _apply_dv(data, _read_dv(spark, path, v)).where(
-            (F.col(col) >= lo) & (F.col(col) <= hi)
-        ),
-        sch,
+        data.where((F.col(col) >= lo) & (F.col(col) <= hi)), sch
     )
     out.dirs_read = len(live)
     out.dirs_total = len(rows)
@@ -2413,7 +2265,10 @@ def read_version_point(
     the RESULT is exact regardless of FPR; only ``dirs_read`` carries
     the (write-side-tunable) noise. A directory with a NULL bitmap
     (committed before the column was declared) degrades to 'cannot
-    prune'. Attaches ``dirs_read``/``dirs_total``.
+    prune', and so does a non-string value against a string column:
+    Spark compares those by casting the column, so "05" matches 5, and
+    a bitmap of the value's one spelling cannot answer that. Attaches
+    ``dirs_read``/``dirs_total``.
 
     Scale: on a local table, planning the lookup runs no Spark query
     but the probe statement, which the driver answers without a job.
@@ -2437,15 +2292,11 @@ def read_version_point(
     empty frame of the version's schema, built from the directories'
     footers without listing them (_empty_gen_dirs), and schedules no
     job."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"no manifest versions under {path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"version {v} not in {versions}")
+    snap = _snapshot(spark, path)
+    v = snap.at(version, "read_version_point")
     arrow = _manifest_arrow(spark, path, v)
     if arrow is None:
-        manifest = spark.read.parquet(f"{path}/_manifest/v={v}")
+        manifest = spark.read.parquet(tablelog.manifest_dir(path, v))
         columns, rows = manifest.columns, manifest.collect()
     else:
         from pyspark.sql import Row
@@ -2453,7 +2304,7 @@ def read_version_point(
         columns = arrow.column_names
         rows = [Row(**r) for r in arrow.to_pylist()]
     # r16 column mapping: Bloom bitmaps key on PHYSICAL names
-    lsch = _schema_as_of(spark, path, v)
+    lsch = snap.schema_as_of(v)
     col = _phys_name(lsch, col, "read_version_point col")
     bcol = f"bloom_{col}"
     num_bits = _bloom_width(r[bcol] for r in rows) if bcol in columns else None
@@ -2479,10 +2330,16 @@ def read_version_point(
                 break
         if dtype is None:
             raise ValueError(f"read_version_point: no directory carries {col!r}")
+    if num_bits is None or (
+        isinstance(dtype, T.StringType) and not isinstance(value, str)
+    ):
+        # no bitmap for col, or Spark casts the COLUMN to the value's
+        # type (a string key probed with 5 matches "05" too), which no
+        # hash of one value covers: cannot prune
+        live = list(rows)
+    else:
         positions = _bloom_probe_positions(spark, value, dtype, num_bits)
         live = [r for r in rows if _bloom_hit(r[bcol], positions)]
-    else:
-        live = list(rows)  # no bitmap for col: cannot prune
     if live:
         data = _apply_dv_point(
             spark, path, v, _read_gen_dirs(spark, path, live), col, value
@@ -2549,7 +2406,7 @@ def upsert_versioned(
         commit = _Commit(spark, target_path, v + 1, writer)
         commit.publish(
             "MERGE",
-            manifest=f"{target_path}/_manifest/v={v}",
+            manifest=tablelog.manifest_dir(target_path, v),
             dv=_dv_dir(spark, target_path, v),
             meta=commit_meta,
             tier="cow",
@@ -2714,37 +2571,22 @@ _ADMIT_WAIT_S = 30.0  # how long admission waits for a racing winner
 
 def _wait_for_commit(
     spark: SparkSession, path: str, version: int, timeout_s: float | None = None
-) -> bool:
+) -> tablelog.Snapshot | None:
     """Poll until ``version`` is a COMMITTED manifest version (its
-    _SUCCESS exists) — the admission path's wait for a racing winner.
-    False on timeout (a crashed holder never commits)."""
+    _SUCCESS exists) — the admission path's wait for a racing winner —
+    and return the snapshot that saw it. None on timeout (a crashed
+    holder never commits)."""
     import time as _time
 
     deadline = _time.monotonic() + (
         _ADMIT_WAIT_S if timeout_s is None else timeout_s
     )
     while _time.monotonic() < deadline:
-        if version in _list_versions(spark, f"{path}/_manifest"):
-            return True
+        snap = _snapshot(spark, path)
+        if version in snap.versions:
+            return snap
         _time.sleep(0.1)
-    return False
-
-
-def _commit_op_payload(
-    spark: SparkSession, path: str, version: int
-) -> dict | None:
-    """The full ``v=<n>.op`` sidecar payload (operation, parameters,
-    commit_ts, changed_buckets), or None when absent/unparseable."""
-    import json as _json
-
-    raw = _read_small_file(spark, f"{path}/_manifest/v={version}.op")
-    if raw is None:
-        return None
-    try:
-        out = _json.loads(raw)
-    except ValueError:
-        return None
-    return out if isinstance(out, dict) else None
+    return None
 
 
 def delete_versioned(
@@ -2780,7 +2622,7 @@ def delete_versioned(
     return commit.publish(
         "DELETE",
         touched,
-        manifest=f"{target_path}/_manifest/v={v}",
+        manifest=tablelog.manifest_dir(target_path, v),
         dv=_dv_union(_read_dv(spark, target_path, v), dv_new, t.key),
         meta=commit_meta,
     )
@@ -2981,7 +2823,7 @@ def merge_arms_versioned_dv(
         manifest=(
             _manifest_rows(t, fresh_phys, t.manifest)
             if wrote_data
-            else f"{target_path}/_manifest/v={v}"
+            else tablelog.manifest_dir(target_path, v)
         ),
         data=fresh_phys if wrote_data else None,
         buckets=touched,
@@ -3136,7 +2978,7 @@ def compact_table(
         + [c for c in zorder_by if c not in t.stats_cols and c != key]
     )
     # DV-resolved, and a full rewrite scrubs retired columns
-    live = _drop_retired(read_version(spark, path, v, physical=True), t.sch)
+    live = _drop_retired(_read_at(spark, path, t.snap, v, physical=True), t.sch)
     commit = _Commit(spark, path, v + 1, writer)
     compacted = _new_generation(live, v + 1)
     to_write = compacted
@@ -3443,7 +3285,7 @@ def rebucket_table(
     # the re-layout rewrites files under frozen PHYSICAL names (r16)
     t = _open_table(spark, path, "rebucket_table", key)
     v, key = t.v, t.key
-    live = read_version(spark, path, v, physical=True).drop("_gen", "_kr")
+    live = _read_at(spark, path, t.snap, v, physical=True).drop("_gen", "_kr")
     commit = _Commit(spark, path, v + 1, writer)
     from data_pipeline_bigquery_to_sftp_server_spark.operators.relational import (
         rank_bucket,
@@ -3509,11 +3351,12 @@ def vacuum_versions(
         # keep_last=0 would compute an EMPTY live set and delete every
         # generation — the table itself. Retention must keep >= 1.
         raise ValueError("vacuum_versions: keep_last must be >= 1")
-    versions = _list_versions(spark, f"{path}/_manifest")
+    snap = _snapshot(spark, path)
+    versions = snap.versions
     keep = versions[-int(keep_last):]
     clock_anchor = None  # the last commit's timestamp, when known
     if retention_ms is not None and versions:
-        ts = commit_timestamps(spark, path, versions)
+        ts = snap.commit_ts(versions)
         clock_anchor = ts[versions[-1]]
         horizon = clock_anchor - int(retention_ms)
         keep = sorted(set(keep) | {v for v in versions if ts[v] >= horizon})
@@ -3528,15 +3371,7 @@ def vacuum_versions(
         for r in _read_manifest(spark, path, v).collect():
             live.add((r._kr, r.gen))
     latest = versions[-1] if versions else -1
-    jvm0, fs0, mroot = _fs(spark, f"{path}/_manifest")
-    inflight: set[int] = set()
-    if fs0.exists(mroot):
-        for st in fs0.listStatus(mroot):
-            name = st.getPath().getName()
-            if name.startswith("v=") and name.endswith(".begin"):
-                v = int(name[2:-6])
-                if v not in versions:
-                    inflight.add(v)
+    inflight = set(snap.inflight())
     jvm = spark.sparkContext._jvm
     root = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
     fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
@@ -3568,10 +3403,8 @@ def vacuum_versions(
         if v in keep:
             continue
         for leftover in (
-            f"{path}/_manifest/v={v}",
-            f"{path}/_manifest/v={v}.begin",
-            f"{path}/_manifest/v={v}.meta",
-            f"{path}/_manifest/v={v}.op",
+            tablelog.manifest_dir(path, v),
+            *(tablelog.sidecar(path, v, k) for k in ("begin", "meta", "op")),
             f"{path}/_dv/v={v}",
             # an expired version's quarantine ledger goes with it —
             # otherwise screened CDC tables leak bad-row files forever
@@ -3630,37 +3463,31 @@ def table_history(
     The audit surface Delta exposes as DESCRIBE HISTORY: every number
     comes from the commit log alone — no data file is opened, so the
     call costs O(versions x manifest rows) regardless of table size.
-    ALL manifests are read in ONE scan (explicit version-directory
-    list under a basePath, yielding the ``v`` partition column) and
-    reduced by one grouped aggregate; DV presence is a driver FS
-    probe per version and meta strings come from committed_metas. The
-    result is a driver-built LocalRelation: on a local table the call
-    and its collect schedule no Spark job."""
-    versions = _list_versions(spark, f"{path}/_manifest")
+    On a local table every manifest is read on the driver with pyarrow
+    (versions x few-KB parquet reads, no Spark job); elsewhere ALL
+    manifests are read in ONE scan (explicit version-directory list
+    under a basePath, yielding the ``v`` partition column) and reduced
+    by one grouped aggregate. Versions, operations, metas, parameters
+    and timestamps come from one snapshot of the log, and DV presence
+    from one listing of ``_dv/``. The result is a driver-built
+    LocalRelation: on a local table the call and its collect schedule
+    no Spark job."""
+    snap = _snapshot(spark, path)
+    versions = snap.versions
     if not versions:
         raise FileNotFoundError(f"table_history: no table at {path}")
-    mroot = f"{path}/_manifest"
-    try:
-        # driver-side manifest aggregation (r16 — same rationale as
-        # _read_manifest): versions x few-KB parquet reads, no Spark
-        # job, no per-version directory listing through the scheduler.
-        # Gated on a provably-local path (r16 advice) like every
-        # pyarrow fast path.
+    mroot = f"{path}/{tablelog.MANIFEST}"
+    local_root = _local_fs_path(spark, mroot)
+    if local_root is not None:
         import pyarrow.parquet as pq
 
-        local_root = _local_fs_path(spark, mroot)
-        if local_root is None:
-            raise OSError("non-local manifest root")
         per_v = {}
         for v in versions:
             t = pq.read_table(f"{local_root}/v={v}", columns=["n_rows"])
-            per_v[int(v)] = (
-                int(t.num_rows),
-                int(sum(t.column("n_rows").to_pylist())),
-            )
-    except Exception:  # exotic FS: the Hadoop-routed distributed read
+            per_v[v] = (int(t.num_rows), int(sum(t.column("n_rows").to_pylist())))
+    else:
         scan = spark.read.option("basePath", mroot).parquet(
-            *[f"{mroot}/v={v}" for v in versions]
+            *[tablelog.manifest_dir(path, v) for v in versions]
         )
         per_v = {
             int(r.v): (int(r.n_dirs), int(r.physical_rows))
@@ -3671,17 +3498,14 @@ def table_history(
             )
             .collect()
         }
-    metas = {v: m for m, v in committed_metas(spark, path).items()}
-    ops = commit_operations(spark, path)
-    ts = commit_timestamps(spark, path, versions) if with_ts else None
-    jvm, fs, _ = _fs(spark, path)
+    ops = snap.operations()
+    ts = snap.commit_ts(versions) if with_ts else None
+    files, droot = _files(spark, f"{path}/_dv")
+    dvs = files.list(droot)
     rows = []
     for v in versions:
-        has_dv = fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/_dv/v={v}")
-        )
         nd, pr = per_v[v]
-        row = (int(v), ops.get(v), nd, pr, bool(has_dv), metas.get(v))
+        row = (v, ops.get(v), nd, pr, f"v={v}" in dvs, snap.meta(v))
         if with_ts:
             row = row + (ts[v],)
         if with_parameters:
@@ -3691,9 +3515,7 @@ def table_history(
             # RESTORE's source version, CLONE provenance, REORG mode
             import json as _json
 
-            p = (_commit_op_payload(spark, path, v) or {}).get(
-                "parameters"
-            )
+            p = (snap.op(v) or {}).get("parameters")
             row = row + (
                 None if p is None else _json.dumps(p, sort_keys=True),
             )
@@ -3742,16 +3564,9 @@ def restore_version(
     The reference's failure recovery re-runs the whole sync and
     re-MERGEs (main.py:366-384 retry loop); here a bad MERGE is undone
     in O(manifest) regardless of table size. Returns the new version."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"restore_version: no table at {path}")
-    v_new = versions[-1] + 1
-    version = int(version)
-    if version not in versions:
-        raise ValueError(
-            f"restore_version: version {version} not in {versions} "
-            "(already vacuumed, or never committed)"
-        )
+    snap = _snapshot(spark, path)
+    v_new = snap.at(None, "restore_version") + 1
+    version = snap.at(version, "restore_version")
     commit = _Commit(spark, path, v_new, writer)
     # the COLUMN MAPPING is part of the snapshot too (r16 — Delta's
     # RESTORE restores metadata): when a mapping is in force anywhere
@@ -3761,29 +3576,16 @@ def restore_version(
     # see the restored version's own column names. Tables that never
     # ran a schema DDL skip all of this.
     restored_sch = None
-    if _schema_as_of(spark, path) is not None:
-        restored_sch = _schema_as_of(spark, path, version)
-        if restored_sch is None:
-            man_r = _read_manifest(spark, path, version)
-            data_r = _read_gen_dirs(spark, path, man_r.collect())
-            restored_sch = {
-                "columns": [
-                    {
-                        "logical": f.name,
-                        "physical": f.name,
-                        "type": f.dataType.simpleString(),
-                    }
-                    for f in data_r.schema.fields
-                    if f.name not in ("_kr", "_gen")
-                ],
-                "retired": [],
-            }
+    if snap.schema_as_of() is not None:
+        restored_sch = snap.schema_as_of(version) or _schema_snapshot(
+            spark, path, snap, version
+        )
     # restore-as-commit re-publishes the restored manifest and DV
     # state verbatim — driver-side byte copies, not Spark jobs (r16);
     # no DV at the restored version means none at the new one
     return commit.publish(
         "RESTORE",
-        manifest=f"{path}/_manifest/v={version}",
+        manifest=tablelog.manifest_dir(path, version),
         dv=_dv_dir(spark, path, version),
         schema=restored_sch,
         meta=commit_meta,
@@ -3823,7 +3625,7 @@ def clone_table(
     writes no generation, so the max generation alone is not enough),
     so the fork's stamped ``changed_buckets: []`` is what its DV says
     too. Version numbers are table-local; nothing requires them to
-    start at 0 (readers use _list_versions order throughout).
+    start at 0 (readers use the log's version order throughout).
 
     Caveats (same as Delta shallow clone): VACUUM on the SOURCE can
     reclaim generations the clone still references once the source's
@@ -3832,13 +3634,9 @@ def clone_table(
     never touches shared files (it lists only ``<dst>/data``). Paths
     are recorded verbatim — pass absolute paths. Returns the clone's
     first version number."""
-    versions = _list_versions(spark, f"{src_path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"clone_table: no table at {src_path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"clone_table: version {v} not in {versions}")
-    if _list_versions(spark, f"{dst_path}/_manifest"):
+    snap = _snapshot(spark, src_path)
+    v = snap.at(version, "clone_table")
+    if _snapshot(spark, dst_path).versions:
         raise ValueError(f"clone_table: {dst_path} already exists")
     manifest = _read_manifest(spark, src_path, v)
     # absolutize every row's data root: plain rows point at the source,
@@ -3859,19 +3657,19 @@ def clone_table(
     # into the SOURCE's version history, which the clone does not
     # share (its numbering starts at the fork), and refs staying behind
     # matches Iceberg clones.
-    table_files = {}
-    for name in ("_constraints.json", "_table.json"):
-        raw = _read_small_file(spark, f"{src_path}/_manifest/{name}")
-        if raw is not None:
-            table_files[name] = raw
+    table_files = {
+        name: raw
+        for name in ("_constraints.json", "_table.json")
+        if (raw := snap.text(name)) is not None
+    }
     # the COLUMN MAPPING travels too (r16): the fork version's
     # ``.schema`` sidecar is the source's schema as of the cloned
     # version, and the fork op carries ``schema_change`` so
-    # _schema_as_of accepts it — a clone of a renamed table reads under
+    # schema_as_of accepts it — a clone of a renamed table reads under
     # the same logical names as its source did. The DV state is a byte
     # copy, and the manifest (a LocalRelation + one literal column)
     # costs ZERO Spark jobs to write (r17).
-    src_sch = _schema_as_of(spark, src_path, v)
+    src_sch = snap.schema_as_of(v)
     return commit.publish(
         "CLONE",
         manifest=manifest,
@@ -3899,7 +3697,7 @@ def _with_tag_lock(spark: SparkSession, path: str, mutate) -> dict[str, int]:
     import json as _json
     import time as _time
 
-    lock = f"{path}/_manifest/_tags.json.lock"
+    lock = tablelog.table_file(path, "_tags.json.lock")
     try:
         _write_small_file(
             spark,
@@ -3926,11 +3724,11 @@ def _with_tag_lock(spark: SparkSession, path: str, mutate) -> dict[str, int]:
         if not lock_present:
             # one more window: the WINNING tagger can finish and delete
             # the lock between our failed create and the probe. The
-            # original exception being the FS's own already-exists TYPE
-            # (precise class name, not a substring of the message text)
-            # proves the create lost a race — surface it as transient
-            # contention, not a raw fault.
-            if "FileAlreadyExistsException" in type(e).__name__ or (
+            # original exception being an already-exists fault (local
+            # disk's FileExistsError, Hadoop's FileAlreadyExistsException
+            # through py4j) proves the create lost a race — surface it
+            # as transient contention, not a raw fault.
+            if isinstance(e, FileExistsError) or (
                 "FileAlreadyExistsException" in str(e)
             ):
                 raise RuntimeError(
@@ -3959,7 +3757,7 @@ def _with_tag_lock(spark: SparkSession, path: str, mutate) -> dict[str, int]:
         mutate(tags)
         _write_small_file(
             spark,
-            f"{path}/_manifest/_tags.json",
+            tablelog.table_file(path, "_tags.json"),
             _json.dumps(tags, sort_keys=True),
         )
         return tags
@@ -3983,12 +3781,7 @@ def tag_version(
     in-flight VACUUM — the version check here and vacuum's tag read
     are not one transaction, so tag BEFORE relaxing retention, not
     concurrently with it. Returns the tagged version."""
-    versions = _list_versions(spark, f"{path}/_manifest")
-    if not versions:
-        raise FileNotFoundError(f"tag_version: no table at {path}")
-    v = versions[-1] if version is None else int(version)
-    if v not in versions:
-        raise ValueError(f"tag_version: version {v} not in {versions}")
+    v = _snapshot(spark, path).at(version, "tag_version")
 
     def mutate(tags: dict) -> None:
         tags[str(name)] = v
@@ -4001,7 +3794,7 @@ def list_tags(spark: SparkSession, path: str) -> dict[str, int]:
     """name -> version for every tag ({} when none)."""
     import json as _json
 
-    raw = _read_small_file(spark, f"{path}/_manifest/_tags.json")
+    raw = _read_small_file(spark, tablelog.table_file(path, "_tags.json"))
     if raw is None:
         return {}
     return {k: int(v) for k, v in _json.loads(raw).items()}
@@ -4043,25 +3836,9 @@ def commit_timestamps(
     strictly increasing — and because stamped values are stored, not
     re-derived from surviving files, vacuuming early versions can no
     longer shift later versions' timestamps (version_as_of is stable
-    across vacuums). O(versions) driver small-file reads/FS stats; no
-    data file is opened."""
-    if versions is None:
-        versions = _list_versions(spark, f"{path}/_manifest")
-    jvm, fs, _ = _fs(spark, path)
-    out: dict[int, int] = {}
-    prev = -1
-    for v in versions:
-        m = _persisted_commit_ts(spark, path, v)
-        if m is None:
-            m = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/_manifest/v={v}/_SUCCESS"
-                )
-            ).getModificationTime()
-        t = max(int(m), prev + 1)
-        out[v] = t
-        prev = t
-    return out
+    across vacuums). O(versions) driver small-file reads; no data file
+    is opened."""
+    return _snapshot(spark, path).commit_ts(versions)
 
 
 def version_as_of(spark: SparkSession, path: str, ts_ms: int) -> int:
@@ -4069,10 +3846,15 @@ def version_as_of(spark: SparkSession, path: str, ts_ms: int) -> int:
     LATEST committed version whose commit timestamp is <= ts_ms
     (Delta's TIMESTAMP AS OF rule). Raises if the table's first commit
     is later than ts_ms."""
-    versions = _list_versions(spark, f"{path}/_manifest")
+    return _version_as_of(_snapshot(spark, path), ts_ms)
+
+
+def _version_as_of(snap, ts_ms: int) -> int:
+    """version_as_of over the snapshot ``snap``."""
+    versions = snap.versions
     if not versions:
-        raise FileNotFoundError(f"version_as_of: no table at {path}")
-    ts = commit_timestamps(spark, path, versions)
+        raise FileNotFoundError(f"version_as_of: no table at {snap.root}")
+    ts = snap.commit_ts(versions)
     ok = [v for v in versions if ts[v] <= int(ts_ms)]
     if not ok:
         raise ValueError(
@@ -4087,20 +3869,17 @@ def read_version_as_of(
 ) -> DataFrame:
     """Timestamp time travel: the table exactly as of wall-clock
     ``ts_ms`` — read_version at version_as_of. Same one-manifest read;
-    the timestamp resolution adds O(versions) driver FS stats."""
-    return read_version(spark, path, version_as_of(spark, path, ts_ms))
+    the timestamp resolution adds O(versions) sidecar reads."""
+    snap = _snapshot(spark, path)
+    return _read_at(spark, path, snap, _version_as_of(snap, ts_ms))
 
 
 def _commit_changed_buckets(
     spark: SparkSession, path: str, version: int
 ) -> list[int] | None:
     """The ``changed_buckets`` list stamped into ``v=<n>.op`` at commit
-    time, or None for histories predating the stamp (the caller then
-    falls back to probing the DV). The Spark-session twin of
-    pysource._cdf_changed_buckets' tier 1."""
-    side = _commit_op_payload(spark, path, version)
-    cb = None if side is None else side.get("changed_buckets")
-    return None if cb is None else sorted(int(b) for b in cb)
+    time, or None for histories predating the stamp."""
+    return _snapshot(spark, path).changed_buckets(version)
 
 
 def table_changes(
@@ -4182,11 +3961,12 @@ def table_changes(
             "table_changes: ending_version and ending_timestamp are "
             "mutually exclusive"
         )
-    versions = _list_versions(spark, f"{path}/_manifest")
+    snap = _snapshot(spark, path)
+    versions = snap.versions
     if not versions:
         raise FileNotFoundError(f"table_changes: no table at {path}")
     ts = (
-        commit_timestamps(spark, path, versions)
+        snap.commit_ts(versions)
         if starting_timestamp is not None or ending_timestamp is not None
         else None
     )
@@ -4214,7 +3994,7 @@ def table_changes(
     for v in versions:
         if not (start < v <= end):
             continue
-        stamped = _commit_changed_buckets(spark, path, v)
+        stamped = snap.changed_buckets(v)
         if stamped is not None and not stamped:
             continue  # stamped structural/COW commit: silent for free
         dv = _read_dv(spark, path, v)
@@ -4238,7 +4018,7 @@ def table_changes(
             if fresh is not None
             else [
                 c
-                for c in read_version(spark, path, v, physical=True).columns
+                for c in _read_at(spark, path, snap, v, physical=True).columns
                 if c not in ("_kr", "_gen")
             ]
         )
@@ -4318,7 +4098,7 @@ def table_changes(
         schema = (
             fresh
             if fresh is not None
-            else read_version(spark, path, v, physical=True)
+            else _read_at(spark, path, snap, v, physical=True)
         ).schema
         dead = changed.select(key)
         if fresh is not None:
@@ -4345,7 +4125,7 @@ def table_changes(
     # schema as of the range END (Delta CDF's rule: one schema per
     # read) — physical change rows from before a rename surface under
     # the end-of-range names, retired (dropped) columns vanish
-    sch_end = _schema_as_of(spark, path, min(end, versions[-1]))
+    sch_end = snap.schema_as_of(min(end, versions[-1]))
     tag_col = "_change_type" if change_format == "delta" else "_op"
     if out is None:
         # empty range (or all-silent): zero rows, stable schema from

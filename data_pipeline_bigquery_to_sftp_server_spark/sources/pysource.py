@@ -32,6 +32,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from data_pipeline_bigquery_to_sftp_server_spark import tablelog
+
 
 class PagePartition(InputPartition):  # pragma: no cover - trivial holder
     def __init__(self, page: int, start: int, end: int) -> None:
@@ -137,6 +139,9 @@ class RestPagesReader(DataSourceReader):
 #   2. a scheme-qualified path ("s3://bucket/t") -> FileSystem.from_uri
 #      (the path is normalized to the store's own form);
 #   3. plain paths -> LocalFileSystem.
+# The commit log (committed versions, sidecars, commit timestamps, the
+# column mapping) is read through tablelog.Snapshot over the same
+# filesystem: the rules the Spark operators read it by.
 # --------------------------------------------------------------------------
 
 
@@ -188,12 +193,6 @@ def _fs_isdir(fs, p: str) -> bool:
     return fs.get_file_info([p])[0].type == pafs.FileType.Directory
 
 
-def _fs_isfile(fs, p: str) -> bool:
-    import pyarrow.fs as pafs
-
-    return fs.get_file_info([p])[0].type == pafs.FileType.File
-
-
 def _fs_du(fs, d: str) -> int:
     """Total bytes of every file under ``d`` (0 when absent) — one
     recursive listing, sizes off the FileInfo (no file is opened)."""
@@ -222,23 +221,15 @@ _PA_TO_DDL = {
 }
 
 
-def _cdf_committed_versions(path: str, fs=None) -> list[int]:
-    """Driver-side mirror of merge._list_versions (the source runs
-    without a SparkSession): committed = v=<n> manifest DIRECTORY with
-    the _SUCCESS marker; .begin/.meta intent files skipped. All access
-    through the pyarrow filesystem (r16 — object-store safe)."""
-    import pyarrow.fs as pafs
+def _cdf_log(path: str, fs=None) -> tablelog.Snapshot:
+    """The table's commit log (one listing of ``_manifest/``) through
+    the source's pyarrow filesystem."""
+    return tablelog.Snapshot(tablelog.ArrowFiles(fs or _cdf_resolve_fs(path)[0]), path)
 
-    fs = fs or _cdf_resolve_fs(path)[0]
-    out = []
-    for info in _fs_ls(fs, f"{path}/_manifest"):
-        name = info.base_name
-        if not (name.startswith("v=") and info.type == pafs.FileType.Directory):
-            continue
-        if not _fs_isfile(fs, f"{info.path}/_SUCCESS"):
-            continue
-        out.append(int(name[2:]))
-    return sorted(out)
+
+def _cdf_committed_versions(path: str, fs=None) -> list[int]:
+    """The table's committed versions, by the log's rule."""
+    return _cdf_log(path, fs).versions
 
 
 def _cdf_read_dir(d: str, fs=None):
@@ -353,46 +344,6 @@ def _cdf_delta_rows(
         # neither: phantom delete — no image, nothing to emit
 
 
-def _cdf_schema_mapping(path: str, fs=None) -> dict | None:
-    """Driver-side pyarrow mirror of merge._schema_as_of at the TIP
-    (r16 column mapping): the latest committed ``v=<n>.schema``
-    sidecar, validated against its version's op tag exactly like the
-    Spark-side reader (orphan sidecars from crashed DDLs whose slot a
-    different committer won are rejected; sidecars of VACUUMED
-    versions are accepted — the ``.schema`` record deliberately
-    survives vacuum as the only mapping evidence for the retained
-    suffix). None when the table never ran a schema DDL — one FS
-    listing, the common-case cost."""
-    import json
-
-    fs = fs or _cdf_resolve_fs(path)[0]
-    root = f"{path}/_manifest"
-    cand = []
-    for info in _fs_ls(fs, root):
-        n = info.base_name
-        if n.startswith("v=") and n.endswith(".schema"):
-            try:
-                cand.append(int(n[2:-7]))
-            except ValueError:
-                continue
-    if not cand:
-        return None
-    committed = _cdf_committed_versions(path, fs)
-    for k in sorted(cand, reverse=True):
-        if committed and k >= committed[0]:
-            if k not in committed:
-                continue
-            side = _cdf_commit_sidecar(path, k, fs) or {}
-            if not (side.get("parameters") or {}).get("schema_change"):
-                continue
-        try:
-            with fs.open_input_stream(f"{root}/v={k}.schema") as f:
-                return json.loads(f.readall().decode("utf-8"))
-        except ValueError:
-            continue
-    return None
-
-
 def _cdf_table_schema(path: str, fs=None) -> list[tuple[str, str]]:
     """(name, ddl_type) of the table's data columns, sniffed from one
     live data footer (newest generation first, so evolved columns are
@@ -500,18 +451,10 @@ class VersionedCdfDataSource(DataSource):
                     if e["logical"] == str(k):
                         return e["physical"]
             return k
-        import json
-
         fs, path = self._fs_path()
-        p = f"{path}/_manifest/_table.json"
-        if _fs_isfile(fs, p):
-            try:
-                with fs.open_input_stream(p) as f:
-                    k = json.loads(f.readall().decode("utf-8")).get("key")
-            except ValueError:
-                k = None
-            if k:
-                return str(k)
+        k = tablelog.table_meta(tablelog.ArrowFiles(fs), path).get("key")
+        if k:
+            return str(k)
         raise ValueError(
             "versioned_cdf: no 'key' option and the table has no "
             "_manifest/_table.json metadata — pass .option('key', <col>)"
@@ -525,11 +468,10 @@ class VersionedCdfDataSource(DataSource):
         names are taken as the physical file names, the legacy
         contract). Resolved once per source instance."""
         if "_mapping_cache" not in self.__dict__:
-            if self.options.get("table_schema"):
-                self._mapping_cache = None
-            else:
+            self._mapping_cache = None
+            if not self.options.get("table_schema"):
                 fs, path = self._fs_path()
-                self._mapping_cache = _cdf_schema_mapping(path, fs)
+                self._mapping_cache = _cdf_log(path, fs).schema_as_of()
         return self._mapping_cache
 
     def _data_cols(self) -> list[tuple[str, str]]:
@@ -644,7 +586,7 @@ class VersionedCdfDataSource(DataSource):
         return k
 
 
-def _cdf_commit_bytes(path: str, version: int, fs=None) -> int:
+def _cdf_commit_bytes(path: str, version: int, fs=None, log=None) -> int:
     """The physical bytes commit ``version`` added: its DV file plus
     the changed buckets' ``_gen=<v>`` data directories — pure FileInfo
     metadata (sizes from listings, no file opened; the bucket list
@@ -652,7 +594,7 @@ def _cdf_commit_bytes(path: str, version: int, fs=None) -> int:
     with an empty change set cost 0 by construction."""
     fs = fs or _cdf_resolve_fs(path)[0]
     total = _fs_du(fs, f"{path}/_dv/v={version}")
-    for b in _cdf_changed_buckets(path, version, fs):
+    for b in _cdf_changed_buckets(path, version, fs, log):
         total += _fs_du(fs, f"{path}/data/_kr={b}/_gen={version}")
     return total
 
@@ -672,7 +614,8 @@ def _cdf_clamp_end(
     admit until the next would push the batch past the budget, with at
     least ONE always admitted so an over-budget backfill commit lands
     isolated in its own batch instead of stalling the stream."""
-    versions = _cdf_committed_versions(path, fs)
+    log = _cdf_log(path, fs)
+    versions = log.versions
     if not versions:
         return after
     newer = [v for v in versions if v > after]
@@ -684,7 +627,7 @@ def _cdf_clamp_end(
     if max_bytes is not None:
         acc = admitted = 0
         for v in newer[:n]:
-            b = _cdf_commit_bytes(path, v, fs)
+            b = _cdf_commit_bytes(path, v, fs, log)
             if admitted >= 1 and acc + b > int(max_bytes):
                 break
             acc += b
@@ -748,50 +691,6 @@ class CdfPartition(InputPartition):
         self.change_format = change_format
 
 
-def _cdf_commit_sidecar(path: str, version: int, fs=None) -> dict | None:
-    """The ``v=<n>.op`` commit sidecar as a dict, or None when the
-    version predates the op tag (pre-r12 histories)."""
-    import json
-
-    fs = fs or _cdf_resolve_fs(path)[0]
-    p = f"{path}/_manifest/v={version}.op"
-    if not _fs_isfile(fs, p):
-        return None
-    try:
-        with fs.open_input_stream(p) as f:
-            return json.loads(f.readall().decode("utf-8"))
-    except ValueError:
-        return None
-
-
-def _cdf_commit_timestamps(
-    path: str, versions: list[int], fs=None
-) -> dict[int, int]:
-    """Driver-side mirror of merge.commit_timestamps (this source runs
-    without a SparkSession): the stamped ``commit_ts`` from each
-    ``v=<n>.op`` sidecar when present, the manifest ``_SUCCESS`` mtime
-    for histories predating the stamp, then the same strictly-monotonic
-    adjustment (ts_v = max(raw_v, prev+1)) so "first version at or
-    after T" is total even for same-tick commits."""
-    fs = fs or _cdf_resolve_fs(path)[0]
-    out: dict[int, int] = {}
-    prev = -1
-    for v in versions:
-        side = _cdf_commit_sidecar(path, v, fs)
-        raw = None if side is None else side.get("commit_ts")
-        if raw is None:
-            info = fs.get_file_info([f"{path}/_manifest/v={v}/_SUCCESS"])[0]
-            raw = (
-                info.mtime_ns // 1_000_000
-                if info.mtime_ns is not None
-                else int(info.mtime.timestamp() * 1000)
-            )
-        ts = max(int(raw), prev + 1)
-        out[v] = ts
-        prev = ts
-    return out
-
-
 def _cdf_resolve_start(
     path: str, start_version: int | None, start_ts: int | None, fs=None
 ) -> dict:
@@ -803,11 +702,11 @@ def _cdf_resolve_start(
     first-such-version - 1, clamped to the bootstrap rule; T beyond
     the newest commit raises (matching Delta) rather than silently
     streaming nothing."""
-    fs = fs or _cdf_resolve_fs(path)[0]
-    versions = _cdf_committed_versions(path, fs)
+    log = _cdf_log(path, fs)
+    versions = log.versions
     earliest = versions[0] if versions else 0
     if start_ts is not None:
-        ts = _cdf_commit_timestamps(path, versions, fs)
+        ts = log.commit_ts(versions)
         hits = [v for v in versions if ts[v] >= start_ts]
         if not hits:
             raise ValueError(
@@ -821,7 +720,7 @@ def _cdf_resolve_start(
     return {"version": earliest}
 
 
-def _cdf_changed_buckets(path: str, version: int, fs=None) -> list[int]:
+def _cdf_changed_buckets(path: str, version: int, fs=None, log=None) -> list[int]:
     """Buckets with at least one changed key at ``version`` — the CDF
     partition PLANNING step, three tiers so the cost is metadata-sized
     whenever the table's writer is current (r15 — closes the r14
@@ -829,7 +728,7 @@ def _cdf_changed_buckets(path: str, version: int, fs=None) -> list[int]:
 
     1. commit-time stamp: every committer persists the change set's
        distinct bucket list into the ``v=<n>.op`` sidecar
-       (merge._write_commit_op ``changed_buckets``). Planning is one
+       (``changed_buckets``, tablelog.Snapshot). Planning is one
        tiny JSON read — O(n_buckets) regardless of how many keys a
        backfill MERGE touched, and structural/COW commits stamp ``[]``
        so they plan for free too.
@@ -845,9 +744,9 @@ def _cdf_changed_buckets(path: str, version: int, fs=None) -> list[int]:
     import pyarrow.parquet as pq
 
     fs = fs or _cdf_resolve_fs(path)[0]
-    side = _cdf_commit_sidecar(path, version, fs)
-    if side is not None and "changed_buckets" in side:
-        return sorted(int(b) for b in side["changed_buckets"])
+    stamped = (log or _cdf_log(path, fs)).changed_buckets(version)
+    if stamped is not None:
+        return stamped
     d = f"{path}/_dv/v={version}"
     entries = _fs_ls(fs, d)
     bucket_dirs = sorted(
@@ -939,7 +838,7 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:
         if self.max_versions is None and self.max_bytes is None:
-            versions = _cdf_committed_versions(self.path, self.fs)
+            versions = _cdf_log(self.path, self.fs).versions
             return {"version": versions[-1] if versions else 0}
         if self._planned is None:
             self._planned = self.initialOffset()["version"]
@@ -956,7 +855,8 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
         if self._planned is None or self._planned < planned:
             self._planned = planned
         parts = []
-        versions = _cdf_committed_versions(self.path, self.fs)
+        log = _cdf_log(self.path, self.fs)
+        versions = log.versions
         for v in versions:
             if not (start["version"] < v <= end["version"]):
                 continue
@@ -964,7 +864,7 @@ class VersionedCdfPartitionedReader(DataSourceStreamReader):
             # the delta vocabulary classifies against (v is never the
             # first version: the bootstrap/fork commit is silent)
             pv = versions[versions.index(v) - 1]
-            for b in _cdf_changed_buckets(self.path, v, self.fs):
+            for b in _cdf_changed_buckets(self.path, v, self.fs, log):
                 parts.append(
                     CdfPartition(
                         self.path, self.key, self.cols, v, b, self.fs,

@@ -1764,7 +1764,7 @@ def test_hypothesis_random_committer_sequences(spark, tmp_path):
             )
 
             for v in retained:
-                side = _ps._cdf_commit_sidecar(path, v)
+                side = _ps._cdf_log(path).op(v)
                 if side is None or "changed_buckets" not in side:
                     continue
                 dv = merge._read_dv(spark, path, v)
@@ -2943,7 +2943,7 @@ def test_commit_ts_stamp_exceeds_mixed_unstamped_chain(spark, tmp_path):
     merge.upsert_versioned_dv(
         spark, path, spark.createDataFrame([(2, 2)], "k long, v long"), "k"
     )  # v2: must stamp ABOVE the reader-visible chain, not v1's stamp
-    stamped_v2 = merge._persisted_commit_ts(spark, path, 2)
+    stamped_v2 = merge._snapshot(spark, path).op(2).get("commit_ts")
     assert stamped_v2 is not None and stamped_v2 > chain_before[1]
     probe = merge.commit_timestamps(spark, path)
     assert probe[0] < probe[1] < probe[2] == stamped_v2
@@ -3135,8 +3135,8 @@ def test_cdf_starting_timestamp_and_versioned_clone_sql(spark, tmp_path):
             "k",
         )
     ts = merge.commit_timestamps(spark, path)
-    # the driver-side clock mirror agrees with the Spark-side one
-    assert pysource._cdf_commit_timestamps(path, [0, 1, 2, 3]) == ts
+    # the CDF source's pyarrow view of the clock agrees with Spark's
+    assert pysource._cdf_log(path).commit_ts([0, 1, 2, 3]) == ts
     register_versioned_cdf(spark)
 
     def drain(start_ts) -> list:

@@ -4,7 +4,9 @@ string, long and date keys, at every version, after the key is renamed,
 off the local filesystem and for a value Spark compares across types;
 it schedules one Spark job when it hits and none when no directory can
 hold the key. A probe on another Bloom column, off the local
-filesystem or across types keeps the deletion-vector join. The
+filesystem or across types keeps the deletion-vector join, and a
+probe Spark answers by casting the column prunes no directory. A
+pruned read of a range no directory meets schedules no job. The
 one-statement Bloom probe hashes as the Column-built one did."""
 
 import datetime
@@ -234,6 +236,42 @@ def test_absent_probe_lists_no_directory(spark, tmp_path):
     assert _jobs(spark, tracer, lambda: merge.read_version_point(
         spark, path, "_id", ABSENT)) == 0
     assert probe.schema == merge.read_version(spark, path).schema
+
+
+def test_bloom_reads_every_directory_when_spark_casts_the_column(spark, tmp_path):
+    """Spark compares a string column with the int 5 by casting the
+    column, so "05" matches as well as "5"; a Bloom bitmap holds only
+    the spelling the value casts to, so such a probe prunes nothing. A
+    string probe of the same column keeps pruning."""
+    path = str(tmp_path / "t")
+    keys = ["05", "1", "2", "3", "5", "6", "7", "8"]
+    merge.versioned_layout_write(
+        spark.createDataFrame([(k, int(k)) for k in keys], "k string, v long"),
+        "k", path, n_buckets=4, point_cols=("k",), bloom_bits=1 << 12,
+    )
+    got = _same_answer(spark, path, "k", 5)
+    assert _rows(got.select("k", "v")) == [("05", 5), ("5", 5)]
+    assert got.dirs_read == got.dirs_total == 4
+    assert _same_answer(spark, path, "k", "5").dirs_read == 1
+
+
+def test_pruned_read_of_a_disjoint_range_lists_no_directory(spark, tmp_path):
+    """A range no directory's min/max meets builds its empty frame from
+    the footers: no job past Spark's 32-path listing threshold, and the
+    schema of a range that does meet some directory."""
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(120)], "k long, v long"),
+        "k", path, n_buckets=40, stats_cols=("v",),
+    )
+    empty = merge.read_version_pruned(spark, path, "v", 5000, 6000)
+    assert empty.dirs_read == 0 and empty.dirs_total > 32
+    tracer = Tracer(spark, enabled=True)
+    assert _jobs(spark, tracer, lambda: merge.read_version_pruned(
+        spark, path, "v", 5000, 6000)) == 0
+    hit = merge.read_version_pruned(spark, path, "v", 100, 200)
+    assert hit.dirs_read > 0 and empty.schema == hit.schema
+    assert empty.schema == merge.read_version(spark, path, physical=True).schema
 
 
 def _column_positions(spark, value, dtype, num_bits):
