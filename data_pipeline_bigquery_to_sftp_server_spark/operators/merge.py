@@ -1737,15 +1737,6 @@ def _dv_dir(spark: SparkSession, path: str, version: int) -> str | None:
 _RESERVED_COLS = ("_kr", "_gen", "live_gen", "_op", "_version", "_change_type")
 
 
-def _schema_as_of(
-    spark: SparkSession, path: str, version: int | None = None
-) -> dict | None:
-    """The column-mapping schema in force at ``version`` (default: the
-    latest), or None when the table has never run a schema DDL — the
-    overwhelmingly common case (tablelog.Snapshot.schema_as_of)."""
-    return _snapshot(spark, path).schema_as_of(version)
-
-
 def _project_logical(
     df: DataFrame,
     sch: dict | None,
@@ -2030,7 +2021,7 @@ def _auto_evolve_schema(
     the schema doesn't know, typed from the batch, so the committer's
     strict validation then passes. A table with no mapping needs
     nothing — its schema already evolves by write (unionByName)."""
-    sch = _schema_as_of(spark, path)
+    sch = _snapshot(spark, path).schema_as_of()
     if sch is None:
         return
     logicals = {e["logical"] for e in sch["columns"]}
@@ -2573,9 +2564,9 @@ def _wait_for_commit(
     spark: SparkSession, path: str, version: int, timeout_s: float | None = None
 ) -> tablelog.Snapshot | None:
     """Poll until ``version`` is a COMMITTED manifest version (its
-    _SUCCESS exists) — the admission path's wait for a racing winner —
-    and return the snapshot that saw it. None on timeout (a crashed
-    holder never commits)."""
+    _SUCCESS and sidecars listed) — the admission path's wait for a
+    racing winner — and return the snapshot that saw it. None on
+    timeout (a crashed holder never commits)."""
     import time as _time
 
     deadline = _time.monotonic() + (
@@ -3872,14 +3863,6 @@ def read_version_as_of(
     the timestamp resolution adds O(versions) sidecar reads."""
     snap = _snapshot(spark, path)
     return _read_at(spark, path, snap, _version_as_of(snap, ts_ms))
-
-
-def _commit_changed_buckets(
-    spark: SparkSession, path: str, version: int
-) -> list[int] | None:
-    """The ``changed_buckets`` list stamped into ``v=<n>.op`` at commit
-    time, or None for histories predating the stamp."""
-    return _snapshot(spark, path).changed_buckets(version)
 
 
 def table_changes(

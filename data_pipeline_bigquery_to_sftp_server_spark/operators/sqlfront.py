@@ -286,10 +286,10 @@ def _key_for(spark: SparkSession, path: str, key: str | None, stmt: str) -> str:
     # and manifests never change names); DML statements run against
     # LOGICAL frames, so a renamed key resolves to its current name
     from data_pipeline_bigquery_to_sftp_server_spark.operators.merge import (
-        _schema_as_of,
+        _snapshot,
     )
 
-    sch = _schema_as_of(spark, path)
+    sch = _snapshot(spark, path).schema_as_of()
     if sch is not None:
         for e in sch["columns"]:
             if e["physical"] == str(k):
@@ -367,10 +367,10 @@ def _generated_cols(spark: SparkSession, path: str) -> set:
     with no mapping) — SQL DML must leave these to the committer's
     recompute instead of materializing stale or NULL values."""
     from data_pipeline_bigquery_to_sftp_server_spark.operators.merge import (
-        _schema_as_of,
+        _snapshot,
     )
 
-    sch = _schema_as_of(spark, path)
+    sch = _snapshot(spark, path).schema_as_of()
     if sch is None:
         return set()
     return {

@@ -15219,11 +15219,9 @@ def q_concurrent_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise AssertionError(
             f"admission did not happen: {res['out'].admitted_over}"
         )
+    snap = merge._snapshot(spark, path)
     stamps = spark.createDataFrame(
-        [
-            (int(v), ",".join(map(str, merge._commit_changed_buckets(spark, path, v))))
-            for v in (1, 2)
-        ],
+        [(v, ",".join(map(str, snap.changed_buckets(v)))) for v in (1, 2)],
         "ver int, changed_buckets string",
     ).select(
         F.lit("2_ledger").alias("section"),

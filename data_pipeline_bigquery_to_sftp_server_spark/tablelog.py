@@ -17,7 +17,13 @@ counts as committed. Under ``<table>/_manifest/``:
 A ``Snapshot`` is built from ONE listing of ``_manifest/`` plus a stat
 of each listed version's ``_SUCCESS`` marker (one call on pyarrow), and
 reads each sidecar at most once, when asked. Every public table call
-takes one.
+takes one. A version counts as committed only when its ``_SUCCESS``
+exists AND the same listing held its ``.op``: every committer writes
+``.schema`` and ``.meta`` before ``.op`` and ``.op`` before
+``_SUCCESS``, so a version whose marker landed between the listing and
+the stat (its sidecars unlisted) stays invisible to that snapshot.
+Versions older than the first listed ``.op`` are the exception: the
+unstamped prefix of histories written before commits carried one.
 
 Both the Spark operators (operators/merge.py) and the change-data-feed
 source's Python workers (sources/pysource.py) read the log through it,
@@ -75,9 +81,9 @@ def table_meta(files, root: str) -> dict:
 
 
 class ArrowFiles:
-    """The small-file layer over a pyarrow FileSystem. Writes go to
-    local disk, the only place this backend is given a table to commit
-    to; a create-exclusive write is ``O_CREAT|O_EXCL``."""
+    """The small-file layer over a pyarrow FileSystem. A
+    create-exclusive write is ``O_CREAT|O_EXCL``, so only a
+    LocalFileSystem takes one."""
 
     def __init__(self, fs=None):
         self.fs = fs if fs is not None else pafs.LocalFileSystem()
@@ -112,9 +118,17 @@ class ArrowFiles:
     def write(self, p: str, text: str, overwrite: bool = True) -> None:
         """Write ``text`` to ``p``; ``overwrite=False`` raises
         FileExistsError when the file exists."""
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        flags = os.O_WRONLY | os.O_CREAT | (os.O_TRUNC if overwrite else os.O_EXCL)
-        with os.fdopen(os.open(p, flags, 0o666), "wb") as f:
+        self.fs.create_dir(p.rsplit("/", 1)[0], recursive=True)
+        if overwrite:
+            with self.fs.open_output_stream(p) as f:
+                f.write(text.encode("utf-8"))
+            return
+        if not isinstance(self.fs, pafs.LocalFileSystem):
+            raise NotImplementedError(
+                f"create-exclusive write on {self.fs.type_name}: {p}"
+            )
+        fd = os.open(p, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o666)
+        with os.fdopen(fd, "wb") as f:
             f.write(text.encode("utf-8"))
 
 
@@ -182,10 +196,19 @@ class Snapshot:
             if v is not None
         )
         marks = files.mtimes([f"{manifest_dir(root, v)}/{SUCCESS}" for v in dirs])
-        # a version's _SUCCESS mtime: its commit time before the .op stamp
-        self._committed = {v: m for v, m in zip(dirs, marks) if m is not None}
-        self.versions = sorted(self._committed)
         self.sidecars = frozenset(n for n, is_dir in entries.items() if not is_dir)
+        # a version's _SUCCESS mtime: its commit time before the .op stamp
+        self._published = {v: m for v, m in zip(dirs, marks) if m is not None}
+        first_op = min(
+            (v for n in self.sidecars if (v := _version_of(n, ".op")) is not None),
+            default=None,
+        )
+        self._committed = {
+            v: m
+            for v, m in self._published.items()
+            if first_op is None or v < first_op or f"v={v}.op" in self.sidecars
+        }
+        self.versions = sorted(self._committed)
         self._texts: dict[str, str | None] = {}
 
     def at(self, version: int | None, what: str) -> int:
@@ -239,11 +262,12 @@ class Snapshot:
         }
 
     def inflight(self) -> list[int]:
-        """Versions holding a begin marker that never committed."""
+        """Versions holding a begin marker whose ``_SUCCESS`` was absent
+        (one that landed after the listing still counts as landed)."""
         return sorted(
             v
             for n in self.sidecars
-            if (v := _version_of(n, ".begin")) is not None and v not in self._committed
+            if (v := _version_of(n, ".begin")) is not None and v not in self._published
         )
 
     def schema_as_of(self, version: int | None = None) -> dict | None:

@@ -3621,8 +3621,8 @@ def test_disjoint_bucket_concurrent_admission(spark, tmp_path):
     ops = merge.commit_operations(spark, path)
     assert ops[1] == "MERGE" and ops[2] == "MERGE"
     # the ledger's change-set stamps hold for BOTH commits
-    assert merge._commit_changed_buckets(spark, path, 1) == [0]
-    assert merge._commit_changed_buckets(spark, path, 2) == [3]
+    assert merge._snapshot(spark, path).changed_buckets(1) == [0]
+    assert merge._snapshot(spark, path).changed_buckets(2) == [3]
     # ---- overlapping writers still rebase -------------------------
     merge._begin_commit(spark, path, 3, "writer-C")
 
@@ -4345,7 +4345,7 @@ def test_arms_disjoint_bucket_admission(spark, tmp_path):
     want[38] = 2           # B's update arm
     want[44] = 7           # B's insert arm
     assert live == want
-    assert merge._commit_changed_buckets(spark, path, 2) == [3]
+    assert merge._snapshot(spark, path).changed_buckets(2) == [3]
     # overlap: the winner touches B2's bucket -> rebase error
     merge._begin_commit(spark, path, 3, "writer-C")
 

@@ -2,11 +2,13 @@
 ``_manifest/`` at most once, a commit that is not admitted past a rival
 lists it at most twice, on both file backends; and every reader of a
 sidecar sees what the file holds, whatever checksum Hadoop kept of an
-earlier content."""
+earlier content; a version whose sidecars a listing missed is not yet
+committed for the snapshot built from it."""
 
 import json
 import os
 
+import pyarrow.fs as pafs
 import pytest
 
 from data_pipeline_bigquery_to_sftp_server_spark import tablelog
@@ -134,3 +136,71 @@ def test_hand_edited_sidecar_reads_alike_everywhere(spark, tmp_path):
     q.processAllAvailable()
     q.stop()
     assert sorted(r._version for r in spark.read.parquet(out_dir).collect()) == [2]
+
+
+class _ListedEarly:
+    """A file layer whose next ``n`` listings of ``_manifest/`` were
+    taken before version ``v``'s ``.schema``/``.meta``/``.op`` landed,
+    while the stat of its ``_SUCCESS`` after the listing finds the
+    marker: the window a copied-manifest commit opens, whose ``v=<n>/``
+    directory exists before its sidecars."""
+
+    def __init__(self, inner, v, n):
+        self.inner, self.n = inner, n
+        self.hidden = {f"v={v}.{k}" for k in ("schema", "meta", "op")}
+
+    def list(self, d):
+        out = self.inner.list(d)
+        if self.n and d.rstrip("/").endswith("/_manifest"):
+            self.n -= 1
+            out = {k: x for k, x in out.items() if k not in self.hidden}
+        return out
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+
+def test_version_with_unlisted_sidecars_is_not_committed(spark, tmp_path, monkeypatch):
+    """A RENAME whose ``_SUCCESS`` landed between the listing and the
+    stat: the snapshot keeps the version before it, so the latest read
+    and the history agree with the column names that version had."""
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(10)], KV), "k", path, n_buckets=2
+    )
+    merge.upsert_versioned_dv(spark, path, spark.createDataFrame([(3, 31)], KV), "k")
+    before = sorted(merge.read_version(spark, path).collect())
+    merge.rename_column(spark, path, "v", "val")
+    monkeypatch.setattr(merge, "_LOCAL_FILES", _ListedEarly(merge._LOCAL_FILES, 2, 10**6))
+
+    assert merge._snapshot(spark, path).versions == [0, 1]
+    got = merge.read_version(spark, path)
+    assert "v" in got.columns and "val" not in got.columns
+    assert sorted(got.collect()) == before
+    assert max(r.version for r in merge.table_history(spark, path).collect()) == 1
+    assert merge.rollback_inflight(spark, path) == []  # v=2 did land
+
+
+def test_admission_waits_past_unlisted_sidecars(spark, tmp_path, monkeypatch):
+    """A racing DELETE seen first through a listing that missed its
+    ``.op``: admission polls again and admits a disjoint loser instead
+    of refusing it on a missing operation."""
+    path = str(tmp_path / "t")
+    merge.versioned_layout_write(
+        spark.createDataFrame([(i, i * 10) for i in range(20)], KV), "k", path, n_buckets=4
+    )
+    merge.delete_versioned(spark, path, spark.createDataFrame([(7,)], "k long"), "k")
+    cb = merge._snapshot(spark, path).changed_buckets(1)
+    disjoint = [b for b in range(4) if b not in cb]
+    monkeypatch.setattr(merge, "_LOCAL_FILES", _ListedEarly(merge._LOCAL_FILES, 1, 1))
+    assert merge._admissible(spark, path, 1, disjoint)
+    assert not merge._admissible(spark, path, 1, cb)
+
+
+def test_arrow_writes_go_through_the_given_filesystem(tmp_path):
+    files = tablelog.ArrowFiles(pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem()))
+    files.write("log/a.json", "{}")
+    assert (tmp_path / "log" / "a.json").read_text() == "{}"
+    assert files.read("log/a.json") == "{}"
+    with pytest.raises(NotImplementedError):
+        files.write("log/b.json", "{}", overwrite=False)
